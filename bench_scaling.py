@@ -62,6 +62,8 @@ N_DOCS = int(_ARGS[0]) if len(_ARGS) > 0 else 24_000_000
 N_HOSTS = int(_ARGS[1]) if len(_ARGS) > 1 else 24_000
 FRONTIER_EVERY = int(_ARGS[2]) if len(_ARGS) > 2 else 3
 DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+# the crawl engine's resolver_mode for the mega-round (auto|scalar|jvm)
+RESOLVER = os.environ.get("METHANOL_RESOLVER", "auto")
 
 
 # Executor shape: identical at both levels. Default = the committed
@@ -444,7 +446,7 @@ def run_at(cpus: int, docs_path: str, frontier_path: str,
         crawler = SparkCrawler(
             spark, docs, cfg, politeness_budget=0,
             strict_order=False, collect_metrics=collect_metrics,
-            max_rounds=1,
+            max_rounds=1, resolver_mode=RESOLVER,
             # frontier-sized bloom (~9.6 bits/key at 1% FP): the
             # expected seen-key population of the mega-round is the
             # frontier plus its distinct admitted links ~ 3x frontier
@@ -673,14 +675,13 @@ def main():
         else "CPU-CONTENDED (" + "; ".join(steal_viol)
         + ") — a neighbor VM took cycles during the run itself"
     )
-    resolver = os.environ.get("METHANOL_RESOLVER", "auto")
     stamp = time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime())
     out = {
         "mode": "steady-state mega-round",
         "n_docs": N_DOCS,
         "n_hosts": N_HOSTS,
         "bloom": BLOOM,
-        "resolver_mode": resolver,
+        "resolver_mode": RESOLVER,
         "executors": [n_lo, n_hi],
         "executor_cores": EXECUTOR_CORES,
         "levels": results,
@@ -704,7 +705,7 @@ def main():
             f"({N_DOCS} docs / {N_HOSTS} hosts, frontier = every "
             f"{FRONTIER_EVERY}th URL, {n_lo} vs {n_hi} executor JVMs "
             f"x {EXECUTOR_CORES} cores) "
-            f"[{stamp}, resolver={resolver}"
+            f"[{stamp}, resolver={RESOLVER}"
             f"{', bloom' if BLOOM else ''}]\n\n"
             "One BSP crawl round (politeness + robots + fetch join + "
             "parse/canonicalize/classify + dedup + anti-join + routing)"

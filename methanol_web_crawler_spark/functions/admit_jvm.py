@@ -7,9 +7,9 @@ stage downstream: after JVM extraction, the per-link admission stage
 Python. Here the overwhelmingly-common shapes run entirely inside
 whole-stage codegen and only the residue rows reach Python:
 
-- canonicalization mirrors the vectorized resolver's fast shapes
-  (resolve_vec.py:77-111, themselves differentially pinned to the
-  exact byte machine in canonicalize.py / url.c:172-421):
+- canonicalization covers the shapes on which the exact byte
+  machine (canonicalize.add_url, url.c:172-421) is the identity or a
+  pure offset computation:
   * absolute ``proto://host/path`` with printable-ASCII path, clean
     host, no ``//`` ``/.`` ``./`` ``#`` before the query and no
     ``#``/``&amp;`` inside it — canonicalizes to ITSELF (plus a
@@ -22,7 +22,8 @@ whole-stage codegen and only the residue rows reach Python:
     decision, not residue;
 - classification (ftindex.c:141-238) depends only on the finite key
   (protocol, ext, is_dynamic, is_dir, ext_o!=0) for crawlers without
-  UMEX expressions (resolve_vec._classify_key). The 16-bucket
+  UMEX expressions (FtIndex.match_by_url with every UMEX scan
+  empty). The 16-bucket
   extension table with its prefix-compare quirk (ftindex.c:100-133)
   collapses to a FINITE literal map at plan-build time: a URL ext e
   matches entry iff entry.startswith(e) AND _ext_hash(e) ==
@@ -38,8 +39,9 @@ Residue rows — UMEX crawlers (which match on the full URL), ports,
 userinfo, escapes, dot-leading hrefs, ``..`` pops, fragments —
 take the exact Python admitter on a (small) filtered row set.
 
-Equivalence with the scalar admitter is pinned by
-tests/test_resolver_jvm_diff.py (fuzz corpus + hand vectors).
+Equivalence with the scalar resolver (udfs.make_link_resolver_scalar,
+the semantics spec) is pinned by tests/test_resolver_jvm_diff.py (fuzz
+corpus + hand vectors) and tests/test_admit_jvm.py.
 """
 
 from __future__ import annotations
@@ -51,8 +53,7 @@ from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from .canonicalize import MAX_URL_LEN, PROTOCOLS
-from .classify import FtIndex, _ext_hash
-from .resolve_vec import has_umex
+from .classify import FtIndex, _ext_hash, has_umex
 from ..operators.admission import (
     R_DISCARD,
     R_EXTERNAL,
@@ -60,7 +61,7 @@ from ..operators.admission import (
     R_TARGET,
 )
 
-# Java-regex forms of the fast-shape guards (resolve_vec.py:77-87).
+# Java-regex forms of the fast-shape guards (see module docstring).
 # Built as Python strings passed through the Column API (no SQL-string
 # escaping layer); '\\z' is Java's absolute end anchor ('$' would
 # accept a trailing newline).
@@ -103,7 +104,7 @@ def _classify_cols(
 ) -> Column:
     """struct(nh boolean, ft string): the match_by_url decision tree
     for a no-UMEX crawler as one CASE expression
-    (resolve_vec._classify_key branch for branch)."""
+    (FtIndex.match_by_url branch for branch)."""
     emap = _ext_match_map(idx)
     if emap:
         pairs: List[Column] = []
@@ -294,8 +295,9 @@ def split_fast_admit(
         return df.select("*", *[v.alias(k) for k, v in cols.items()])
 
     def ladder(df: DataFrame) -> DataFrame:
-        """Shared canonicalization intermediates (resolve_vec.py fast
-        shapes) as attribute columns, linear work per row."""
+        """Shared canonicalization intermediates (the fast shapes of
+        the module docstring) as attribute columns, linear work per
+        row."""
         df = lad(
             df,
             _abs=abs_form,

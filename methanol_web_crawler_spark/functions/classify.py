@@ -188,3 +188,10 @@ class FtIndex:
             return None
         mime = mime.split(";", 1)[0]
         return self.m_index.get(mime)
+
+
+def has_umex(idx: FtIndex) -> bool:
+    """True when some filetype of the crawler has a UMEX expression:
+    match_by_url then depends on the full URL, not only on the finite
+    (protocol, ext, dynamic, dir) key."""
+    return any(u is not None for u in idx.exprs.values())

@@ -1,7 +1,7 @@
 """JVM-side link extraction — the stage that actually removes Python
 from the parse hot path.
 
-The resolver implementations in udfs.py/resolve_vec.py pull every
+The scalar resolver (udfs.make_link_resolver_scalar) pulls every
 fetched page's SPAN TEXT across Arrow into Python workers each round;
 at a steady-state mega-round that transfer (GBs of text per round) is
 the dominant memory traffic. This module compiles the builtin html
@@ -13,9 +13,9 @@ inside whole-stage codegen and ONLY small candidate link rows
 - html chain (parsers == ("html",)): the per-tag regex fast path from
   parsers.py runs as ONE regexp_extract_all per span; the guard
   ("every '<' starts a fast-shape tag, no special-prefixed tags")
-  is a match-count equality plus one rlike — the same guard the
-  whole-column pandas path uses, evaluated in the JVM. Documents with
-  any guard-failing span fall back to the exact Python resolver.
+  is a match-count equality plus one rlike, evaluated in the JVM.
+  Documents with any guard-failing span fall back to the exact
+  Python resolver.
 - text chain (parsers == ("text",)): lm_extract_text_urls' documented
   semantics are exactly one regex (charset-delimited http://-or-
   ftp:// runs, end-of-buffer matches suppressed via lookahead), so
@@ -30,8 +30,8 @@ window or shuffle. The Python patterns are passed to the JVM verbatim
 (they contain literal control characters, not '\\v'-style escapes
 whose meaning differs between re and java.util.regex).
 
-Equivalence with the scalar resolver is pinned by
-tests/test_resolver_jvm_diff.py.
+Equivalence with the scalar resolver (udfs.make_link_resolver_scalar,
+the semantics spec) is pinned by tests/test_resolver_jvm_diff.py.
 """
 
 from __future__ import annotations

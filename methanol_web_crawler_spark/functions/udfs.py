@@ -79,39 +79,14 @@ def build_indexes(config: CrawlConfig) -> Dict[str, FtIndex]:
     return {c.name: FtIndex(config, c) for c in config.crawlers}
 
 
-def make_link_resolver(config: CrawlConfig, default_crawler: str):
+def make_link_resolver_scalar(config: CrawlConfig, default_crawler: str):
     """mapInPandas stage: fetched pages -> candidate link rows.
 
-    Three interchangeable implementations, selectable with
-    METHANOL_RESOLVER (resolved at plan-build time on the driver),
-    all pinned byte-identical by tests/test_resolver_vec_diff.py:
-
-    - ``scalar`` (default): the per-row machine below with compiled-
-      regex fast paths. MEASURED fastest on this sandbox host — the
-      whole-column pandas twin was 0.88x single-thread and 182 s vs
-      261 s on the 8-core mega-round level (BENCH/BASELINE.md round-3
-      A/B): pandas object-dtype str ops are per-row C loops anyway,
-      and their per-pass column temporaries add memory traffic that
-      saturates this VM's fabric exactly at the multi-executor level.
-    - ``vec``: the whole-column pandas implementation
-      (resolve_vec.py) — kept as the differential reference and for
-      hosts where Arrow batches are large and bandwidth is plentiful.
-    - the scale path that actually removes Python text processing is
-      the JVM extraction stage (plans/crawl.py jvm_extract_links):
-      span text never crosses Arrow at all; only small candidate rows
-      reach the Python admission stage."""
-    import os
-
-    choice = os.environ.get("METHANOL_RESOLVER", "scalar")
-    if choice == "vec":
-        from .resolve_vec import make_link_resolver_vec
-
-        return make_link_resolver_vec(config, default_crawler)
-    return make_link_resolver_scalar(config, default_crawler)
-
-
-def make_link_resolver_scalar(config: CrawlConfig, default_crawler: str):
-    """Row-at-a-time reference resolver (the semantics spec).
+    The row-at-a-time resolver is the semantics spec of link
+    resolution: the golden crawls (tests/test_crawl_golden.py) pin it
+    against the pure-Python oracle, and the JVM extract+admit path
+    (extract_jvm.py, admit_jvm.py) is pinned to it by
+    tests/test_resolver_jvm_diff.py and tests/test_admit_jvm.py.
 
     Input rows carry the parent's parsed-URL fields, filetype, depth,
     crawler, peek flag, (fetch_round, fetch_ord), redirect_count,

@@ -30,7 +30,6 @@ Scale posture (the parts that matter at a 10^10-URL frontier):
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Tuple
@@ -48,7 +47,6 @@ from ..functions.udfs import (
     make_attr_extractor,
     make_head_classifier,
     make_link_admitter,
-    make_link_resolver,
     make_robots_parser,
 )
 from ..operators.admission import admit_seed
@@ -184,21 +182,22 @@ def build_candidates(
     default_crawler: str = "default",
     persists: Optional[list] = None,
 ) -> DataFrame:
-    """The parse/canonicalize/classify stage under a selectable
-    resolver mode (see udfs.make_link_resolver):
+    """The parse/canonicalize/classify stage under a resolver mode.
+    ``resolver`` is udfs.make_link_resolver_scalar's stage, the
+    semantics spec that tests/test_resolver_jvm_diff.py and
+    tests/test_admit_jvm.py pin the JVM path to:
 
     - "jvm": link EXTRACTION runs as JVM expressions
       (functions/extract_jvm.py) — span text never crosses Arrow —
       and ADMISSION of fast-shape links (the overwhelmingly-common
       printable-ASCII absolute/relative hrefs under no-UMEX crawlers)
       runs as JVM expressions too (functions/admit_jvm.py); only
-      residue link rows and guard-failing documents reach Python.
-      METHANOL_JVM_ADMIT=0 keeps the all-Python admitter selectable
-      for A/B runs.
-    - "scalar"/"vec": the whole document goes through the chosen
-      mapInPandas resolver.
+      residue link rows (through ``admitter``) and guard-failing
+      documents (through ``resolver``) reach Python.
+    - "scalar": the whole document goes through the mapInPandas
+      resolver.
 
-    Callers pass a RESOLVED per-round mode ("jvm"/"scalar"/"vec");
+    Callers pass a RESOLVED per-round mode ("jvm"/"scalar");
     the engine default "auto" (SparkCrawler._loop) resolves to jvm
     for waves at or past the measured ~1.5M-row crossover and scalar
     below it, so clusters run the codegen path and tiny test crawls
@@ -206,27 +205,23 @@ def build_candidates(
     from ..functions.udfs import CANDIDATE_SCHEMA
 
     if mode == "jvm":
+        from ..functions.admit_jvm import split_fast_admit
         from ..functions.extract_jvm import split_jvm_extractable
 
         link_rows, py_docs = split_jvm_extractable(parse_input, config)
-        if os.environ.get("METHANOL_JVM_ADMIT", "1") != "0":
-            from ..functions.admit_jvm import split_fast_admit
-
-            # cache the tagged link rows when the caller manages the
-            # lifecycle (the round loop): both filter branches then
-            # read one materialization instead of re-running the span
-            # extraction regexes
-            fast_out, residue, cached = split_fast_admit(
-                link_rows, config, default_crawler,
-                cache=persists is not None,
-            )
-            if cached is not None:
-                persists.append(cached)
-            out = fast_out.unionByName(
-                residue.mapInPandas(admitter, CANDIDATE_SCHEMA)
-            )
-        else:
-            out = link_rows.mapInPandas(admitter, CANDIDATE_SCHEMA)
+        # cache the tagged link rows when the caller manages the
+        # lifecycle (the round loop): both filter branches then read
+        # one materialization instead of re-running the span
+        # extraction regexes
+        fast_out, residue, cached = split_fast_admit(
+            link_rows, config, default_crawler,
+            cache=persists is not None,
+        )
+        if cached is not None:
+            persists.append(cached)
+        out = fast_out.unionByName(
+            residue.mapInPandas(admitter, CANDIDATE_SCHEMA)
+        )
         return out.unionByName(
             py_docs.mapInPandas(resolver, CANDIDATE_SCHEMA)
         )
@@ -258,6 +253,22 @@ class CrawlStats:
 
 
 class SparkCrawler:
+    # scale-adaptive physical-plan gates. localCheckpointed state
+    # frames (hosts/jail/seen) carry NO size statistics, so the
+    # planner sort-merge-joins even a 200-row hosts table — both
+    # sides exchanged+sorted every round. The driver tracks the row
+    # counts it already knows (counts over materialized checkpoints
+    # are metadata-cheap) and hints broadcast while the state is below
+    # `broadcast_state_max` rows; past it — the 100 TB regime — the
+    # plan falls back to the exchange/bucketed path automatically.
+    # Checkpoint partition counts derive from tracked row counts
+    # (~checkpoint_rows_per_part rows each, capped at
+    # defaultParallelism) instead of a flat defaultParallelism: a
+    # 3k-row local frontier stops costing 32 near-empty tasks per
+    # round while a 10^9-row frontier keeps full parallelism.
+    broadcast_state_max = 1_000_000
+    checkpoint_rows_per_part = 100_000
+
     def __init__(
         self,
         spark: SparkSession,
@@ -277,8 +288,8 @@ class SparkCrawler:
         serial_transfers: bool = False,
         fetcher=None,
         seen_compact_every: int = 8,
-        resolver_mode: Optional[str] = None,
-        auto_jvm_threshold: Optional[int] = None,
+        resolver_mode: str = "auto",
+        auto_jvm_threshold: int = 1_500_000,
         hooks=None,
     ):
         self.spark = spark
@@ -354,12 +365,10 @@ class SparkCrawler:
         # synthetic docs join; robots/HEAD side-tables still come from
         # the docs table (pass real robots docs there, or none)
         self.fetcher = fetcher
-        # resolver mode: explicit param > METHANOL_RESOLVER env >
-        # auto (the deployment default — scalar measured fastest of
-        # the pandas paths at small waves, "jvm" moves extraction
-        # into codegen and wins at cluster scale; see
-        # build_candidates). "auto" picks per ROUND by wave size: the
-        # measured record
+        # resolver mode: "auto" is the deployment default — "scalar"
+        # measured fastest at small waves, "jvm" moves extraction into
+        # codegen and wins at cluster scale; see build_candidates.
+        # "auto" picks per ROUND by wave size: the measured record
         # (BENCH/BASELINE.md round 4) is jvm 214 s vs scalar 228 s on
         # the 7.36M-row mega-round (26.1M links) but jvm 69 s vs
         # scalar 28 s across 12 sf0.1 rounds — jvm carries ~3.4 s of
@@ -368,14 +377,13 @@ class SparkCrawler:
         # rows. Below the threshold the wave runs the scalar machine,
         # at/above it the JVM extract+admit path — the configuration
         # a 100 TB deployment gets out of the box without tuning.
-        self.resolver_mode = resolver_mode or os.environ.get(
-            "METHANOL_RESOLVER", "auto"
-        )
-        self.auto_jvm_threshold = auto_jvm_threshold if (
-            auto_jvm_threshold is not None
-        ) else int(os.environ.get(
-            "METHANOL_JVM_AUTO_THRESHOLD", "1500000"
-        ))
+        if resolver_mode not in ("auto", "scalar", "jvm"):
+            raise ValueError(
+                f"resolver_mode must be 'auto', 'scalar' or 'jvm', "
+                f"not {resolver_mode!r}"
+            )
+        self.resolver_mode = resolver_mode
+        self.auto_jvm_threshold = auto_jvm_threshold
         self.store = SnapshotStore(state_dir) if state_dir else None
         # session lifecycle hooks (mn-slaved analog, plans/hooks.py):
         # session-complete runs between the 'hook' and 'done' session
@@ -414,19 +422,18 @@ class SparkCrawler:
         # docs-side Exchange+Sort from every round's sort-merge fetch
         # join: only the (small) wave side shuffles into the docs
         # layout. This is the engine-side twin of the bucketed seen
-        # table. METHANOL_DOCS_PREPARTITION=0 restores the raw scan.
-        self.docs = docs.select(
-            "doc_id", "spans", "content_type", "status", "location"
+        # table.
+        n_shuffle = int(
+            spark.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        if os.environ.get("METHANOL_DOCS_PREPARTITION", "1") != "0":
-            n_shuffle = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
+        self.docs = (
+            docs.select(
+                "doc_id", "spans", "content_type", "status", "location"
             )
-            self.docs = (
-                self.docs.repartition(n_shuffle, "doc_id")
-                .sortWithinPartitions("doc_id")
-                .persist()
-            )
+            .repartition(n_shuffle, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .persist()
+        )
         self.docs_ct = docs.select("doc_id", "content_type")
         # robots side-table: the reference keeps per-host robots state
         # on the host struct (worker.c:269-283 fetches robots.txt once
@@ -462,31 +469,11 @@ class SparkCrawler:
                 .localCheckpoint()
             )
             # cheap count on the just-materialized blocks: feeds the
-            # broadcast gate below (bootstrap state setup)
+            # broadcast gate (bootstrap state setup)
             self._n_robots = self.robots_cache.count()
         else:
             self._n_robots = 0
 
-        # scale-adaptive physical-plan gates. localCheckpointed state
-        # frames (hosts/jail/seen) carry NO size statistics, so the
-        # planner sort-merge-joins even a 200-row hosts table — both
-        # sides exchanged+sorted every round. The driver tracks the
-        # row counts it already knows (counts over materialized
-        # checkpoints are metadata-cheap) and hints broadcast while
-        # the state is below `broadcast_state_max` rows; past it —
-        # the 100 TB regime — the plan falls back to the exchange/
-        # bucketed path automatically. Checkpoint partition counts
-        # derive from tracked row counts (~rows_per_part rows each,
-        # capped at defaultParallelism) instead of a flat
-        # defaultParallelism: a 3k-row local frontier stops costing 32
-        # near-empty tasks per round while a 10^9-row frontier keeps
-        # full parallelism.
-        self.broadcast_state_max = int(os.environ.get(
-            "METHANOL_BROADCAST_STATE_MAX", "1000000"
-        ))
-        self.checkpoint_rows_per_part = int(os.environ.get(
-            "METHANOL_CHECKPOINT_ROWS_PER_PART", "100000"
-        ))
         self._n_hosts: Optional[int] = None
         self._n_jail: Optional[int] = None
         self._n_seen_est: Optional[int] = None
@@ -969,17 +956,13 @@ class SparkCrawler:
 
         self._append_session("running", stats, start_round)
         head_classify = make_head_classifier(self.config, self.crawler_name)
-        if self.resolver_mode in ("jvm", "auto"):
-            from ..functions.udfs import make_link_resolver_scalar
+        # imported per call, not at module level, so a wrapper set on
+        # the udfs module (perfbench's tracer) is the one that runs.
+        # jvm rounds feed it guard-failing documents only, scalar
+        # rounds whole documents.
+        from ..functions.udfs import make_link_resolver_scalar
 
-            # jvm rounds feed it residue rows only; auto's
-            # below-threshold rounds feed it whole documents — the
-            # same exact per-row machine serves both
-            resolver = make_link_resolver_scalar(
-                self.config, self.crawler_name
-            )
-        else:
-            resolver = make_link_resolver(self.config, self.crawler_name)
+        resolver = make_link_resolver_scalar(self.config, self.crawler_name)
         admitter = make_link_admitter(self.config, self.crawler_name)
 
         # S9 writefile naming state (cumulative per-base counts); on
@@ -1136,21 +1119,14 @@ class SparkCrawler:
             # logical plan — measured ~95 KB of plan text per exec,
             # thrice per round, the dominant driver-side cost of a
             # small round. The checkpointed frame's plan IS its
-            # materialized blocks. METHANOL_FETCH_PERSIST=0 keeps the
-            # no-materialization experiment reproducible.
-            fetched_cached = os.environ.get(
-                "METHANOL_FETCH_PERSIST", "1"
-            ) != "0"
-            if fetched_cached:
-                # the fetch count rides along the checkpoint job as an
-                # observed metric instead of a second job
-                obs_f = Observation(f"fetch_r{r}")
-                fetched = fetched.observe(
-                    obs_f, F.count(F.lit(1)).alias("n")
-                ).localCheckpoint()
-                n_fetched = obs_f.get["n"]
-            else:
-                n_fetched = None
+            # materialized blocks. The fetch count rides along the
+            # checkpoint job as an observed metric instead of a second
+            # job.
+            obs_f = Observation(f"fetch_r{r}")
+            fetched = fetched.observe(
+                obs_f, F.count(F.lit(1)).alias("n")
+            ).localCheckpoint()
+            n_fetched = obs_f.get["n"]
 
             # crawl log (S11) -------------------------------------------
             if self.store:
@@ -1441,10 +1417,6 @@ class SparkCrawler:
                 # full rewrite (O(total parked) driver job) is waste
                 parked = parked.localCheckpoint()
 
-            # n_fetched was counted off the fetch checkpoint above;
-            # the uncached A/B path pays the recompute here as before
-            if n_fetched is None:
-                n_fetched = ordered.count()
             stats.fetched += n_fetched
             n_admitted = n_targets = 0
             if self.collect_metrics:

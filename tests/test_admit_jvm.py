@@ -18,8 +18,7 @@ from methanol_web_crawler_spark.functions.classify import (
 from methanol_web_crawler_spark.functions.extract_jvm import (
     split_jvm_extractable,
 )
-from tests.test_resolver_jvm_diff import IN_SCHEMA
-from tests.test_resolver_vec_diff import IN_COLS, _page_row, _span
+from tests.test_resolver_jvm_diff import IN_COLS, IN_SCHEMA, _page_row, _span
 
 FAST_HREFS = [
     "/p/a.html", "b.html", "x.php?a=1", "sub/", "/q/?s=1",
@@ -156,7 +155,6 @@ class TestAllUmexConfig:
         from methanol_web_crawler_spark.plans.crawl import (
             build_candidates,
         )
-        from tests.test_resolver_vec_diff import _page_row, _span
 
         cfg = self._umex_config()
         body = "".join(

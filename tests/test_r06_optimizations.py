@@ -3,8 +3,6 @@ equivalence or plan property a rewrite relies on, so a regression in
 the optimized shape fails loudly rather than silently changing cost
 (or worse, results)."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from methanol_web_crawler_spark.operators import dedup as dd
@@ -91,45 +89,37 @@ def test_signature_projection_drops_tokenless_docs(spark):
 # -- crawl loop: gated broadcasts are output-equivalent ----------------
 
 
-def _small_crawl(spark, **env):
+def _small_crawl(spark, **gates):
     from methanol_web_crawler_spark.config import default_config
     from methanol_web_crawler_spark.plans.crawl import SparkCrawler
     from methanol_web_crawler_spark.sources.synthweb import generate_web
 
-    old = {k: os.environ.get(k) for k in env}
-    os.environ.update(env)
-    try:
-        web = generate_web(n_docs=300, n_hosts=6, seed=7)
-        cfg = default_config(robotstxt=True)
-        crawler = SparkCrawler(
-            spark, web.to_spark(spark), cfg, politeness_budget=0,
-            collect_metrics=True,
-        )
-        stats = crawler.run(web.seeds)
-        return [
-            (m["round"], m["depth"], m["fetched"], m["admitted"],
-             m["targets"])
-            for m in stats.per_round
-        ], stats.seen
-    finally:
-        for k, v in old.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
+    web = generate_web(n_docs=300, n_hosts=6, seed=7)
+    cfg = default_config(robotstxt=True)
+    crawler = SparkCrawler(
+        spark, web.to_spark(spark), cfg, politeness_budget=0,
+        collect_metrics=True,
+    )
+    for k, v in gates.items():
+        assert hasattr(crawler, k), k
+        setattr(crawler, k, v)
+    stats = crawler.run(web.seeds)
+    return [
+        (m["round"], m["depth"], m["fetched"], m["admitted"],
+         m["targets"])
+        for m in stats.per_round
+    ], stats.seen
 
 
 def test_crawl_broadcast_gate_equivalence(spark):
-    """The size-gated broadcast hints (hosts/jail/seen) and the docs
-    pre-partition are physical-plan choices only: forcing every gate
-    OFF (threshold 0, raw docs scan) must produce the identical
+    """The size-gated broadcast hints (hosts/jail/seen) and the
+    row-count-derived checkpoint partitioning are physical-plan
+    choices only: forcing every broadcast gate OFF (threshold 0) and
+    one row per checkpoint partition must produce the identical
     crawl, round by round."""
     gated_on, seen_on = _small_crawl(spark)
     gated_off, seen_off = _small_crawl(
-        spark,
-        METHANOL_BROADCAST_STATE_MAX="0",
-        METHANOL_DOCS_PREPARTITION="0",
-        METHANOL_CHECKPOINT_ROWS_PER_PART="1",
+        spark, broadcast_state_max=0, checkpoint_rows_per_part=1,
     )
     assert gated_on == gated_off
     assert seen_on == seen_off

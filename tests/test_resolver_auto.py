@@ -8,10 +8,14 @@ Pins (1) the switchover itself (threshold above every wave -> all
 rounds scalar; threshold 1 -> all rounds jvm; a mid-crawl threshold
 -> a mixed per-round trace), and (2) oracle parity in every regime —
 the seen set and fetch totals must not depend on which side of the
-gate a wave lands.
+gate a wave lands. (3) A mode outside auto/scalar/jvm is refused at
+construction instead of silently running another resolver.
 """
 
+import pytest
+
 from methanol_web_crawler_spark.config import default_config
+from methanol_web_crawler_spark.plans.crawl import SparkCrawler
 from methanol_web_crawler_spark.sources.synthweb import generate_web
 from tests.test_crawl_golden import run_both, seen_of
 
@@ -63,3 +67,13 @@ class TestAutoSwitchover:
         assert len(stats.per_round) == len(ref_stats.per_round)
         assert seen_of(engine) == oracle.seen
         assert stats.fetched == sum(len(r) for r in oracle.rounds)
+
+
+@pytest.mark.parametrize("mode", ["vec", "JVM", ""])
+def test_unknown_mode_raises(spark, mode):
+    web = generate_web(n_docs=20, n_hosts=2, seed=101)
+    with pytest.raises(ValueError, match="resolver_mode"):
+        SparkCrawler(
+            spark, web.to_spark(spark), default_config(),
+            resolver_mode=mode,
+        )

@@ -10,19 +10,71 @@ import pytest
 from pyspark.sql import types as T
 
 from methanol_web_crawler_spark.config import default_config
+from methanol_web_crawler_spark.functions.canonicalize import parse_url
 from methanol_web_crawler_spark.functions.udfs import (
     CANDIDATE_SCHEMA,
     make_link_admitter,
     make_link_resolver_scalar,
 )
 from methanol_web_crawler_spark.plans.crawl import build_candidates
-from tests.test_resolver_vec_diff import (
-    HTML_FAST,
-    HTML_SLOW,
-    HTML_SPECIAL,
-    IN_COLS,
-    _page_row,
-    _span,
+
+# resolver input rows: a fetched page joined with its parent's
+# frontier fields (shared with tests/test_admit_jvm.py)
+IN_COLS = [
+    "url", "host_o", "host_l", "file_o", "ext_o", "protocol",
+    "is_dynamic", "www", "seen_key", "host", "filetype", "ft_rank",
+    "crawler", "peek", "depth", "parent_round", "parent_ord",
+    "sibling_ix", "redirect_count", "external", "fetch_round",
+    "fetch_ord", "spans", "status", "location", "content_type",
+]
+
+
+def _page_row(url, filetype, spans, status=200, location=None,
+              depth=0, redirect_count=0, external=False, crawler=None,
+              peek=False, fetch_round=0, fetch_ord=0):
+    p = parse_url(url)
+    assert p is not None, url
+    return {
+        "url": p.url, "host_o": p.host_o, "host_l": p.host_l,
+        "file_o": p.file_o, "ext_o": p.ext_o, "protocol": p.protocol,
+        "is_dynamic": p.is_dynamic, "www": p.www_prefix,
+        "seen_key": p.seen_key, "host": p.host_identity,
+        "filetype": filetype, "ft_rank": 0,
+        "crawler": crawler, "peek": peek, "depth": depth,
+        "parent_round": 0, "parent_ord": 0, "sibling_ix": 0,
+        "redirect_count": redirect_count, "external": external,
+        "fetch_round": fetch_round, "fetch_ord": fetch_ord,
+        "spans": spans, "status": status, "location": location,
+        "content_type": "text/html",
+    }
+
+
+def _span(text=None, kind="text", media_ref=None):
+    return {"kind": kind, "text": text, "media_ref": media_ref,
+            "offset": 0}
+
+
+# hand-picked html shapes: all fast-path tags / the per-char scanner's
+# residue / special-prefixed tags
+HTML_FAST = (
+    '<p>hello</p><a href="http://h1.example.com/p/a.html">x</a>'
+    '<a href="/q/view.php?id=3">y</a>'
+    '<a href="sub/page.html">z</a>'
+    '<img src="http://www.h1.example.com/i.png"/>'
+)
+HTML_SLOW = (
+    "<a href='single-quoted.html'>q</a>"
+    '<a disabled href="missed.html">bare-attr quirk</a>'
+    '<A HREF="UPPER.HTML">u</A>'
+    '<a href="../up/../twice.html">dots</a>'
+    '<a href="#frag">skip</a>'
+    '<a href="mailto:x@y.z">drop</a>'
+    '<a href="spa ce.html">enc</a>'
+)
+HTML_SPECIAL = (
+    '<style>.x { background: url(css-target.png); }</style>'
+    '<script>var x = "<a href=\'no.html\'>";</script>'
+    '<a href="after-special.html">ok</a>'
 )
 
 IN_SCHEMA = T.StructType(
@@ -205,7 +257,7 @@ class TestJvmRandomCorpus:
         redirects — breadth beyond the hand-picked cases, one Spark
         job (per-example Spark round-trips would make hypothesis-style
         fuzzing here cost minutes; the pandas-level fuzz in
-        test_resolver_vec_diff covers the scalar semantics)."""
+        the golden crawls cover the scalar semantics)."""
         import random
 
         rng = random.Random(20260817)
