@@ -155,21 +155,13 @@ class BloomSeenFilter:
     # -- query -----------------------------------------------------------
 
     def split(
-        self, candidates: DataFrame, hash_col: str = "key_hash",
-        materialize: bool = False,
+        self, candidates: DataFrame, hash_col: str = "key_hash"
     ) -> Tuple[DataFrame, DataFrame]:
         """(definitely_new, maybe_seen). Cogroups candidates with their
         bucket's bitmap (the same shape as ``update``): one bitmap per
         task, NOT one bitmap copy per candidate row — a bitmap-join
         would push rows x m_bits/8 duplicated bytes through every Arrow
-        batch (128 KiB x 10k rows ~ 1.2 GB per batch).
-
-        ``materialize=True`` localCheckpoints the probed frame so the
-        two returned branches read ONE Python cogroup pass instead of
-        re-running the probe (and everything upstream) each — the
-        right call when both halves are consumed eagerly and upstream
-        is a plain scan; leave False when a caller manages caching
-        itself or consumes only one branch."""
+        batch (128 KiB x 10k rows ~ 1.2 GB per batch)."""
         m_bits, k = self.m_bits, self.k
         out_fields = [f.name for f in candidates.schema.fields]
         result_schema = T.StructType(
@@ -206,8 +198,6 @@ class BloomSeenFilter:
             )
             .applyInPandas(probe, result_schema)
         )
-        if materialize:
-            probed = probed.localCheckpoint()
         return (
             probed.filter(~F.col("__maybe")).drop("__maybe"),
             probed.filter(F.col("__maybe")).drop("__maybe"),

@@ -50,7 +50,7 @@ from ..functions.udfs import (
     make_robots_parser,
 )
 from ..operators.admission import admit_seed
-from ..operators.seen import BLOOM_SCHEMA, BloomSeenFilter
+from ..operators.seen import BloomSeenFilter
 from ..sources.tables import SnapshotStore
 
 FRONTIER_COLS = [
@@ -85,13 +85,58 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-SEEN_SCHEMA = "seen_key string, key_hash long, first_round int"
+SEEN_COLS = ["seen_key", "key_hash", "first_round"]
+
+HOSTS_SCHEMA = T.StructType(
+    [
+        T.StructField("host", T.StringType()),
+        T.StructField("rules", ROBOTS_RULES_TYPE),
+    ]
+)
+JAIL_SCHEMA = "host string, jail_prefix string"
+# writefile naming state: cumulative per-basename download counts
+NAMES_SCHEMA = "base string, cnt long"
+METRICS_COLS = ("round", "depth", "fetched", "admitted", "targets",
+                "selected")
 
 # bucket count of the compacted seen table (at 100 TB this is the
 # Iceberg bucket(seen_key) spec; locally a bucketed parquet table)
 SEEN_BUCKETS = 64
 
 _SORT_COLS = ["ft_rank", "parent_round", "parent_ord", "sibling_ix"]
+
+
+def _seen_rows(df: DataFrame, first_round: int) -> DataFrame:
+    """Seen-set rows (SEEN_COLS) for the keys of ``df``."""
+    return df.select(
+        "seen_key",
+        F.xxhash64("seen_key").alias("key_hash"),
+        F.lit(first_round).alias("first_round"),
+    )
+
+
+def _span_body() -> "F.Column":
+    """A document's body: the concatenated text of its text spans."""
+    return F.expr(
+        "concat_ws('', transform(filter(spans,"
+        " s -> s.kind = 'text'), s -> coalesce(s.text, '')))"
+    )
+
+
+def _dir_region() -> "F.Column":
+    """The lower-cased directory part of ``url`` (the jail scope)."""
+    return F.expr(
+        "lower(substring(url, host_o + host_l + 1,"
+        " greatest(file_o - host_o - host_l, 0)))"
+    )
+
+
+def _not_redirect() -> "F.Column":
+    """A fetched row with a body that is not a 3xx redirect."""
+    return F.col("spans").isNotNull() & ~(
+        (F.col("status") >= 300) & (F.col("status") < 400)
+        & F.col("location").isNotNull()
+    )
 
 
 def politeness_split(
@@ -202,8 +247,6 @@ def build_candidates(
     for waves at or past the measured ~1.5M-row crossover and scalar
     below it, so clusters run the codegen path and tiny test crawls
     keep the cheap one without configuration."""
-    from ..functions.udfs import CANDIDATE_SCHEMA
-
     if mode == "jvm":
         from ..functions.admit_jvm import split_fast_admit
         from ..functions.extract_jvm import split_jvm_extractable
@@ -268,6 +311,17 @@ class SparkCrawler:
     # round while a 10^9-row frontier keeps full parallelism.
     broadcast_state_max = 1_000_000
     checkpoint_rows_per_part = 100_000
+    # bucketed seen table (PLANS.md design, enacted): in store mode,
+    # every `seen_compact_every` rounds the full seen set is compacted
+    # into a parquet table BUCKETED by seen_key; the per-round exact
+    # anti-join then scans it with NO exchange on the seen side (only
+    # candidates shuffle into the bucket layout) and removes the few
+    # post-compaction delta rounds with a broadcast anti-join. 0
+    # disables compaction.
+    seen_compact_every = 8
+    # resolver_mode="auto" runs the JVM extract+admit path for waves of
+    # at least this many rows (the measured crossover, see __init__)
+    auto_jvm_threshold = 1_500_000
 
     def __init__(
         self,
@@ -283,13 +337,10 @@ class SparkCrawler:
         log_spans: bool = False,
         max_rounds: int = 10_000,
         bloom_buckets: int = 0,
-        bloom_bits: int = 1 << 20,
         bloom_expected_keys: Optional[int] = None,
         serial_transfers: bool = False,
         fetcher=None,
-        seen_compact_every: int = 8,
         resolver_mode: str = "auto",
-        auto_jvm_threshold: int = 1_500_000,
         hooks=None,
     ):
         self.spark = spark
@@ -307,6 +358,10 @@ class SparkCrawler:
         self.serial = serial_transfers
         self.strict_order = strict_order
         self.salt_k = salt_k
+        # the round counts are always observed on the fetch/admit
+        # checkpoints (CrawlStats totals are exact either way); this
+        # only decides whether per-round rows go to
+        # CrawlStats.per_round and the `metrics` table
         self.collect_metrics = collect_metrics
         self.log_spans = log_spans
         self.max_rounds = max_rounds
@@ -347,6 +402,20 @@ class SparkCrawler:
         # everyone else the per-round parked bookkeeping (persist +
         # cadenced checkpoint) is dead weight and is dropped outright
         self.any_external = any(c.external for c in config.crawlers)
+        # per-row depth budget: peek rows use their crawler's
+        # peek_limit, regular rows its depth_limit (0 = unlimited);
+        # over-limit rows stay in the seen set but never fetch
+        self.depth_ok = F.lit(False)
+        for cr in config.crawlers:
+            nonpeek_ok = F.lit(cr.depth_limit == 0) | (
+                F.col("depth") < cr.depth_limit
+            )
+            self.depth_ok = self.depth_ok | (
+                (F.col("crawler") == cr.name)
+                & F.when(
+                    F.col("peek"), F.col("depth") < cr.peek_limit
+                ).otherwise(nonpeek_ok)
+            )
         # S9 writefile sink: a parser+handler filetype fetches through
         # the handler (worker.c:765-771), which saves the body under a
         # dedup-suffixed basename and hands the FILENAME to the parser
@@ -383,34 +452,23 @@ class SparkCrawler:
                 f"not {resolver_mode!r}"
             )
         self.resolver_mode = resolver_mode
-        self.auto_jvm_threshold = auto_jvm_threshold
         self.store = SnapshotStore(state_dir) if state_dir else None
         # session lifecycle hooks (mn-slaved analog, plans/hooks.py):
         # session-complete runs between the 'hook' and 'done' session
         # states; cleanup runs from close()
         self.hooks = hooks
         self._session_id: Optional[str] = None
-        # bucketed seen table (PLANS.md design, enacted): in store
-        # mode, every `seen_compact_every` rounds the full seen set is
-        # compacted into a parquet table BUCKETED by seen_key; the
-        # per-round exact anti-join then scans it with NO exchange on
-        # the seen side (only candidates shuffle into the bucket
-        # layout) and removes the few post-compaction delta rounds
-        # with a broadcast anti-join. 0 disables compaction.
-        self.seen_compact_every = seen_compact_every if self.store else 0
         self._seen_bucketed: Optional[DataFrame] = None
         self._compact_round = -1
         # bloom sizing: frontier-derived when the caller states an
         # expected key count (operators/seen.py sized_for — ~9.6
-        # bits/key at 1% FP), else the explicit bloom_bits constant
+        # bits/key at 1% FP), else BloomSeenFilter's default bitmap
         if bloom_buckets and bloom_expected_keys:
             self.bloom = BloomSeenFilter.sized_for(
                 spark, bloom_expected_keys, n_buckets=bloom_buckets
             )
         elif bloom_buckets:
-            self.bloom = BloomSeenFilter(
-                spark, n_buckets=bloom_buckets, m_bits=bloom_bits
-            )
+            self.bloom = BloomSeenFilter(spark, n_buckets=bloom_buckets)
         else:
             self.bloom = None
 
@@ -451,10 +509,6 @@ class SparkCrawler:
                 make_robots_parser(self.config.user_agent),
                 ROBOTS_RULES_TYPE,
             )
-            body_expr = F.expr(
-                "concat_ws('', transform(filter(spans,"
-                " s -> s.kind = 'text'), s -> coalesce(s.text, '')))"
-            )
             # localCheckpoint (not persist): the checkpointed frame's
             # plan IS the materialized blocks, so every later join
             # reads them directly — cache-fragment substitution does
@@ -464,7 +518,7 @@ class SparkCrawler:
                 self.docs.filter(F.col("doc_id").endswith("/robots.txt"))
                 .select(
                     F.col("doc_id").alias("robots_url"),
-                    robots_parse(body_expr).alias("rules"),
+                    robots_parse(_span_body()).alias("rules"),
                 )
                 .localCheckpoint()
             )
@@ -520,34 +574,20 @@ class SparkCrawler:
                 )
             )
         pending = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        seen = pending.select(
-            "seen_key",
-            F.xxhash64("seen_key").alias("key_hash"),
-            F.lit(0).alias("first_round"),
-        )
         # exact driver-side bootstrap count for the seen-broadcast
         # gate (per-round admitted deltas keep it current in _loop)
         self._n_seen_est = len(seed_seen)
         # seed keys that were admitted but routed away still occupy
         # the seen set
-        extra = [k for k in seed_seen
-                 if k not in {r[8] for r in rows}]
+        frontier_keys = {r[8] for r in rows}
+        extra = [(k,) for k in seed_seen if k not in frontier_keys]
         if extra:
-            seen = seen.unionByName(
-                self.spark.createDataFrame(
-                    [(k,) for k in extra], "seen_key string"
-                ).select(
-                    "seen_key",
-                    F.xxhash64("seen_key").alias("key_hash"),
-                    F.lit(0).alias("first_round"),
-                )
+            pending_keys = pending.select("seen_key").unionByName(
+                self.spark.createDataFrame(extra, "seen_key string")
             )
-        return pending, seen, targets
-
-    # -- politeness -----------------------------------------------------
-
-    def _politeness_split(self, elig: DataFrame) -> Tuple[DataFrame, DataFrame]:
-        return politeness_split(elig, self.budget, self.salt_k)
+        else:
+            pending_keys = pending
+        return pending, _seen_rows(pending_keys, 0), targets
 
     # -- scale-adaptive plan gates ---------------------------------------
 
@@ -566,33 +606,13 @@ class SparkCrawler:
             1, min(cap, est_rows // self.checkpoint_rows_per_part + 1)
         )
 
-    # -- robots / jail ----------------------------------------------------
-
-    def _update_hosts(
-        self, hosts: DataFrame, selected: DataFrame, round_no: int
-    ) -> DataFrame:
-        """Fetch robots.txt for hosts entering at depth 0 (worker.c:
-        269-283; fetched even when the crawler ignores robots —
-        preserved). The robots URL uses the www-stripped host identity
-        (worker.c:1002-1004)."""
-        new_hosts = (
-            selected.filter(F.col("depth") == 0)
-            .select("host")
-            .distinct()
-            .join(hosts.select("host"), "host", "left_anti")
-        )
-        fetched = (
-            new_hosts.join(
-                self._maybe_broadcast(self.robots_cache, self._n_robots),
-                F.concat(F.lit("http://"), F.col("host"), F.lit("/robots.txt"))
-                == F.col("robots_url"),
-                "left",
-            )
-            .select("host", "rules")
-        )
-        return hosts.unionByName(fetched)
-
     # -- seen anti-join (bucketed fast path) -----------------------------
+
+    def _read_seen(self) -> DataFrame:
+        """The full seen set from its snapshots (store mode)."""
+        return self.store.table("seen").read_until(self.spark).select(
+            *SEEN_COLS
+        )
 
     def _anti_seen(self, cand: DataFrame, seen: DataFrame) -> DataFrame:
         """Remove already-seen keys from ``cand``.
@@ -634,20 +654,477 @@ class SparkCrawler:
         k = self.seen_compact_every
         if not k or r % k != k - 1:
             return
-        spark = self.spark
-        full = self.store.table("seen").read_until(spark).select(
-            "seen_key", "key_hash", "first_round"
-        )
         self.store.table("seen_bucketed").append(
-            full, r, collect_lineage=False,
+            self._read_seen(), r, collect_lineage=False,
             bucket_by=("seen_key", SEEN_BUCKETS),
         )
         self._seen_bucketed = self.store.table(
             "seen_bucketed"
-        ).read_bucketed(spark, table_name="seen_bucketed_attach")
+        ).read_bucketed(self.spark, table_name="seen_bucketed_attach")
         self._compact_round = r
 
-    # -- S9 writefile handler -------------------------------------------
+    # -- entry points -----------------------------------------------------
+
+    def run(self, seeds: List[str]) -> CrawlStats:
+        """Fresh crawl from a seed list.
+
+        When the crawler binds an ``init`` function (S2), it runs once
+        here over the raw args and returns the actual seed URLs (the
+        reference calls it with methabot's trailing command-line
+        arguments — e.g. google.js composes search URLs from query
+        terms)."""
+        from ..functions.parsers import resolve_init
+
+        if self.crawler.init:
+            init_fn = resolve_init(self.crawler.init)
+            if init_fn is not None:
+                seeds = list(init_fn(seeds))
+        pending, seen, seed_targets = self._admit_seeds(seeds)
+        if self.store:
+            # snapshot 0 — the resume baseline
+            self.store.table("seen").append(seen, 0, collect_lineage=False)
+            self.store.table("frontier").append(
+                pending, 0, collect_lineage=True
+            )
+            if seed_targets:
+                self.store.table("targets").append(
+                    self.spark.createDataFrame(
+                        [(t["url"], t["filetype"], 0) for t in seed_targets],
+                        "url string, filetype string, round int",
+                    ),
+                    0, collect_lineage=False,
+                )
+        if self.bloom is not None:
+            self.bloom.update(seen.select("key_hash"))
+        return self._loop(
+            pending, seen, None, 0, CrawlStats(targets=len(seed_targets))
+        )
+
+    def resume(self) -> CrawlStats:
+        """Continue a crawl exactly from the latest snapshots (north
+        rule: resumable from any checkpoint with per-partition
+        lineage — see SnapshotTable manifests)."""
+        assert self.store is not None, "resume requires state_dir"
+        spark = self.spark
+        ft = self.store.table("frontier")
+        r0 = ft.latest_round()
+        assert r0 is not None, "no frontier snapshot to resume from"
+        sb = self.store.table("seen_bucketed")
+        last_compact = sb.latest_round()
+        if last_compact is not None:
+            # re-attach the compacted bucketed seen scan (files carry
+            # the bucket ids; the in-memory catalog forgot them)
+            self._seen_bucketed = sb.read_bucketed(
+                spark, table_name="seen_bucketed_attach"
+            )
+            self._compact_round = last_compact
+        parked = self.store.table("parked_state").read_latest(spark)
+        if parked is not None and parked.isEmpty():
+            parked = None
+        if self.bloom is not None:
+            state = self.store.table("bloom_state").read_latest(spark)
+            if state is not None:
+                self.bloom.state = state.localCheckpoint()
+        return self._loop(
+            ft.read_round(spark, r0),
+            self._read_seen(),
+            parked.persist() if parked is not None else None,
+            r0,
+            CrawlStats(),
+            restore=True,
+        )
+
+    def run_frontier(
+        self,
+        pending: DataFrame,
+        seen: Optional[DataFrame] = None,
+    ) -> CrawlStats:
+        """Run the loop over a caller-provided frontier (FRONTIER_SCHEMA
+        rows) and optional pre-existing seen set — the steady-state
+        bench entry (one or few mega-rounds over a large frontier)."""
+        if seen is None:
+            seen = _seen_rows(pending, 0)
+        if self.bloom is not None:
+            # seed the filter with the initial seen keys — run() does
+            # this for seed crawls; without it every frontier key
+            # bypasses the exact anti-join as "definitely new" and the
+            # seen set inflates (caught by the --bloom-diag checksum)
+            self.bloom.update(seen.select("key_hash"))
+        return self._loop(pending, seen, None, 0, CrawlStats())
+
+    # -- the round loop ---------------------------------------------------
+
+    def _loop(
+        self,
+        pending: DataFrame,
+        seen: DataFrame,
+        parked: Optional[DataFrame],
+        start_round: int,
+        stats: CrawlStats,
+        restore: bool = False,
+    ) -> CrawlStats:
+        """The BSP round loop (worker.c:214-407): each round runs the
+        phase methods below in order. They build frames and issue
+        store appends; every Spark action of a round is issued here.
+        The round's two checkpoints are ``fetched`` and ``admitted``;
+        its counts ride on them as observed metrics (worker.c:913-917
+        counts as it goes), so counting costs no job."""
+        spark = self.spark
+        t0 = time.time()
+        self._append_session("running", stats, start_round)
+        stages = self._round_stages()
+        pending, seen = pending.persist(), seen.persist()
+        hosts, jail, names = self._initial_state(restore)
+        if names is not None:
+            names = names.localCheckpoint()
+
+        r = start_round
+        while r < self.max_rounds:
+            n_pending, d, n_wave, elig, rest = split_wave(pending)
+            if n_pending == 0:
+                if parked is None or parked.isEmpty():
+                    break
+                pending.unpersist()
+                pending, parked = self._adopt_parked(parked, r), None
+                continue
+            mode = self._round_mode(n_wave)
+            selected, deferred = self._select(elig)
+            # new hosts only enter at depth 0 (worker.c:269-283); the
+            # counts on the materialized blocks are metadata-cheap and
+            # feed the broadcast gates of the per-round joins
+            if self.robots_enabled and d == 0:
+                hosts = self._update_hosts(hosts, selected).localCheckpoint()
+                self._n_hosts = hosts.count()
+            if self.jail_crawlers and d == 0:
+                jail = self._update_jail(jail, selected).localCheckpoint()
+                self._n_jail = jail.count()
+
+            obs_f = Observation(f"fetch_r{r}")
+            fetched = (
+                self._fetch_plan(self._gate(selected, hosts, jail), r)
+                .observe(obs_f, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint()
+            )
+            n_fetched = obs_f.get["n"]
+            parse_input, names = self._parse_input(fetched, names, r)
+            if names is not None:
+                names = names.localCheckpoint()
+            attr_targets, n_attr = self._attr_targets(parse_input, r)
+            if attr_targets is not None:
+                n_attr = attr_targets.count()
+
+            plan, obs_a, obs_bloom, caches = self._admit_plan(
+                parse_input, seen, mode, r, stages
+            )
+            admitted = plan.localCheckpoint()
+            for c in caches:
+                c.unpersist()
+            n_admitted, n_targets = obs_a.get["n"], obs_a.get["targets"]
+            if self._n_seen_est is not None:
+                self._n_seen_est += n_admitted
+
+            new_pending, new_seen, parked = self._route(
+                admitted, seen, parked, deferred, rest, r
+            )
+            old_pending = pending
+            seen.unpersist()
+            if self.store:
+                # re-read from snapshots: flat parquet scans instead of
+                # an ever-growing union plan (lineage truncation)
+                pending = self.store.table("frontier").read_round(
+                    spark, r + 1
+                ).persist()
+                self._maybe_compact_seen(r)
+                seen = self._read_seen().persist()
+            else:
+                # coalesce before the checkpoint: the 3-way union
+                # inherits the sum of its parents' partitions, which
+                # compounds +O(shuffle.partitions) per round (measured:
+                # a 36k-task stage on an 81-round politeness crawl).
+                # coalesce is a narrow dep; the target derives from
+                # the known frontier size (2x headroom for this
+                # round's growth), so a few-thousand-row frontier
+                # checkpoints as ONE task
+                pending = new_pending.coalesce(
+                    self._n_parts(2 * n_pending)
+                ).localCheckpoint()
+                # seen is cumulative: a full checkpoint per round would
+                # rewrite the whole set, so checkpoint on a cadence and
+                # accumulate flat unions of truncated deltas between.
+                # NOT sized down to the tracked row count: a one-task
+                # coalesce(1) over the many-delta union measured 7-9 s
+                # of blocked (not computing) time, reproducibly
+                seen = (
+                    new_seen.coalesce(
+                        spark.sparkContext.defaultParallelism
+                    ).localCheckpoint()
+                    if r % 8 == 7
+                    else new_seen.persist()
+                )
+            old_pending.unpersist()
+            if parked is not None and r % 4 == 3:
+                # truncate the parked union chain on a cadence: between
+                # truncations it is a flat union of deltas that each
+                # descend from a checkpointed ``admitted``
+                parked = parked.localCheckpoint()
+
+            stats.fetched += n_fetched
+            stats.admitted += n_admitted
+            stats.targets += n_targets + n_attr
+            if self.collect_metrics:
+                row = {
+                    "round": r, "depth": int(d), "fetched": n_fetched,
+                    "admitted": n_admitted, "targets": n_targets + n_attr,
+                    "selected": n_fetched, "pending": n_pending,
+                    "wave": n_wave, "resolver_mode": mode,
+                }
+                if obs_bloom:
+                    # exact-join probe volume saved by the bloom layer
+                    row["bloom_definitely_new"] = obs_bloom[0].get["n"]
+                    row["bloom_maybe"] = obs_bloom[1].get["n"]
+                self._record_round(stats, row)
+            self._snapshot_state(r, hosts, jail, parked, names)
+            # fetched is localCheckpointed — its blocks free via the
+            # ContextCleaner when the reference drops next round
+            if self.budget:
+                selected.unpersist()
+            admitted.unpersist()
+            r += 1
+            stats.rounds = r
+
+        stats.seen = seen.count()
+        stats.wall_s = time.time() - t0
+        self._final_seen = seen
+        self._final_pending = pending
+        self._finish_session(stats, r)
+        return stats
+
+    # -- round phases, in loop order --------------------------------------
+
+    def _round_stages(self) -> tuple:
+        """(resolver, admitter, head classifier) for the crawl's rounds.
+        make_link_resolver_scalar is imported per call, not at module
+        level, so a wrapper set on the udfs module (perfbench's tracer)
+        is the one that runs. jvm rounds feed it guard-failing
+        documents only, scalar rounds whole documents."""
+        from ..functions.udfs import make_link_resolver_scalar
+
+        return (
+            make_link_resolver_scalar(self.config, self.crawler_name),
+            make_link_admitter(self.config, self.crawler_name),
+            make_head_classifier(self.config, self.crawler_name),
+        )
+
+    def _initial_state(self, restore: bool):
+        """The hosts, jail and writefile-names state entering the loop:
+        the latest snapshots when ``restore`` (resume), else empty.
+        jail/names are None unless some crawler jails / some filetype
+        binds writefile; names keep exact dedup numbering on resume."""
+
+        def state(table: str, schema):
+            df = (
+                self.store.table(table).read_latest(self.spark)
+                if restore else None
+            )
+            if df is None:
+                df = self.spark.createDataFrame([], schema)
+            return df
+
+        hosts = state("hosts_state", HOSTS_SCHEMA).persist()
+        jail = (
+            state("jail_state", JAIL_SCHEMA).persist()
+            if self.jail_crawlers else None
+        )
+        names = (
+            state("names_state", NAMES_SCHEMA)
+            if self.writefile_fts else None
+        )
+        return hosts, jail, names
+
+    def _adopt_parked(self, parked: DataFrame, r: int) -> DataFrame:
+        """Host-adoption wave: parked rows re-enter at depth 0 as the
+        new frontier (adopt_parked) and the parked state empties."""
+        pending = adopt_parked(parked).persist()
+        if self.store:
+            self.store.table("frontier").append(
+                pending, r, collect_lineage=True
+            )
+            self.store.table("parked_state").append(
+                self.spark.createDataFrame([], FRONTIER_SCHEMA),
+                r, collect_lineage=False,
+            )
+        return pending
+
+    def _round_mode(self, n_wave: int) -> str:
+        """Effective resolver mode of a round: "auto" gates the JVM
+        extract+admit path on the size of THIS round's wave (the
+        min-depth slice — not the whole frontier, which overcounts
+        multi-depth backlogs; see __init__ for the measured ~1.5M-row
+        breakeven)."""
+        if self.resolver_mode != "auto":
+            return self.resolver_mode
+        return "jvm" if n_wave >= self.auto_jvm_threshold else "scalar"
+
+    def _select(self, elig: DataFrame) -> Tuple[DataFrame, DataFrame]:
+        """(selected, deferred): the wave rows fetched this round and
+        the rest, which keep their sort key. Serial mode fetches one
+        row per round in global order; otherwise the per-host
+        politeness budget applies."""
+        if self.serial:
+            ranked = elig.withColumn(
+                "rn", F.row_number().over(Window.orderBy(*_SORT_COLS))
+            )
+            selected = ranked.filter(F.col("rn") == 1).drop("rn")
+            deferred = ranked.filter(F.col("rn") > 1).drop("rn")
+        else:
+            selected, deferred = politeness_split(
+                elig, self.budget, self.salt_k
+            )
+        if self.budget:
+            # the politeness window reshuffles — cache it for the
+            # hosts-update + fetch consumers. With no budget, selected
+            # IS the (already cached) wave — an extra persist would
+            # copy the whole frontier per round
+            selected = selected.persist()
+        return selected, deferred
+
+    def _update_hosts(
+        self, hosts: DataFrame, selected: DataFrame
+    ) -> DataFrame:
+        """Fetch robots.txt for hosts entering at depth 0 (worker.c:
+        269-283; fetched even when the crawler ignores robots —
+        preserved). The robots URL uses the www-stripped host identity
+        (worker.c:1002-1004)."""
+        new_hosts = (
+            selected.filter(F.col("depth") == 0)
+            .select("host")
+            .distinct()
+            .join(hosts.select("host"), "host", "left_anti")
+        )
+        fetched = (
+            new_hosts.join(
+                self._maybe_broadcast(self.robots_cache, self._n_robots),
+                F.concat(F.lit("http://"), F.col("host"), F.lit("/robots.txt"))
+                == F.col("robots_url"),
+                "left",
+            )
+            .select("host", "rules")
+        )
+        return hosts.unionByName(fetched)
+
+    def _update_jail(self, jail: DataFrame, selected: DataFrame) -> DataFrame:
+        """Jail prefixes for new hosts entering at depth 0 under a
+        jailing crawler: the directory region of the host's first URL
+        in crawl order."""
+        new_jail = (
+            selected.filter(
+                (F.col("depth") == 0)
+                & F.col("crawler").isin(self.jail_crawlers)
+            )
+            .groupBy("host")
+            .agg(
+                F.min_by(
+                    _dir_region(), F.struct(*_SORT_COLS)
+                ).alias("jail_prefix")
+            )
+            .join(jail.select("host"), "host", "left_anti")
+        )
+        return jail.unionByName(new_jail)
+
+    def _gate(
+        self,
+        selected: DataFrame,
+        hosts: DataFrame,
+        jail: Optional[DataFrame],
+    ) -> DataFrame:
+        """The jail and robots gates over the selected rows."""
+        gated = selected
+        if self.jail_crawlers:
+            gated = gated.join(
+                self._maybe_broadcast(jail, self._n_jail), "host", "left"
+            ).filter(
+                ~F.col("crawler").isin(self.jail_crawlers)
+                | (F.col("depth") == 0)
+                | F.col("jail_prefix").isNull()
+                | _dir_region().startswith(F.col("jail_prefix"))
+            ).drop("jail_prefix")
+        if self.robots_enabled:
+            # first path-prefix match wins, default allow
+            # (filter.c:34-54) — a pure JVM higher-order expression,
+            # no Python in the gate (NULL/empty rules coalesce to
+            # allow, matching parse_robots of an absent body)
+            gated = (
+                gated.join(
+                    self._maybe_broadcast(hosts, self._n_hosts),
+                    "host", "left",
+                )
+                .withColumn("robots_ok", robots_gate_expr())
+                .filter(F.col("robots_ok"))
+                .drop("rules", "robots_ok")
+            )
+        return gated
+
+    def _fetch_plan(self, gated: DataFrame, r: int) -> DataFrame:
+        """Fetch ids in deterministic order, then the "fetch": the docs
+        join — or, with a fetcher installed (sources/fetch_http.py),
+        the mapInPandas batch-HTTP stage producing the same docs shape.
+
+        _loop materializes the result with localCheckpoint: the
+        MEASURED winner even for single-consumer rounds (8-core
+        mega-round A/B: 151 s cached vs 200 s uncached), and rather
+        than persist because every downstream exec otherwise re-embeds
+        and re-optimizes the full fetch-join logical plan (~95 KB of
+        plan text per exec, the dominant driver cost of a small
+        round)."""
+        if self.strict_order:
+            # after the global sort, partition index order matches
+            # sort order, so monotonically_increasing_id is
+            # monotone in the strict crawl order (worker.c fetch
+            # loop parity) — id VALUES vary with layout but their
+            # ORDER (all any consumer uses) does not
+            ordered = gated.orderBy(*_SORT_COLS).withColumn(
+                "fetch_ord", F.monotonically_increasing_id()
+            )
+        else:
+            # layout-INVARIANT ids: urls are unique within a
+            # round's frontier, so xxhash64(url) is a unique,
+            # content-determined fetch id. monotonically_
+            # increasing_id here would encode the partition
+            # layout, and every repartition/coalesce/AQE change
+            # would silently shift which same-round duplicate
+            # wins the in-batch dedup tie-break downstream (the
+            # round-3 bench-total drift: 35,066 -> 35,062 fetched
+            # at sf0.1 from a coalesce-before-checkpoint).
+            ordered = gated.withColumn("fetch_ord", F.xxhash64("url"))
+        ordered = ordered.withColumn("fetch_round", F.lit(r))
+        docs_side = (
+            self.fetcher(ordered) if self.fetcher is not None
+            else self.docs
+        )
+        return ordered.join(
+            docs_side, ordered.url == docs_side.doc_id, "left"
+        ).drop("doc_id")
+
+    def _parse_input(
+        self, fetched: DataFrame, names: Optional[DataFrame], r: int
+    ) -> Tuple[DataFrame, Optional[DataFrame]]:
+        """Append the crawl log (S11); run the S9 writefile sink, whose
+        parse-buffer swap makes the parse input. Returns (parse_input,
+        next names state plan)."""
+        if self.store:
+            log_cols = [
+                F.lit(r).alias("round"), "fetch_ord", "url",
+                "filetype", "depth", "host",
+                F.coalesce(F.col("status"), F.lit(404)).alias("status"),
+            ]
+            if self.log_spans:
+                log_cols.append("spans")
+            self.store.table("crawl_log").append(
+                fetched.select(*log_cols), r, collect_lineage=False
+            )
+        if not self.writefile_fts:
+            return fetched, names
+        return self._writefile_stage(fetched, names, r)
 
     def _writefile_stage(
         self, fetched: DataFrame, names: DataFrame, round_no: int
@@ -667,16 +1144,10 @@ class SparkCrawler:
           BUFFER becomes the filename (h->buf swap, builtin.c:123-126)
           — the parser chain then sees the name, not the body.
 
-        Returns (parse_input, new_names_state).
+        Returns (parse_input, new_names_state plan).
         """
-        spark = self.spark
         wf = fetched.filter(
-            F.col("filetype").isin(self.writefile_fts)
-            & F.col("spans").isNotNull()
-            & ~(
-                (F.col("status") >= 300) & (F.col("status") < 400)
-                & F.col("location").isNotNull()
-            )
+            F.col("filetype").isin(self.writefile_fts) & _not_redirect()
         )
         is_dir = (F.col("file_o") + F.lit(1)) == F.length("url")
         rest = F.expr("substring(url, file_o + 2)")
@@ -698,13 +1169,10 @@ class SparkCrawler:
             F.col("ext_o") > 0,
             F.expr("substring(url, file_o + 2, ext_o - file_o - 1)"),
         ).otherwise(rest_noq)
-        body = F.expr(
-            "concat_ws('', transform(filter(spans,"
-            " s -> s.kind = 'text'), s -> coalesce(s.text, '')))"
-        )
         wfb = wf.select(
             "url", "filetype", *_SORT_COLS,
-            stem.alias("stem"), ext.alias("ext"), body.alias("body"),
+            stem.alias("stem"), ext.alias("ext"),
+            _span_body().alias("body"),
         ).withColumn("base", F.concat("stem", "ext"))
 
         # collision numbering follows the DETERMINISTIC crawl sort key,
@@ -744,19 +1212,11 @@ class SparkCrawler:
         new_counts = wfb.groupBy("base").agg(
             F.count("*").alias("add")
         )
-        names = (
-            names.join(new_counts, "base", "full_outer")
-            .select(
-                "base",
-                (F.coalesce(F.col("cnt"), F.lit(0))
-                 + F.coalesce(F.col("add"), F.lit(0))).alias("cnt"),
-            )
-            .localCheckpoint()
+        names = names.join(new_counts, "base", "full_outer").select(
+            "base",
+            (F.coalesce(F.col("cnt"), F.lit(0))
+             + F.coalesce(F.col("add"), F.lit(0))).alias("cnt"),
         )
-        if self.store:
-            self.store.table("names_state").append(
-                names, round_no + 1, collect_lineage=False
-            )
 
         # h->buf swap: downstream parse/attr stages see the filename
         filename_span = F.array(
@@ -781,721 +1241,232 @@ class SparkCrawler:
         )
         return parse_input, names
 
-    def _jail_prefixes(self, selected: DataFrame) -> DataFrame:
-        dir_region = F.expr(
-            "lower(substring(url, host_o + host_l + 1,"
-            " greatest(file_o - host_o - host_l, 0)))"
-        )
-        return (
-            selected.filter(
-                (F.col("depth") == 0)
-                & F.col("crawler").isin(self.jail_crawlers)
-            )
-            .groupBy("host")
-            .agg(
-                F.min_by(
-                    dir_region, F.struct(*_SORT_COLS)
-                ).alias("jail_prefix")
-            )
-        )
-
-    # -- entry points -----------------------------------------------------
-
-    def _hosts_schema(self) -> T.StructType:
-        return T.StructType(
-            [
-                T.StructField("host", T.StringType()),
-                T.StructField("rules", ROBOTS_RULES_TYPE),
-            ]
-        )
-
-    def run(self, seeds: List[str]) -> CrawlStats:
-        """Fresh crawl from a seed list.
-
-        When the crawler binds an ``init`` function (S2), it runs once
-        here over the raw args and returns the actual seed URLs (the
-        reference calls it with methabot's trailing command-line
-        arguments — e.g. google.js composes search URLs from query
-        terms)."""
-        from ..functions.parsers import resolve_init
-
-        if self.crawler.init:
-            init_fn = resolve_init(self.crawler.init)
-            if init_fn is not None:
-                seeds = list(init_fn(seeds))
-        spark = self.spark
-        stats = CrawlStats()
-        pending, seen, seed_targets = self._admit_seeds(seeds)
-        if self.store:
-            # snapshot 0 — the resume baseline
-            self.store.table("seen").append(seen, 0, collect_lineage=False)
-            self.store.table("frontier").append(
-                pending, 0, collect_lineage=True
-            )
-            if seed_targets:
-                self.store.table("targets").append(
-                    spark.createDataFrame(
-                        [(t["url"], t["filetype"], 0) for t in seed_targets],
-                        "url string, filetype string, round int",
-                    ),
-                    0, collect_lineage=False,
+    def _attr_targets(
+        self, parse_input: DataFrame, r: int
+    ) -> Tuple[Optional[DataFrame], int]:
+        """Attribute targets (P11), both paths emitting (url, filetype,
+        attributes map):
+        - a JVM expression for filetypes whose ONLY attribute is the
+          builtin html whole-body one (html.c:179-183) — no Python;
+        - the attrs-parser mapInPandas stage for filetypes whose chain
+          sets named attributes (js.c set_attribute analog).
+        In store mode they are appended and the append's lineage
+        read-back counts them from the (small) snapshot: returns
+        (None, rows). Otherwise returns (frame, 0) for _loop to count
+        (the reference counts m.targets unconditionally,
+        worker.c:913-917). (None, 0) when no filetype has attributes."""
+        frames = []
+        if self.attr_fts_html:
+            frames.append(
+                parse_input.filter(
+                    F.col("filetype").isin(self.attr_fts_html)
+                    & _not_redirect()
+                ).select(
+                    "url", "filetype",
+                    F.create_map(
+                        F.lit("html"), _span_body()
+                    ).alias("attributes"),
                 )
-        stats.targets += len(seed_targets)
-        if self.bloom is not None:
-            self.bloom.update(seen.select("key_hash"))
-        hosts = spark.createDataFrame([], self._hosts_schema()).persist()
-        jail = (
-            spark.createDataFrame(
-                [], "host string, jail_prefix string"
-            ).persist()
-            if self.jail_crawlers
-            else None
-        )
-        return self._loop(
-            pending.persist(), seen.persist(), hosts, jail, None, 0, stats
-        )
-
-    def resume(self) -> CrawlStats:
-        """Continue a crawl exactly from the latest snapshots (north
-        rule: resumable from any checkpoint with per-partition
-        lineage — see SnapshotTable manifests)."""
-        assert self.store is not None, "resume requires state_dir"
-        spark = self.spark
-        ft = self.store.table("frontier")
-        r0 = ft.latest_round()
-        assert r0 is not None, "no frontier snapshot to resume from"
-        pending = ft.read_round(spark, r0)
-        seen = self.store.table("seen").read_until(spark).select(
-            "seen_key", "key_hash", "first_round"
-        )
-        sb = self.store.table("seen_bucketed")
-        last_compact = sb.latest_round()
-        if last_compact is not None:
-            # re-attach the compacted bucketed seen scan (files carry
-            # the bucket ids; the in-memory catalog forgot them)
-            self._seen_bucketed = sb.read_bucketed(
-                spark, table_name="seen_bucketed_attach"
             )
-            self._compact_round = last_compact
-        hosts = self.store.table("hosts_state").read_latest(spark)
-        if hosts is None:
-            hosts = spark.createDataFrame([], self._hosts_schema())
-        jail = None
-        if self.jail_crawlers:
-            jail = self.store.table("jail_state").read_latest(spark)
-            if jail is None:
-                jail = spark.createDataFrame(
-                    [], "host string, jail_prefix string"
+        if self.attr_fts_py:
+            frames.append(
+                parse_input.filter(
+                    F.col("filetype").isin(self.attr_fts_py)
+                    & _not_redirect()
                 )
-            jail = jail.persist()
-        parked = self.store.table("parked_state").read_latest(spark)
-        if parked is not None and parked.isEmpty():
-            parked = None
-        if self.bloom is not None:
-            state = self.store.table("bloom_state").read_latest(spark)
-            if state is not None:
-                self.bloom.state = state.localCheckpoint()
-        return self._loop(
-            pending.persist(),
-            seen.persist(),
-            hosts.persist(),
-            jail,
-            parked.persist() if parked is not None else None,
-            r0,
-            CrawlStats(),
-        )
-
-    def run_frontier(
-        self,
-        pending: DataFrame,
-        seen: Optional[DataFrame] = None,
-    ) -> CrawlStats:
-        """Run the loop over a caller-provided frontier (FRONTIER_SCHEMA
-        rows) and optional pre-existing seen set — the steady-state
-        bench entry (one or few mega-rounds over a large frontier)."""
-        spark = self.spark
-        if seen is None:
-            seen = pending.select(
-                "seen_key",
-                F.xxhash64("seen_key").alias("key_hash"),
-                F.lit(0).alias("first_round"),
+                .select("url", "filetype", "spans")
+                .mapInPandas(
+                    make_attr_extractor(self.config),
+                    ATTR_TARGET_SCHEMA,
+                )
             )
-        if self.bloom is not None:
-            # seed the filter with the initial seen keys — run() does
-            # this for seed crawls; without it every frontier key
-            # bypasses the exact anti-join as "definitely new" and the
-            # seen set inflates (caught by the --bloom-diag checksum)
-            self.bloom.update(seen.select("key_hash"))
-        hosts = spark.createDataFrame([], self._hosts_schema()).persist()
-        jail = (
-            spark.createDataFrame(
-                [], "host string, jail_prefix string"
-            ).persist()
-            if self.jail_crawlers
-            else None
+        if not frames:
+            return None, 0
+        out = frames[0]
+        for fdf in frames[1:]:
+            out = out.unionByName(fdf)
+        out = out.withColumn("round", F.lit(r))
+        if not self.store:
+            return out, 0
+        entry = self.store.table("attr_targets").append(
+            out, r, collect_lineage=True
         )
-        return self._loop(
-            pending.persist(), seen.persist(), hosts, jail, None, 0,
-            CrawlStats(),
-        )
+        return None, entry.get("rows", 0)
 
-    # -- the round loop ---------------------------------------------------
-
-    def _loop(
+    def _admit_plan(
         self,
-        pending: DataFrame,
+        parse_input: DataFrame,
         seen: DataFrame,
+        mode: str,
+        r: int,
+        stages: tuple,
+    ) -> Tuple[DataFrame, Observation, List[Observation], list]:
+        """Parse + canonicalize + classify, in-batch dedup, the global
+        dedup (bloom prefilter + exact anti-join) and HEAD resolution.
+
+        Returns (admitted plan, its Observation of ``n`` rows and
+        ``targets`` rows, the [definitely_new, maybe] bloom-half
+        Observations or [], caches to free once admitted is
+        materialized)."""
+        resolver, admitter, head_classify = stages
+        caches: list = []
+        candidates = build_candidates(
+            parse_input, self.config, resolver, admitter,
+            mode, self.crawler_name, caches,
+        )
+
+        # in-batch dedup: first admission in fetch order wins
+        wd = Window.partitionBy("seen_key").orderBy(
+            "parent_ord", "sibling_ix"
+        )
+        candidates = (
+            candidates.withColumn("rn", F.row_number().over(wd))
+            .filter(F.col("rn") == 1)
+            .drop("rn")
+        )
+
+        # global dedup: bloom prefilter + exact anti-join. The bloom
+        # metric is the anti-join input reduction: both halves are
+        # observed where the admitted checkpoint computes them
+        obs_bloom: List[Observation] = []
+        if self.bloom is not None:
+            definitely_new, maybe = self.bloom.split(
+                candidates.withColumn("key_hash", F.xxhash64("seen_key"))
+            )
+            obs_bloom = [Observation(f"bloom_new_r{r}"),
+                         Observation(f"bloom_maybe_r{r}")]
+            definitely_new = definitely_new.observe(
+                obs_bloom[0], F.count(F.lit(1)).alias("n")
+            )
+            maybe = maybe.observe(
+                obs_bloom[1], F.count(F.lit(1)).alias("n")
+            )
+            admitted = definitely_new.unionByName(
+                self._anti_seen(maybe, seen)
+            ).drop("key_hash")
+        else:
+            admitted = self._anti_seen(candidates, seen)
+
+        # HEAD resolution (F3): content-type join for POSSIBLE_MATCH
+        # (statically pruned when no crawler has a "lookup" binding
+        # — then needs_head is always false)
+        if self.any_lookup:
+            resolved_head = (
+                admitted.filter(F.col("needs_head"))
+                .drop("filetype", "ft_rank", "route")
+                .join(
+                    self.docs_ct, F.col("url") == F.col("doc_id"), "left"
+                )
+                .drop("doc_id")
+                .mapInPandas(_head_mapper(head_classify), CANDIDATE_SCHEMA)
+            )
+            admitted = admitted.filter(~F.col("needs_head")).unionByName(
+                resolved_head
+            )
+        obs = Observation(f"admit_r{r}")
+        admitted = admitted.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col("route") == "target").alias("targets"),
+        )
+        return admitted, obs, obs_bloom, caches
+
+    def _route(
+        self,
+        admitted: DataFrame,
+        seen: DataFrame,
+        parked: Optional[DataFrame],
+        deferred: DataFrame,
+        rest: DataFrame,
+        r: int,
+    ) -> Tuple[DataFrame, DataFrame, Optional[DataFrame]]:
+        """Route the materialized ``admitted`` delta: the seen delta
+        (and bloom update), targets, the next frontier (depth-budgeted)
+        and parked external hosts. Store mode snapshots the seen delta,
+        bloom, targets and the next frontier — reading that back is the
+        resume point. Returns (next frontier, next seen, parked)."""
+        seen_delta = _seen_rows(admitted, r)
+        if self.store:
+            self.store.table("seen").append(seen_delta, r,
+                                            collect_lineage=True)
+        if self.bloom is not None:
+            self.bloom.update(seen_delta.select("key_hash"))
+            if self.store:
+                self.store.table("bloom_state").append(
+                    self.bloom.state, r + 1, collect_lineage=False
+                )
+        if self.store:
+            self.store.table("targets").append(
+                admitted.filter(F.col("route") == "target").select(
+                    "url", "filetype", F.lit(r).alias("round")
+                ),
+                r, collect_lineage=False,
+            )
+
+        frontier_add = admitted.filter(
+            (F.col("route") == "frontier") & self.depth_ok
+        ).select(*FRONTIER_COLS)
+        if self.any_external:
+            external_add = admitted.filter(
+                F.col("route") == "external"
+            ).select(*FRONTIER_COLS)
+            parked = (
+                external_add if parked is None
+                else parked.unionByName(external_add)
+            ).persist()
+
+        new_pending = deferred.select(*FRONTIER_COLS).unionByName(
+            rest.select(*FRONTIER_COLS)
+        ).unionByName(frontier_add)
+        if self.store:
+            self.store.table("frontier").append(
+                new_pending, r + 1, collect_lineage=True
+            )
+        return new_pending, seen.unionByName(seen_delta), parked
+
+    def _record_round(self, stats: CrawlStats, row: dict) -> None:
+        """Per-round counts to CrawlStats.per_round and, in store mode,
+        the ``metrics`` table (its fixed columns only: ``row`` also
+        carries diagnostic keys such as the bloom counters)."""
+        stats.per_round.append(row)
+        if self.store:
+            self.store.table("metrics").append(
+                self.spark.createDataFrame(
+                    [tuple(row[c] for c in METRICS_COLS)],
+                    "round int, depth int, fetched long,"
+                    " admitted long, targets long, selected long",
+                ),
+                row["round"], collect_lineage=False,
+            )
+
+    def _snapshot_state(
+        self,
+        r: int,
         hosts: DataFrame,
         jail: Optional[DataFrame],
         parked: Optional[DataFrame],
-        start_round: int,
-        stats: CrawlStats,
-    ) -> CrawlStats:
-        spark = self.spark
-        t0 = time.time()
-
-        self._append_session("running", stats, start_round)
-        head_classify = make_head_classifier(self.config, self.crawler_name)
-        # imported per call, not at module level, so a wrapper set on
-        # the udfs module (perfbench's tracer) is the one that runs.
-        # jvm rounds feed it guard-failing documents only, scalar
-        # rounds whole documents.
-        from ..functions.udfs import make_link_resolver_scalar
-
-        resolver = make_link_resolver_scalar(self.config, self.crawler_name)
-        admitter = make_link_admitter(self.config, self.crawler_name)
-
-        # S9 writefile naming state (cumulative per-base counts); on
-        # resume the latest snapshot restores exact dedup numbering
-        names = None
-        if self.writefile_fts:
-            if self.store:
-                names = self.store.table("names_state").read_latest(
-                    spark
-                )
-            if names is None:
-                names = spark.createDataFrame(
-                    [], "base string, cnt long"
-                )
-            names = names.localCheckpoint()
-
-        r = start_round
-        while r < self.max_rounds:
-            n_pending, d, n_wave, elig, rest = split_wave(pending)
-            if n_pending == 0:
-                if parked is None or parked.isEmpty():
-                    break
-                # host-adoption wave: parked rows re-enter at depth 0
-                pending.unpersist()
-                pending = adopt_parked(parked).persist()
-                parked = None
-                if self.store:
-                    self.store.table("frontier").append(
-                        pending, r, collect_lineage=True
-                    )
-                    self.store.table("parked_state").append(
-                        spark.createDataFrame([], FRONTIER_SCHEMA),
-                        r, collect_lineage=False,
-                    )
-                continue
-
-            # effective resolver mode this round: "auto" gates the
-            # JVM extract+admit path on the size of THIS round's wave
-            # (the min-depth slice — not the whole frontier, which
-            # overcounts multi-depth backlogs; see __init__ for the
-            # measured ~1.5M-row breakeven)
-            mode_r = self.resolver_mode
-            if mode_r == "auto":
-                mode_r = (
-                    "jvm" if n_wave >= self.auto_jvm_threshold
-                    else "scalar"
-                )
-
-            if self.serial:
-                wser = Window.orderBy(*_SORT_COLS)
-                ranked = elig.withColumn(
-                    "rn", F.row_number().over(wser)
-                )
-                selected = ranked.filter(F.col("rn") == 1).drop("rn")
-                deferred = ranked.filter(F.col("rn") > 1).drop("rn")
-            else:
-                selected, deferred = self._politeness_split(elig)
-            if self.budget:
-                # the politeness window reshuffles — cache it for the
-                # hosts-update + fetch consumers
-                selected = selected.persist()
-            # with no budget, selected IS the (already cached) wave —
-            # an extra persist would copy the whole frontier per round
-
-            if self.robots_enabled and d == 0:
-                # new hosts only enter at depth 0 (worker.c:269-283)
-                hosts = self._update_hosts(hosts, selected, r)
-                hosts = hosts.localCheckpoint()
-                # metadata-cheap on the materialized blocks; feeds the
-                # broadcast gate for the per-round robots join
-                self._n_hosts = hosts.count()
-
-            # gates -----------------------------------------------------
-            gated = selected
-            if self.jail_crawlers:
-                if d == 0:
-                    new_jail = self._jail_prefixes(selected).join(
-                        jail.select("host"), "host", "left_anti"
-                    )
-                    jail = jail.unionByName(new_jail).localCheckpoint()
-                    self._n_jail = jail.count()
-                gated = gated.join(
-                    self._maybe_broadcast(jail, self._n_jail),
-                    "host", "left",
-                )
-                dir_region = F.expr(
-                    "lower(substring(url, host_o + host_l + 1,"
-                    " greatest(file_o - host_o - host_l, 0)))"
-                )
-                gated = gated.filter(
-                    ~F.col("crawler").isin(self.jail_crawlers)
-                    | (F.col("depth") == 0)
-                    | F.col("jail_prefix").isNull()
-                    | dir_region.startswith(F.col("jail_prefix"))
-                ).drop("jail_prefix")
-            if self.robots_enabled:
-                # first path-prefix match wins, default allow
-                # (filter.c:34-54) — a pure JVM higher-order expression,
-                # no Python in the gate (NULL/empty rules coalesce to
-                # allow, matching parse_robots of an absent body)
-                gated = (
-                    gated.join(
-                        self._maybe_broadcast(hosts, self._n_hosts),
-                        "host", "left",
-                    )
-                    .withColumn("robots_ok", robots_gate_expr())
-                    .filter(F.col("robots_ok"))
-                    .drop("rules", "robots_ok")
-                )
-
-            # deterministic fetch order + fetch ids ----------------------
-            if self.strict_order:
-                # after the global sort, partition index order matches
-                # sort order, so monotonically_increasing_id is
-                # monotone in the strict crawl order (worker.c fetch
-                # loop parity) — id VALUES vary with layout but their
-                # ORDER (all any consumer uses) does not
-                ordered = gated.orderBy(*_SORT_COLS).withColumn(
-                    "fetch_ord", F.monotonically_increasing_id()
-                )
-            else:
-                # layout-INVARIANT ids: urls are unique within a
-                # round's frontier, so xxhash64(url) is a unique,
-                # content-determined fetch id. monotonically_
-                # increasing_id here would encode the partition
-                # layout, and every repartition/coalesce/AQE change
-                # would silently shift which same-round duplicate
-                # wins the in-batch dedup tie-break downstream (the
-                # round-3 bench-total drift: 35,066 -> 35,062 fetched
-                # at sf0.1 from a coalesce-before-checkpoint).
-                ordered = gated.withColumn(
-                    "fetch_ord", F.xxhash64("url")
-                )
-            ordered = ordered.withColumn("fetch_round", F.lit(r))
-
-            # the "fetch": join the docs table — or, with a fetcher
-            # installed (sources/fetch_http.py), the mapInPandas
-            # batch-HTTP stage producing the same docs shape ----------
-            if self.fetcher is not None:
-                docs_side = self.fetcher(ordered)
-            else:
-                docs_side = self.docs
-            fetched = ordered.join(
-                docs_side, ordered.url == docs_side.doc_id, "left"
-            ).drop("doc_id")
-            # materializing here is the MEASURED winner even for
-            # single-consumer rounds (8-core mega-round A/B: 151 s
-            # cached vs 200 s uncached in adjacent windows — the
-            # un-cached variant recomputes the politeness/robots chain
-            # for the fetch count); localCheckpoint rather than
-            # persist because EVERY downstream exec (candidates
-            # checkpoint, crawl-log/attr appends, the fetch count)
-            # otherwise re-embeds and re-optimizes the full fetch-join
-            # logical plan — measured ~95 KB of plan text per exec,
-            # thrice per round, the dominant driver-side cost of a
-            # small round. The checkpointed frame's plan IS its
-            # materialized blocks. The fetch count rides along the
-            # checkpoint job as an observed metric instead of a second
-            # job.
-            obs_f = Observation(f"fetch_r{r}")
-            fetched = fetched.observe(
-                obs_f, F.count(F.lit(1)).alias("n")
-            ).localCheckpoint()
-            n_fetched = obs_f.get["n"]
-
-            # crawl log (S11) -------------------------------------------
-            if self.store:
-                log_cols = [
-                    F.lit(r).alias("round"), "fetch_ord", "url",
-                    "filetype", "depth", "host",
-                    F.coalesce(F.col("status"), F.lit(404)).alias("status"),
-                ]
-                if self.log_spans:
-                    log_cols.append("spans")
-                self.store.table("crawl_log").append(
-                    fetched.select(*log_cols), r, collect_lineage=False
-                )
-
-            # S9 writefile: sink + parse-buffer swap --------------------
-            if self.writefile_fts:
-                parse_input, names = self._writefile_stage(
-                    fetched, names, r
-                )
-            else:
-                parse_input = fetched
-
-            # attribute targets (P11) -------------------------------------
-            # Two paths, both emitting (url, filetype, attributes map):
-            # - JVM expression for filetypes whose ONLY attribute is the
-            #   builtin html whole-body one (html.c:179-183) — no Python;
-            # - the attrs-parser mapInPandas stage for filetypes whose
-            #   chain sets named attributes (js.c set_attribute analog).
-            n_targets_attr = 0
-            not_redirect = F.col("spans").isNotNull() & ~(
-                (F.col("status") >= 300) & (F.col("status") < 400)
-                & F.col("location").isNotNull()
+        names: Optional[DataFrame],
+    ) -> None:
+        """Full-state snapshots for exact resume (store mode)."""
+        if not self.store:
+            return
+        self.store.table("hosts_state").append(
+            hosts, r + 1, collect_lineage=False
+        )
+        if jail is not None:
+            self.store.table("jail_state").append(
+                jail, r + 1, collect_lineage=False
             )
-            attr_frames = []
-            if self.attr_fts_html:
-                body_expr = F.expr(
-                    "concat_ws('', transform(filter(spans,"
-                    " s -> s.kind = 'text'), s -> coalesce(s.text, '')))"
-                )
-                attr_frames.append(
-                    parse_input.filter(
-                        F.col("filetype").isin(self.attr_fts_html)
-                        & not_redirect
-                    ).select(
-                        "url", "filetype",
-                        F.create_map(
-                            F.lit("html"), body_expr
-                        ).alias("attributes"),
-                    )
-                )
-            if self.attr_fts_py:
-                attr_frames.append(
-                    parse_input.filter(
-                        F.col("filetype").isin(self.attr_fts_py)
-                        & not_redirect
-                    )
-                    .select("url", "filetype", "spans")
-                    .mapInPandas(
-                        make_attr_extractor(self.config),
-                        ATTR_TARGET_SCHEMA,
-                    )
-                )
-            if attr_frames:
-                attr_targets = attr_frames[0]
-                for fdf in attr_frames[1:]:
-                    attr_targets = attr_targets.unionByName(fdf)
-                attr_targets = attr_targets.withColumn("round", F.lit(r))
-                if self.store:
-                    # one job: the append's lineage read-back counts the
-                    # written rows from the (small) snapshot parquet —
-                    # never recompute the fetch pipeline just to count
-                    entry = self.store.table("attr_targets").append(
-                        attr_targets, r, collect_lineage=True
-                    )
-                    n_targets_attr = entry.get("rows", 0)
-                elif self.collect_metrics:
-                    # store-less metric runs still count attribute
-                    # targets (the reference counts m.targets
-                    # unconditionally, worker.c:913-917) so stats
-                    # parity with the oracle holds without a state_dir
-                    n_targets_attr = attr_targets.count()
-
-            # parse + canonicalize + classify ----------------------------
-            round_caches: list = []
-            candidates = build_candidates(
-                parse_input, self.config, resolver, admitter,
-                mode_r, self.crawler_name, round_caches,
+        if names is not None:
+            self.store.table("names_state").append(
+                names, r + 1, collect_lineage=False
             )
-
-            # in-batch dedup: first admission in fetch order wins --------
-            wd = Window.partitionBy("seen_key").orderBy(
-                "parent_ord", "sibling_ix"
-            )
-            candidates = (
-                candidates.withColumn("rn", F.row_number().over(wd))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-
-            # global dedup: bloom prefilter + exact anti-join -------------
-            n_bloom_new = n_bloom_maybe = None
-            if self.bloom is not None:
-                cand_hashed = candidates.withColumn(
-                    "key_hash", F.xxhash64("seen_key")
-                )
-                definitely_new, maybe = self.bloom.split(cand_hashed)
-                if self.collect_metrics:
-                    # anti-join input reduction is THE bloom metric:
-                    # checkpoint both halves (one computation), then
-                    # the counts are metadata-cheap
-                    definitely_new = definitely_new.localCheckpoint()
-                    maybe = maybe.localCheckpoint()
-                    n_bloom_new = definitely_new.count()
-                    n_bloom_maybe = maybe.count()
-                checked = self._anti_seen(maybe, seen)
-                new_links = definitely_new.unionByName(checked).drop(
-                    "key_hash"
-                )
-            else:
-                new_links = self._anti_seen(candidates, seen)
-
-            # HEAD resolution (F3): content-type join for POSSIBLE_MATCH
-            # (statically pruned when no crawler has a "lookup" binding
-            # — then needs_head is always false)
-            if self.any_lookup:
-                head_rows = new_links.filter(F.col("needs_head"))
-                plain_rows = new_links.filter(~F.col("needs_head"))
-                resolved_head = (
-                    head_rows.drop("filetype", "ft_rank", "route")
-                    .join(
-                        self.docs_ct,
-                        F.col("url") == F.col("doc_id"),
-                        "left",
-                    )
-                    .drop("doc_id")
-                    .mapInPandas(
-                        _head_mapper(head_classify),
-                        CANDIDATE_SCHEMA,
-                    )
-                )
-                admitted = plain_rows.unionByName(resolved_head)
-            else:
-                admitted = new_links
-            # checkpoint the (small) per-round delta: everything
-            # downstream (seen delta, targets, frontier add, parked)
-            # then reads a materialized scan instead of re-nesting the
-            # whole round pipeline — keeps all cross-round plans flat
-            track_seen = (
-                self._n_seen_est is not None
-                and self._n_seen_est <= self.broadcast_state_max
-            )
-            if track_seen:
-                # the admitted count (the seen delta size) rides along
-                # the checkpoint as an observed metric — keeps the
-                # seen-broadcast gate's row count exact at zero extra
-                # jobs; once the gate is past the threshold it stays
-                # off (seen only grows), so the tracking stops too
-                obs_a = Observation(f"admit_r{r}")
-                admitted = admitted.observe(
-                    obs_a, F.count(F.lit(1)).alias("n")
-                )
-            admitted = admitted.localCheckpoint()
-            for c in round_caches:
-                c.unpersist()
-            if track_seen:
-                self._n_seen_est += obs_a.get["n"]
-
-            # seen delta --------------------------------------------------
-            seen_delta = admitted.select(
-                "seen_key",
-                F.xxhash64("seen_key").alias("key_hash"),
-                F.lit(r).alias("first_round"),
-            )
-            if self.store:
-                self.store.table("seen").append(seen_delta, r,
-                                                collect_lineage=True)
-            new_seen = seen.unionByName(seen_delta)
-            if self.bloom is not None:
-                self.bloom.update(seen_delta.select("key_hash"))
-                if self.store:
-                    self.store.table("bloom_state").append(
-                        self.bloom.state, r + 1, collect_lineage=False
-                    )
-
-            # routing ------------------------------------------------------
-            targets_df = admitted.filter(F.col("route") == "target").select(
-                "url", "filetype", F.lit(r).alias("round")
-            )
-            if self.store:
-                self.store.table("targets").append(
-                    targets_df, r, collect_lineage=False
-                )
-
-            frontier_add = admitted.filter(F.col("route") == "frontier")
-            # per-row depth budget: peek rows use their crawler's
-            # peek_limit, regular rows its depth_limit (0 = unlimited);
-            # over-limit rows stay in the seen set but never fetch
-            cond = F.lit(False)
-            for cr in self.config.crawlers:
-                nonpeek_ok = F.lit(cr.depth_limit == 0) | (
-                    F.col("depth") < cr.depth_limit
-                )
-                peek_ok = F.col("depth") < cr.peek_limit
-                cond = cond | (
-                    (F.col("crawler") == cr.name)
-                    & F.when(F.col("peek"), peek_ok).otherwise(nonpeek_ok)
-                )
-            frontier_add = frontier_add.filter(cond)
-            frontier_add = frontier_add.select(*FRONTIER_COLS)
-
-            if self.any_external:
-                external_add = admitted.filter(
-                    F.col("route") == "external"
-                ).select(*FRONTIER_COLS)
-                if parked is None:
-                    parked = external_add.persist()
-                else:
-                    parked = parked.unionByName(
-                        external_add
-                    ).persist()
-
-            new_pending = deferred.select(*FRONTIER_COLS).unionByName(
-                rest.select(*FRONTIER_COLS)
-            ).unionByName(frontier_add)
-
-            # snapshot the next frontier; reading it back truncates
-            # lineage and is the resume point
-            if self.store:
-                entry = self.store.table("frontier").append(
-                    new_pending, r + 1, collect_lineage=True
-                )
-                pending.unpersist()
-                pending = self.store.table("frontier").read_round(
-                    spark, r + 1
-                ).persist()
-            else:
-                old = pending
-                # coalesce before the checkpoint: the 3-way union
-                # inherits the sum of its parents' partitions, which
-                # compounds +O(shuffle.partitions) per round — a
-                # many-round budgeted crawl otherwise snowballs into
-                # tens of thousands of near-empty tasks (measured:
-                # a 36k-task stage on an 81-round politeness crawl).
-                # coalesce is a narrow dep: no shuffle, just fewer,
-                # fuller tasks. The target derives from the known
-                # frontier size (2x headroom for this round's growth)
-                # instead of a flat defaultParallelism: a few-thousand-
-                # row local frontier checkpoints as ONE task while a
-                # cluster-scale frontier keeps full parallelism.
-                n_part = self._n_parts(2 * n_pending)
-                pending = new_pending.coalesce(
-                    n_part
-                ).localCheckpoint()
-                old.unpersist()
-
-            seen.unpersist()
-            if self.store:
-                self._maybe_compact_seen(r)
-                # re-read from snapshots: flat parquet scans instead of
-                # an ever-growing union plan (lineage truncation)
-                seen = self.store.table("seen").read_until(spark).select(
-                    "seen_key", "key_hash", "first_round"
-                ).persist()
-            else:
-                # seen is cumulative: a full localCheckpoint per round
-                # would rewrite the whole set (O(total) each round);
-                # checkpoint on a cadence, accumulate flat unions of
-                # already-truncated deltas in between
-                if r % 8 == 7:
-                    # same partition-snowball guard as the frontier.
-                    # NOT sized down to the tracked row count: a
-                    # single-task coalesce(1) over the many-delta seen
-                    # union measured 7-9 s of BLOCKED (not computing —
-                    # ~120 ms CPU) time in the one task, reproducibly;
-                    # the cadenced checkpoint is once per 8 rounds, so
-                    # defaultParallelism tasks are cheap and sidestep
-                    # whatever serial block-read wait that was.
-                    seen = new_seen.coalesce(
-                        spark.sparkContext.defaultParallelism
-                    ).localCheckpoint()
-                else:
-                    seen = new_seen.persist()
-            if parked is not None and r % 4 == 3:
-                # truncate the parked union chain on a cadence: each
-                # delta already descends from the checkpointed
-                # ``admitted``, so between truncations the plan is a
-                # flat union of materialized scans — a per-round
-                # full rewrite (O(total parked) driver job) is waste
-                parked = parked.localCheckpoint()
-
-            stats.fetched += n_fetched
-            n_admitted = n_targets = 0
-            if self.collect_metrics:
-                route_counts = {
-                    row["route"]: row["n"]
-                    for row in admitted.groupBy("route")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-                n_admitted = sum(route_counts.values())
-                n_targets = route_counts.get("target", 0)
-            stats.admitted += n_admitted
-
-            if self.collect_metrics:
-                row = {
-                    "round": r,
-                    "depth": int(d),
-                    "fetched": int(n_fetched),
-                    "admitted": int(n_admitted),
-                    "targets": int(n_targets) + int(n_targets_attr),
-                    "selected": int(n_fetched),
-                    "pending": int(n_pending),
-                    "wave": int(n_wave),
-                    "resolver_mode": mode_r,
-                }
-                if n_bloom_new is not None:
-                    # exact-join probe volume saved by the bloom layer
-                    row["bloom_definitely_new"] = int(n_bloom_new)
-                    row["bloom_maybe"] = int(n_bloom_maybe)
-                stats.per_round.append(row)
-                if self.store:
-                    # explicit field list: `row` may carry extra
-                    # diagnostic keys (bloom counters) beyond the
-                    # stored metric schema
-                    self.store.table("metrics").append(
-                        spark.createDataFrame(
-                            [(
-                                row["round"], row["depth"],
-                                row["fetched"], row["admitted"],
-                                row["targets"], row["selected"],
-                            )],
-                            "round int, depth int, fetched long,"
-                            " admitted long, targets long, selected long",
-                        ),
-                        r, collect_lineage=False,
-                    )
-            stats.targets += int(n_targets) + int(n_targets_attr)
-
-            # full-state snapshots for exact resume
-            if self.store:
-                self.store.table("hosts_state").append(
-                    hosts, r + 1, collect_lineage=False
-                )
-                if jail is not None:
-                    self.store.table("jail_state").append(
-                        jail, r + 1, collect_lineage=False
-                    )
-                self.store.table("parked_state").append(
-                    parked
-                    if parked is not None
-                    else spark.createDataFrame([], FRONTIER_SCHEMA),
-                    r + 1, collect_lineage=False,
-                )
-
-            # fetched is localCheckpointed — its blocks free via the
-            # ContextCleaner when the reference drops next round (the
-            # same lifecycle the other checkpointed frames use)
-            if self.budget:
-                selected.unpersist()
-            admitted.unpersist()
-            r += 1
-            stats.rounds = r
-
-        stats.seen = seen.count()
-        stats.wall_s = time.time() - t0
-        self._final_seen = seen
-        self._final_pending = pending
-        self._finish_session(stats, r)
-        return stats
+        self.store.table("parked_state").append(
+            parked
+            if parked is not None
+            else self.spark.createDataFrame([], FRONTIER_SCHEMA),
+            r + 1, collect_lineage=False,
+        )
 
     # -- session lifecycle (mn-slaved analog) ---------------------------
 

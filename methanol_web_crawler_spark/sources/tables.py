@@ -1,13 +1,10 @@
 """Iceberg-style snapshot/append table store.
 
-No Iceberg runtime jars ship in this sandbox (SURVEY.md §7 note), so
-this implements the same transactional semantics behind a thin
-interface: immutable parquet data files + a JSON manifest log with
-atomic commit (write-tmp + rename) and time-travel reads. The second
-implementation of this interface IS implemented — a real Iceberg
-catalog twin in ``sources/iceberg_tables.py`` (``_round``-partitioned
-tables, snapshot-summary lineage, jar-gated) — the crawl plan only
-uses ``append`` / ``read_*`` / ``latest_round`` / ``rollback_to``.
+Iceberg's transactional semantics behind a thin interface, with no
+Iceberg runtime (SURVEY.md §7 note): immutable parquet data files + a
+JSON manifest log with atomic commit (write-tmp + rename) and
+time-travel reads. The crawl plan uses ``append`` (optionally
+bucketed), the ``read_*`` family and ``latest_round``.
 
 Layout::
 

@@ -33,13 +33,42 @@ class TestBloomParity:
         engine = SparkCrawler(
             spark, web.to_spark(spark), cfg, politeness_budget=3,
             state_dir=str(tmp_path), bloom_buckets=8,
-            bloom_bits=1 << 16,
         )
         stats = engine.run(web.seeds)
         assert seen_of(engine) == oracle.seen
         got = rounds_of(engine, spark)
         for rnd, records in enumerate(oracle.rounds):
             assert got.get(rnd, []) == [r.url for r in records], rnd
+
+    def test_bloom_counters_bound_admitted(self, spark, tmp_path):
+        """Store mode: per round, the bloom's definitely-new half is
+        admitted outright and the maybe-seen half only after the exact
+        anti-join, so new <= admitted <= new + maybe; admitted is also
+        exactly the seen rows first recorded in that round (round 0
+        also records the seed keys, all in the seed frontier here)."""
+        web = generate_web(n_docs=60, n_hosts=4, seed=99)
+        # a filter sized for 8 keys: false positives fill the maybe half
+        engine = SparkCrawler(
+            spark, web.to_spark(spark), default_config(robotstxt=True),
+            politeness_budget=2, state_dir=str(tmp_path),
+            bloom_buckets=8, bloom_expected_keys=8,
+        )
+        stats = engine.run(web.seeds)
+        first = {
+            row["first_round"]: row["n"]
+            for row in engine.store.table("seen").read_until(spark)
+            .groupBy("first_round").count()
+            .withColumnRenamed("count", "n").collect()
+        }
+        first[0] -= engine.store.table("frontier").read_round(
+            spark, 0
+        ).count()
+        assert len(stats.per_round) == stats.rounds > 1
+        assert any(m["bloom_maybe"] for m in stats.per_round)
+        for m in stats.per_round:
+            new, maybe = m["bloom_definitely_new"], m["bloom_maybe"]
+            assert new <= m["admitted"] <= new + maybe, m
+            assert m["admitted"] == first.get(m["round"], 0), m
 
 
 class TestSaltedPolitenessParity:

@@ -139,7 +139,10 @@ class TestCrawlRoundPlans:
         scanning the docs table; the probe plan has no Python nodes
         and reads the (cached) side-table."""
         from methanol_web_crawler_spark.config import default_config
-        from methanol_web_crawler_spark.plans.crawl import SparkCrawler
+        from methanol_web_crawler_spark.plans.crawl import (
+            HOSTS_SCHEMA,
+            SparkCrawler,
+        )
         from methanol_web_crawler_spark.sources.synthweb import (
             generate_web,
         )
@@ -149,11 +152,11 @@ class TestCrawlRoundPlans:
             spark, web.to_spark(spark), default_config(robotstxt=True)
         )
         assert crawler.robots_cache is not None
-        hosts0 = spark.createDataFrame([], crawler._hosts_schema())
+        hosts0 = spark.createDataFrame([], HOSTS_SCHEMA)
         sel = spark.createDataFrame(
             [("h0000.test", 0)], "host string, depth int"
         )
-        probe = crawler._update_hosts(hosts0, sel, 0)
+        probe = crawler._update_hosts(hosts0, sel)
         plan = formatted_plan(probe)
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan

@@ -15,9 +15,10 @@ construction instead of silently running another resolver.
 import pytest
 
 from methanol_web_crawler_spark.config import default_config
+from methanol_web_crawler_spark.oracle.crawler import OracleCrawler
 from methanol_web_crawler_spark.plans.crawl import SparkCrawler
 from methanol_web_crawler_spark.sources.synthweb import generate_web
-from tests.test_crawl_golden import run_both, seen_of
+from tests.test_crawl_golden import seen_of
 
 
 def _modes(stats):
@@ -25,10 +26,16 @@ def _modes(stats):
 
 
 def _run(spark, web, threshold):
-    return run_both(
-        spark, web, default_config(robotstxt=True), "default", 3,
-        resolver_mode="auto", auto_jvm_threshold=threshold,
+    cfg = default_config(robotstxt=True)
+    oracle = OracleCrawler(web.doc_map, cfg, politeness_budget=3).run(
+        web.seeds
     )
+    engine = SparkCrawler(
+        spark, web.to_spark(spark), cfg, politeness_budget=3,
+        resolver_mode="auto",
+    )
+    engine.auto_jvm_threshold = threshold
+    return oracle, engine, engine.run(web.seeds)
 
 
 class TestAutoSwitchover:

@@ -296,9 +296,9 @@ class TestSeenCompaction:
         cfg = default_config()
         oracle = OracleCrawler(web.doc_map, cfg).run(web.seeds)
         engine = SparkCrawler(
-            spark, web.to_spark(spark), cfg,
-            state_dir=str(tmp_path), seen_compact_every=1,
+            spark, web.to_spark(spark), cfg, state_dir=str(tmp_path),
         )
+        engine.seen_compact_every = 1
         stats = engine.run(web.seeds)
         assert engine._seen_bucketed is not None  # compaction ran
         seen = {
@@ -317,21 +317,18 @@ class TestSeenCompaction:
 
         web = generate_web(n_docs=60, n_hosts=4, seed=99)
         cfg = default_config()
-        full = SparkCrawler(
-            spark, web.to_spark(spark), cfg,
-            state_dir=str(tmp_path / "full"), seen_compact_every=1,
-        )
+
+        def compacting(state_dir, **kw):
+            engine = SparkCrawler(
+                spark, web.to_spark(spark), cfg, state_dir=state_dir, **kw
+            )
+            engine.seen_compact_every = 1
+            return engine
+
+        full = compacting(str(tmp_path / "full"))
         want = full.run(web.seeds)
-        part = SparkCrawler(
-            spark, web.to_spark(spark), cfg,
-            state_dir=str(tmp_path / "part"), seen_compact_every=1,
-            max_rounds=2,
-        )
-        part.run(web.seeds)
-        cont = SparkCrawler(
-            spark, web.to_spark(spark), cfg,
-            state_dir=str(tmp_path / "part"), seen_compact_every=1,
-        )
+        compacting(str(tmp_path / "part"), max_rounds=2).run(web.seeds)
+        cont = compacting(str(tmp_path / "part"))
         got = cont.resume()
         assert cont._compact_round >= 1  # re-attached before looping
         seen_full = {
