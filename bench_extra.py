@@ -1,15 +1,14 @@
 #!/usr/bin/env python
-"""Round-6 optimization helper bench (guide §1.4): times individual
-declared queries in isolation with the noop sink so the computation is
-measured, not the collect/sink, and optionally re-times the crawl
-bench with per-round event-log profiling.
+"""Noop-sink query timer: times declared queries in isolation, writing
+each result to Spark's ``noop`` sink so the computation is measured,
+not a collect or a ``count()`` that may prune projected columns.
 
-NOT the driver bench — bench.py stays the frozen measurement contract.
+NOT the driver bench — bench.py stays the frozen measurement contract;
+this reuses its session (bench.make_spark) and query list. Crawl
+profiling is ``perfbench/run.py --workload crawl_wide --trace 1``.
 Usage:
-    python bench_extra.py queries [name ...]     # noop-sink timings
-    python bench_extra.py crawl                  # crawl with event log
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in bench.py;
-     BENCH_EXTRA_REPEAT (default 2) repeats per query.
+    python bench_extra.py [name ...]     # default: bench.BENCH_QUERIES
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in bench.py.
 """
 
 from __future__ import annotations
@@ -21,60 +20,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-REPEAT = int(os.environ.get("BENCH_EXTRA_REPEAT", "2"))
+from bench import BENCH_QUERIES, CPUS, SF_DIR, make_spark
 
-DEFAULT_QUERIES = [
-    "dedup_exact",
-    "dedup_minhash_lsh_pairs",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_components",
-    "ann_brute_topk",
-    "ann_lsh_topk",
-    "text_fingerprint",
-    "text_quality",
-    "events_sessionize",
-    "q10_politeness_window",
-    "f8_seen_antijoin",
-    "q8_priority_topk",
-]
-
-
-def make_spark(event_log_dir: str | None = None):
-    import bench
-
-    b = bench
-    builder = None
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("methanol-spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    )
-    if event_log_dir:
-        os.makedirs(event_log_dir, exist_ok=True)
-        builder = (
-            builder.config("spark.eventLog.enabled", "true")
-            .config("spark.eventLog.dir", event_log_dir)
-        )
-    _ = b  # bench imported only to assert the frozen contract exists
-    return builder.getOrCreate()
+REPEAT = 2  # samples per query
 
 
 def time_queries(names):
     from methanol_web_crawler_spark import entryqueries
 
-    spark = make_spark()
+    spark = make_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     out = {}
     for name in names:
@@ -92,19 +46,5 @@ def time_queries(names):
     print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "all": out}))
 
 
-def crawl_profiled(event_log_dir="/tmp/r06/spark-events"):
-    import bench
-
-    spark = make_spark(event_log_dir)
-    spark.sparkContext.setLogLevel("ERROR")
-    crawl = bench.run_crawl_bench(spark, SF_DIR)
-    print(json.dumps({"crawl": crawl, "event_log": event_log_dir}))
-    spark.stop()
-
-
 if __name__ == "__main__":
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
-    if cmd == "crawl":
-        crawl_profiled()
-    else:
-        time_queries(sys.argv[2:] or DEFAULT_QUERIES)
+    time_queries(sys.argv[1:] or BENCH_QUERIES)

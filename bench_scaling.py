@@ -10,9 +10,10 @@ streams (measured: ~27 GB/s aggregate at 4 procs, collapsing to
 ~20 GB/s TOTAL at 8+ procs, flat through 32). Past that knee, any
 memory-traffic-bound stage measures the host's saturated fabric, not
 the engine's plan — a real cluster adds a memory system with every
-executor. 2 -> 8 total cores stays inside the linear window on the 4N
-side; BENCH/BASELINE.md records the microbenchmark and the saturated
-8 -> 32 runs for comparison.
+executor. 2 -> 8 total cores keeps the 4N side at that knee instead
+of far past it (which caps measured efficiency near ~0.78-0.81 in
+healthy windows); BENCH/BASELINE.md records the microbenchmark and the
+saturated 8 -> 32 runs for comparison.
 
 Measures the STEADY-STATE crawl round — the unit of cluster work at a
 10^10-URL frontier: one BSP round (politeness window + robots gate +
@@ -40,22 +41,25 @@ from typing import Tuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# total cores per level; executors = cores / EXECUTOR_CORES.
-# Default: the committed recipe — 1 vs 4 executors of 2 cores
-# (LEVELS 2,8). SPARK_GRAFT_LEVELS="1,4" with
-# SPARK_GRAFT_EXECUTOR_CORES=1 selects the fully-linear-window
-# variant (see EXECUTOR_CORES note).
-LEVELS = tuple(
-    int(x)
-    for x in os.environ.get("SPARK_GRAFT_LEVELS", "2,8").split(",")
+from bench import (
+    DuringSampler,
+    host_probe,
+    read_proc_stat,
+    steal_delta,
+    window_flags,
+)
+
+# total cores per level (N vs 4N); executors = cores / EXECUTOR_CORES.
+# Every recorded run uses this shape (round-over-round comparability).
+LEVELS = (2, 8)
+EXECUTOR_CORES = 2
+EXECUTOR_MEM_MB = int(
+    os.environ.get("SPARK_GRAFT_EXECUTOR_MEM_MB", "12288")
 )
 # --bloom: run the mega-round with the frontier-sized bloom seen-filter
-# enabled (and, with metrics, record the anti-join input reduction)
+# and record the anti-join input reduction at each level
 _ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
 BLOOM = "--bloom" in sys.argv
-# --bloom-diag: ONE metric-collecting 8-core round instead of the
-# two-level timed pair — records bloom_definitely_new / bloom_maybe
-BLOOM_DIAG = "--bloom-diag" in sys.argv
 # Defaults ARE the committed recipe (BENCH/BASELINE.md): the
 # 24M-doc / 24k-host / every-3rd-URL mega-round.
 N_DOCS = int(_ARGS[0]) if len(_ARGS) > 0 else 24_000_000
@@ -66,31 +70,12 @@ DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 RESOLVER = os.environ.get("METHANOL_RESOLVER", "auto")
 
 
-# Executor shape: identical at both levels. Default = the committed
-# round-2/3 recipe (2-core/12g executors, 1 vs 4 of them). The
-# alternative 1-core/8g shape (SPARK_GRAFT_EXECUTOR_CORES=1 with
-# LEVELS=1,4) keeps BOTH levels inside the host fabric's measured
-# linear window (full per-stream bandwidth up to ~4 concurrent
-# streams, saturating past 8 — BENCH/BASELINE.md microbench); the
-# 2-core shape puts the 4N level at that knee, which caps measured
-# efficiency near ~0.78-0.81 in healthy windows. A real cluster adds
-# a full memory system with every executor, so the linear region is
-# the faithful analog — but the recorded PASSes use the committed
-# 2-core recipe for round-over-round comparability.
-EXECUTOR_CORES = int(
-    os.environ.get("SPARK_GRAFT_EXECUTOR_CORES", "2")
-)
-EXECUTOR_MEM_MB = int(
-    os.environ.get("SPARK_GRAFT_EXECUTOR_MEM_MB", "12288")
-)
-
-
 def make_spark(cpus: int, extra_conf: dict = None):
-    """Scaling-run session: ``local-cluster[N,8,mem]`` — REAL separate
+    """Scaling-run session: ``local-cluster[N,2,mem]`` — REAL separate
     executor JVM processes, the faithful in-sandbox stand-in for the
     north rule's "N and 4N executors". Each executor keeps the same
-    shape (8 cores / 24 GiB / own GC / own python workers) at both
-    levels, exactly how a cluster scales out.
+    shape (2 cores / 12 GiB by default / own GC / own python workers)
+    at both levels, exactly how a cluster scales out.
 
     Measured history (BENCH/BASELINE.md): plain ``local[N]`` shares ONE
     JVM across all tasks, and its memory/block-manager locks plus a
@@ -108,9 +93,6 @@ def make_spark(cpus: int, extra_conf: dict = None):
 
     os.makedirs("/dev/shm/spark-tmp", exist_ok=True)
     n_exec = max(1, cpus // EXECUTOR_CORES)
-    # executor JVMs would size G1 by the 32-core MACHINE; pin GC
-    # threads to the 8-core executor shape (identical at both levels)
-    gc_threads = max(2, (EXECUTOR_CORES * 5 + 7) // 8)
     builder = (
         SparkSession.builder.master(
             f"local-cluster[{n_exec},{EXECUTOR_CORES},{EXECUTOR_MEM_MB}]"
@@ -136,12 +118,11 @@ def make_spark(cpus: int, extra_conf: dict = None):
             "spark.executorEnv.PYTHONPATH",
             os.path.dirname(os.path.abspath(__file__)),
         )
+        # executor JVMs would size GC by the whole MACHINE; pin GC
+        # threads to the executor shape (identical at both levels)
         .config(
             "spark.executor.extraJavaOptions",
-            # GC threads pinned to the 8-core executor shape,
-            # identical at both levels
-            f"-XX:ParallelGCThreads={gc_threads}"
-            f" -XX:ConcGCThreads={max(1, gc_threads // 4)}",
+            f"-XX:ParallelGCThreads={EXECUTOR_CORES} -XX:ConcGCThreads=1",
         )
     )
     for k, v in (extra_conf or {}).items():
@@ -278,157 +259,7 @@ def register_bucketed_docs(spark, docs_path: str):
     return spark.table("docs_bucketed")
 
 
-def _copy_worker(q):
-    import numpy as np
-
-    arr = np.empty(100_000_000, dtype=np.uint8)
-    arr[:] = 7
-    t0 = time.time()
-    for _ in range(6):
-        b = arr.copy()
-        arr[0] = b[0]
-    q.put(time.time() - t0)
-
-
-# Probe gates — the SINGLE source of truth (bench.py and the hunter
-# scripts read these; keep the BASELINE.md verdict strings in sync).
-# FIRE = the loose firing gates attempts use; STRICT = the healthy
-# band a run's own per-level probes must sit inside to count as
-# clean-window evidence (see BENCH/BASELINE.md round-4/5 closings).
-PROBE_FIRE_COPY_MAX = 4.0
-PROBE_FIRE_COPY4_MAX = 10.0
-PROBE_STRICT_COPY_MAX = 2.2
-PROBE_STRICT_COPY4_MAX = 5.0
-
-
-def host_probe() -> dict:
-    """Host calibration, run right before each level: single-thread
-    CPU, single-stream copy, AND 4-stream aggregate copy. The VM's
-    capacity varies with time (sustained-load throttling / noisy
-    neighbors — measured 1.9x CPU and up to 23x copy slowdowns), and
-    the single-stream probe alone proved insufficient: the AGGREGATE
-    fabric bandwidth can degrade while one stream still looks healthy,
-    which hits the 4N level disproportionately. probe_copy4_s is the
-    slowest of 4 concurrent copy processes (healthy ~ 1.5-2x the
-    single-stream time; >>2x = the fabric is saturated by others)."""
-    import multiprocessing as mp
-
-    import numpy as np
-
-    t0 = time.time()
-    x = 0
-    for i in range(10_000_000):
-        x += i * i % 7
-    cpu_s = time.time() - t0
-    arr = np.empty(100_000_000, dtype=np.uint8)
-    arr[:] = 7
-    t0 = time.time()
-    for _ in range(10):
-        b = arr.copy()
-        arr[0] = b[0]
-    copy_s = time.time() - t0
-    ctx = mp.get_context("fork")
-    q = ctx.Queue()
-    procs = [ctx.Process(target=_copy_worker, args=(q,))
-             for _ in range(4)]
-    for p in procs:
-        p.start()
-    times = [q.get() for _ in procs]
-    for p in procs:
-        p.join()
-    # per-copy time of the slowest stream, normalized to the
-    # single-stream loop count (10 vs 6 iterations)
-    copy4_s = max(times) * (10 / 6)
-    return {"probe_cpu_s": round(cpu_s, 3),
-            "probe_copy_s": round(copy_s, 3),
-            "probe_copy4_s": round(copy4_s, 3)}
-
-
-def read_proc_stat() -> dict:
-    """Aggregate CPU jiffies from /proc/stat (USER_HZ=100). The steal
-    field is the hypervisor's own account of cycles our vCPUs wanted
-    but a neighbor VM got — an INTEGRAL over the measurement window,
-    so unlike the point-in-time copy probes it cannot miss
-    minutes-scale bursts (the round-5 ABA bisect's A2 anomaly:
-    pristine probes, 25% inflated wall). Read before/after each level;
-    the delta is the exact stolen-CPU cost of that level's window."""
-    with open("/proc/stat") as f:
-        v = list(map(int, f.readline().split()[1:]))
-    return {
-        "busy": (v[0] + v[1] + v[2]) / 100.0,  # user+nice+system s
-        "steal": v[7] / 100.0,
-    }
-
-
-def steal_delta(s0: dict, s1: dict) -> dict:
-    busy = s1["busy"] - s0["busy"]
-    steal = s1["steal"] - s0["steal"]
-    demand = busy + steal
-    return {
-        "steal_core_s": round(steal, 2),
-        "busy_core_s": round(busy, 2),
-        "steal_pct_of_demand": round(100 * steal / demand, 2)
-        if demand > 0 else 0.0,
-    }
-
-
-# A level whose hypervisor steal exceeds this share of its total CPU
-# demand ran in a contended window regardless of what the copy probes
-# said (calibration: quiet host measures ~0-1.1% under full 32-core
-# load; the walls-vs-history degraded band corresponds to far more).
-STEAL_CLEAN_PCT_MAX = 3.0
-
-
-class _DuringSampler:
-    """Samples the single-stream copy probe every ``period`` seconds
-    WHILE a level runs. Motivation (round-5 ABA bisect, see
-    BENCH/BASELINE.md): pristine before-level probes coexisted with
-    walls 1.6-2.2x off healthy history — the competing load varies on
-    a minutes scale and a point-in-time probe cannot certify a quiet
-    window. A sustained sample can. Cost: ~1 GB of memory traffic per
-    sample per ~20 s, <5% of fabric bandwidth, identical at both
-    levels so it cancels out of the efficiency ratio."""
-
-    def __init__(self, period: float = 20.0):
-        import threading
-
-        self.period = period
-        self.samples = []
-        self._stop = threading.Event()
-        self._t = threading.Thread(target=self._loop, daemon=True)
-
-    def _loop(self):
-        import numpy as np
-
-        arr = np.empty(100_000_000, dtype=np.uint8)
-        arr[:] = 7
-        while not self._stop.wait(self.period):
-            t0 = time.time()
-            for _ in range(10):
-                b = arr.copy()
-                arr[0] = b[0]
-            self.samples.append(round(time.time() - t0, 3))
-
-    def start(self):
-        self._t.start()
-        return self
-
-    def stop(self) -> dict:
-        self._stop.set()
-        self._t.join(timeout=30)
-        s = self.samples
-        if not s:
-            return {"probe_during_n": 0}
-        return {
-            "probe_during_n": len(s),
-            "probe_during_copy_min_s": min(s),
-            "probe_during_copy_mean_s": round(sum(s) / len(s), 3),
-            "probe_during_copy_max_s": max(s),
-        }
-
-
-def run_at(cpus: int, docs_path: str, frontier_path: str,
-           collect_metrics: bool = False) -> dict:
+def run_at(cpus: int, docs_path: str, frontier_path: str) -> dict:
     from methanol_web_crawler_spark.config import default_config
     from methanol_web_crawler_spark.plans.crawl import SparkCrawler
 
@@ -443,20 +274,21 @@ def run_at(cpus: int, docs_path: str, frontier_path: str,
         n_frontier = frontier.count()  # materialized before the clock
 
         cfg = default_config(robotstxt=True)
+        # collect_metrics stays at its default (on): the per-round row
+        # rides on the round's checkpoint jobs, so a store-less crawl
+        # runs no extra job for it
         crawler = SparkCrawler(
             spark, docs, cfg, politeness_budget=0,
-            strict_order=False, collect_metrics=collect_metrics,
-            max_rounds=1, resolver_mode=RESOLVER,
+            strict_order=False, max_rounds=1, resolver_mode=RESOLVER,
             # frontier-sized bloom (~9.6 bits/key at 1% FP): the
             # expected seen-key population of the mega-round is the
             # frontier plus its distinct admitted links ~ 3x frontier
-            bloom_buckets=64 if BLOOM or BLOOM_DIAG else 0,
+            bloom_buckets=64 if BLOOM else 0,
             bloom_expected_keys=(
-                3 * (N_DOCS // FRONTIER_EVERY)
-                if BLOOM or BLOOM_DIAG else None
+                3 * (N_DOCS // FRONTIER_EVERY) if BLOOM else None
             ),
         )
-        sampler = _DuringSampler().start()
+        sampler = DuringSampler().start()
         st0 = read_proc_stat()
         t0 = time.time()
         stats = crawler.run_frontier(frontier)
@@ -477,204 +309,41 @@ def run_at(cpus: int, docs_path: str, frontier_path: str,
             **probe,
             **during,
             **steal,
+            **window_flags([probe], during, steal),
         }
-        if collect_metrics and stats.per_round:
-            r0 = stats.per_round[0]
-            if "bloom_maybe" in r0:
-                out["bloom_definitely_new"] = r0["bloom_definitely_new"]
-                out["bloom_maybe"] = r0["bloom_maybe"]
+        r0 = stats.per_round[0] if stats.per_round else {}
+        if "bloom_maybe" in r0:
+            # exact-anti-join probe volume the bloom layer removed
+            new, maybe = r0["bloom_definitely_new"], r0["bloom_maybe"]
+            out["bloom_definitely_new"] = new
+            out["bloom_maybe"] = maybe
+            out["bloom_reduction"] = (
+                round(new / (new + maybe), 4) if new + maybe else None
+            )
         return out
     finally:
         spark.stop()
 
 
+FLAGS = ("host_healthy", "sustained_clean", "steal_clean")
+
+
 def main():
     docs_path, frontier_path = materialize_inputs()
-    if BLOOM_DIAG:
-        # one metric-collecting round at the 4N level: records the
-        # exact-anti-join probe volume the bloom layer removed
-        r = run_at(LEVELS[1], docs_path, frontier_path,
-                   collect_metrics=True)
-        cand = r.get("bloom_definitely_new", 0) + r.get(
-            "bloom_maybe", 0
-        )
-        r["bloom_reduction"] = round(
-            r.get("bloom_definitely_new", 0) / cand, 4
-        ) if cand else None
-        print(json.dumps({"mode": "bloom-diag", "n_docs": N_DOCS,
-                          "n_hosts": N_HOSTS, **r}))
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/BASELINE.md", "a") as f:
-            f.write(
-                f"\n## Bloom seen-filter diagnostic ({N_DOCS} docs, "
-                f"frontier-sized bloom, {LEVELS[1]} cores)\n\n"
-                f"candidates after in-batch dedup: {cand}; "
-                f"bloom rejected (definitely new, skip exact "
-                f"anti-join): {r.get('bloom_definitely_new')}; "
-                f"maybe-seen (probe the exact join): "
-                f"{r.get('bloom_maybe')} -> anti-join input reduced "
-                f"{(r['bloom_reduction'] or 0) * 100:.1f}% "
-                f"(wall {r['wall_sec']} s with metric counts on).\n"
-            )
-        return
-    # Run the 4N level FIRST: the pair's binding constraint is host
-    # memory/aggregate bandwidth during the 8-core run (round-3 run 3
-    # PASSED 0.809 with a sick 2c copy4 probe; every round-4/5 failure
-    # had sick probes at the 8c level), and today's clean windows last
-    # only a poll or two — so the short, bandwidth-sensitive level gets
-    # the freshest part of the window, right at hunter fire time. The
-    # levels are independent sessions over the same pre-materialized
-    # inputs; efficiency math is order-free (reported lo-first as
-    # always).
-    #
-    # Per-LEVEL retry (round-5 session 3): a level whose OWN integral
-    # verdicts come back dirty (steal > STEAL_CLEAN_PCT_MAX, or
-    # during-run copy mean past the strict band) measured the
-    # neighbor, not the engine — rerun just that level up to
-    # LEVEL_RETRIES times instead of discarding the whole pair. This
-    # is the pre-registered discard rule applied at level granularity,
-    # mechanically, with every discarded try recorded in the section.
-    def level_quiet(r: dict) -> bool:
-        if r.get("steal_pct_of_demand", 0) > STEAL_CLEAN_PCT_MAX:
-            return False
-        if r.get("probe_during_n") and r.get(
-            "probe_during_copy_mean_s", 0
-        ) > PROBE_STRICT_COPY_MAX:
-            return False
-        return True
-
-    LEVEL_RETRIES = int(os.environ.get("SPARK_GRAFT_LEVEL_RETRIES", "2"))
-    discarded_tries = []
-    by_level = {}
-    for c in sorted(LEVELS, reverse=True):
-        tries = []
-        for attempt in range(1 + LEVEL_RETRIES):
-            r = run_at(c, docs_path, frontier_path)
-            tries.append(r)
-            if level_quiet(r):
-                break
-            print(json.dumps({"level_retry": c, "try": attempt + 1,
-                              "discarded_wall_s": r["wall_sec"],
-                              "steal_pct": r["steal_pct_of_demand"],
-                              "during_mean": r.get(
-                                  "probe_during_copy_mean_s")}),
-                  file=sys.stderr)
-            time.sleep(20)
-        # keep the QUIETEST try, not the last: with retries exhausted
-        # the last try can be dirtier than an earlier discard (round-5
-        # attempt 2 paired during-mean 3.2 s after discarding a 2.33 s
-        # try). Every try is a complete deterministic run of the same
-        # job over the same input, so the least-contended one is the
-        # best measurement of the engine; the rest are recorded as
-        # discards either way.
-        by_level[c] = min(
-            tries,
-            key=lambda r: (
-                not level_quiet(r),
-                r.get("probe_during_copy_mean_s", 0.0),
-                r.get("steal_pct_of_demand", 0.0),
-            ),
-        )
-        discarded_tries.extend(
-            t for t in tries if t is not by_level[c]
-        )
+    # The levels are independent sessions over the same
+    # pre-materialized inputs, so the efficiency math is order-free;
+    # the short, bandwidth-sensitive 4N level runs first, on the
+    # freshest part of the window (it bound every recorded failure).
+    by_level = {
+        c: run_at(c, docs_path, frontier_path)
+        for c in sorted(LEVELS, reverse=True)
+    }
     results = [by_level[c] for c in LEVELS]
     r_lo, r_hi = results
     eff = (r_hi["urls_per_sec"] / r_lo["urls_per_sec"]) / (
         LEVELS[1] / LEVELS[0]
     )
-    n_lo = max(1, LEVELS[0] // EXECUTOR_CORES)
-    n_hi = max(1, LEVELS[1] // EXECUTOR_CORES)
-    # Mechanical probe-gate verdict, written WITH the run (round-4
-    # lesson: nine sick-probe runs were recorded as plain BELOW and
-    # had to be adjudicated after the fact). Gates = the hunter's
-    # firing gates; a flagged run is DISCARDED pending written
-    # adjudication, a clean run stands on its own.
-    violations = [
-        f"{r['cpus']}c {k.split('_')[1]} {r[k]}s > {lim}s"
-        for r in results
-        for k, lim in (("probe_copy_s", PROBE_FIRE_COPY_MAX),
-                       ("probe_copy4_s", PROBE_FIRE_COPY4_MAX))
-        if r.get(k, 0) > lim
-    ]
-    # the STRICT healthy band: a run can pass the firing gates yet
-    # sit outside the band — record both so adjudication is mechanical
-    strict_viol = [
-        f"{r['cpus']}c {k.split('_')[1]} {r[k]}s > {lim}s"
-        for r in results
-        for k, lim in (("probe_copy_s", PROBE_STRICT_COPY_MAX),
-                       ("probe_copy4_s", PROBE_STRICT_COPY4_MAX))
-        if r.get(k, 0) > lim
-    ]
-    probe_verdict = (
-        "PROBE-GATE FLAGGED — DISCARD pending adjudication ("
-        + "; ".join(violations) + ")" if violations
-        else "probe-clean, INSIDE the strict healthy band (copy < "
-        "2.2 s, copy4 < 5 s at both levels)" if not strict_viol
-        else "probe-clean at the firing gates but OUTSIDE the strict"
-        " healthy band (" + "; ".join(strict_viol) + ") — treat as"
-        " degraded-window evidence"
-    )
-    # Sustained verdict (round-5 ABA lesson): the during-run copy
-    # samples are the only signal that can certify a QUIET window —
-    # before-level probes bound obviously-sick ones. v2 (pre-registered
-    # 2026-08-18 01:00 UTC, see the BASELINE.md note): certify on the
-    # MEAN during-run copy, the same statistic as the in-run retry
-    # gate. v1 certified on the max-of-n, which (a) contradicted the
-    # retry gate — a level could pass retries at mean 1.39 s and be
-    # decertified by one 20 s transient among n=8 samples — and (b) is
-    # a noisy extreme whose false-alarm rate grows with level length,
-    # while the statistic that actually moves the wall is the integral
-    # (mean). The max and the dip count stay RECORDED in every verdict
-    # so a max-heavy window remains visible to adjudication.
-    sustained_viol = [
-        f"{r['cpus']}c during-copy mean "
-        f"{r['probe_during_copy_mean_s']}s > {PROBE_STRICT_COPY_MAX}s"
-        for r in results
-        if r.get("probe_during_n")
-        and r["probe_during_copy_mean_s"] > PROBE_STRICT_COPY_MAX
-    ]
-    dips = [
-        f"{r['cpus']}c max {r['probe_during_copy_max_s']}s"
-        for r in results
-        if r.get("probe_during_n")
-        and r["probe_during_copy_max_s"] > PROBE_STRICT_COPY_MAX
-    ]
-    dip_note = (
-        " (transient dips past the band: " + ", ".join(dips) + ")"
-        if dips else ""
-    )
-    has_during = any(r.get("probe_during_n") for r in results)
-    sustained_verdict = (
-        "" if not has_during
-        else "CLEAN — during-run copy MEAN inside the strict band at "
-        "both levels; this window is certified quiet" + dip_note
-        if not sustained_viol
-        else "DEGRADED DURING RUN (" + "; ".join(sustained_viol)
-        + ")" + dip_note
-        + " — walls include invisible-to-point-probe contention"
-    )
-    # Steal verdict: /proc/stat steal integrated over each level — the
-    # one signal that covers the ENTIRE window (copy probes are points,
-    # the during-sampler is 20 s grained). Clean = hypervisor stole
-    # under STEAL_CLEAN_PCT_MAX of each level's CPU demand.
-    steal_viol = [
-        f"{r['cpus']}c steal {r['steal_pct_of_demand']}% of demand "
-        f"({r['steal_core_s']} core-s) > {STEAL_CLEAN_PCT_MAX}%"
-        for r in results
-        if r.get("steal_pct_of_demand", 0) > STEAL_CLEAN_PCT_MAX
-    ]
-    has_steal = any("steal_pct_of_demand" in r for r in results)
-    steal_verdict = (
-        "" if not has_steal
-        else "CLEAN — hypervisor steal "
-        + ", ".join(f"{r['cpus']}c {r['steal_pct_of_demand']}%"
-                    for r in results)
-        + " of CPU demand (integral over each level)"
-        if not steal_viol
-        else "CPU-CONTENDED (" + "; ".join(steal_viol)
-        + ") — a neighbor VM took cycles during the run itself"
-    )
+    n_lo, n_hi = (c // EXECUTOR_CORES for c in LEVELS)
     stamp = time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime())
     out = {
         "mode": "steady-state mega-round",
@@ -691,10 +360,7 @@ def main():
         f"local-cluster[{n_hi},{EXECUTOR_CORES}]: N vs 4N real "
         "executor JVMs)",
         "passes": eff >= 0.8,
-        "probe_clean": not violations,
-        "strict_band": not (violations or strict_viol),
-        "sustained_clean": has_during and not sustained_viol,
-        "steal_clean": has_steal and not steal_viol,
+        **{k: all(r[k] for r in results) for k in FLAGS},
     }
     print(json.dumps(out))
 
@@ -723,49 +389,39 @@ def main():
                 f"| {r['urls_per_sec']} |\n"
             )
         f.write(
-            "\nhost-capacity probes before each level (single-thread "
-            "CPU / single-stream copy / slowest-of-4 aggregate copy): "
-            + ", ".join(
-                f"{r['cpus']}c: {r['probe_cpu_s']}s/"
-                f"{r['probe_copy_s']}s/"
-                f"{r.get('probe_copy4_s', 'n/a')}s"
-                for r in results
-            )
-            + "\n"
+            "\nHost window per level: probe before (CPU / copy / "
+            "slowest-of-4 copy s), during-run copy samples (min / mean "
+            "/ max s over n, every ~20 s), hypervisor steal (% of CPU "
+            "demand), quiet-window flags (bench.window_flags)"
+            + (", bloom counters (definitely new / maybe seen -> "
+               "anti-join input reduction)" if BLOOM else "")
+            + ":\n\n"
         )
-        if discarded_tries:
-            f.write(
-                "\nIn-run level retries (dirty integral verdicts, "
-                "discarded mechanically before pairing): "
-                + ", ".join(
-                    f"{d['cpus']}c wall {d['wall_sec']}s (steal "
-                    f"{d['steal_pct_of_demand']}%, during-copy mean "
-                    f"{d.get('probe_during_copy_mean_s', 'n/a')}s)"
-                    for d in discarded_tries
-                )
-                + "\n"
+        for r in results:
+            during = (
+                f"{r['probe_during_copy_min_s']}/"
+                f"{r['probe_during_copy_mean_s']}/"
+                f"{r['probe_during_copy_max_s']}s"
+                if r["probe_during_n"] else "none"
             )
-        if any(r.get("probe_during_n") for r in results):
+            bloom = (
+                f"; bloom {r['bloom_definitely_new']}/{r['bloom_maybe']}"
+                f" -> {r['bloom_reduction']}"
+                if "bloom_maybe" in r else ""
+            )
             f.write(
-                "\nSUSTAINED during-run copy samples (every ~20 s "
-                "while the level runs; min/mean/max over n samples): "
-                + ", ".join(
-                    f"{r['cpus']}c: "
-                    f"{r.get('probe_during_copy_min_s', 'n/a')}/"
-                    f"{r.get('probe_during_copy_mean_s', 'n/a')}/"
-                    f"{r.get('probe_during_copy_max_s', 'n/a')}s "
-                    f"(n={r.get('probe_during_n', 0)})"
-                    for r in results
-                )
-                + "\n"
+                f"- {r['cpus']}c: probe {r['probe_cpu_s']}/"
+                f"{r['probe_copy_s']}/{r['probe_copy4_s']}s; during "
+                f"{during} (n={r['probe_during_n']}); steal "
+                f"{r['steal_pct_of_demand']}% ({r['steal_core_s']} "
+                f"core-s); "
+                + ", ".join(f"{k}={r[k]}" for k in FLAGS)
+                + bloom + "\n"
             )
         f.write(
             f"\nscaling efficiency (tput@{LEVELS[1]} / "
             f"tput@{LEVELS[0]}) / 4 = **{eff:.3f}** — "
-            f"{'PASS' if eff >= 0.8 else 'BELOW'} the ≥0.8 criterion. "
-            f"Probe verdict: {probe_verdict}."
-            f"{' Sustained verdict: ' + sustained_verdict + '.' if sustained_verdict else ''}"
-            f"{' Steal verdict: ' + steal_verdict + '.' if steal_verdict else ''}\n"
+            f"{'PASS' if eff >= 0.8 else 'BELOW'} the ≥0.8 criterion.\n"
         )
 
 

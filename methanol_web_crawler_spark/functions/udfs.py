@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 from ..config import CrawlConfig
 from ..functions.canonicalize import ParsedUrl, add_url
 from ..functions.classify import FT, HEAD, FtIndex
-from ..functions.robots import parse_robots, robots_allows
+from ..functions.robots import parse_robots
 from ..operators.admission import (
     R_DISCARD,
     R_EXTERNAL,
@@ -393,18 +393,3 @@ def make_robots_parser(user_agent: str):
         return pd.Series(out)
 
     return parse
-
-
-def robots_gate(rules_series: pd.Series, paths: pd.Series) -> pd.Series:
-    """pandas UDF body: first-prefix-match allow/deny per row."""
-    out = []
-    for rules, path in zip(rules_series, paths):
-        if rules is None or len(rules) == 0:
-            out.append(True)
-            continue
-        out.append(
-            robots_allows(
-                [(r["allow"], r["prefix"]) for r in rules], path
-            )
-        )
-    return pd.Series(out)

@@ -25,17 +25,10 @@ MINHASH_K = 16
 LSH_BANDS = 4  # 4 rows per band
 
 
-def _token_hash(col: str = "token", m: int = MINHASH_M):
-    """md5-derived integer token hash, portable to ANSI SQL."""
-    return (
-        F.conv(F.substring(F.md5(F.col(col)), 1, 15), 16, 10)
-        .cast("long") % F.lit(m)
-    )
-
-
 def _token_hash_of(tok, m: int = MINHASH_M):
-    """The same md5-derived hash over an arbitrary column/lambda arg
-    (for within-row higher-order expressions)."""
+    """md5-derived integer token hash, portable to ANSI SQL, over an
+    arbitrary column/lambda arg (for within-row higher-order
+    expressions)."""
     return (
         F.conv(F.substring(F.md5(tok), 1, 15), 16, 10)
         .cast("long") % F.lit(m)

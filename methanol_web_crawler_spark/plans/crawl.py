@@ -748,7 +748,8 @@ class SparkCrawler:
             # seed the filter with the initial seen keys — run() does
             # this for seed crawls; without it every frontier key
             # bypasses the exact anti-join as "definitely new" and the
-            # seen set inflates (caught by the --bloom-diag checksum)
+            # seen set inflates (a bench_scaling --bloom run's seen
+            # total shows it)
             self.bloom.update(seen.select("key_hash"))
         return self._loop(pending, seen, None, 0, CrawlStats())
 

@@ -7,17 +7,13 @@ tables (the reference is itself a batch loop per session — SURVEY.md
 - ``sessionize_stream``: gap-based session windows over an event
   stream (session_window + watermark) — the live twin of the batch
   ``events_sessionize`` query;
-- ``stream_new_targets`` / ``stream_crawl_log``: tail a crawl's
-  snapshot tables as a stream (file source over the parquet data
-  dirs), for continuous downstream consumers (metrics dashboards,
-  incremental training-data exports);
 - ``windowed_fetch_rates``: tumbling-window fetch-rate aggregation
   with late-data tolerance.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -65,17 +61,4 @@ def windowed_fetch_rates(
             "host",
             "fetched",
         )
-    )
-
-
-def stream_table(
-    spark: SparkSession, store_root: str, table: str, schema
-) -> DataFrame:
-    """Tail a SnapshotTable's data directory as a file-source stream —
-    each crawl round's append becomes a micro-batch (the Iceberg-style
-    analog of a streaming table read)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(f"{store_root}/{table}/data/*")
     )
