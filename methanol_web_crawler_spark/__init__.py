@@ -11,7 +11,7 @@ idiomatic Spark DataFrame pipeline:
 - per-host politeness token buckets via salted windows,
 - robots.txt gating, ftindex classification, UMEX predicates and the
   html/text/css link extractors as vectorized pandas/Arrow UDFs,
-- per-round per-partition lineage + metrics; resumable from any
+- per-round per-file lineage + metrics; resumable from any
   snapshot.
 
 Nothing here is a port of the reference's C code: the reference

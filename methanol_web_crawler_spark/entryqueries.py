@@ -22,7 +22,7 @@ from .functions.classify import FtIndex
 from .functions.robots import robots_allows
 from .operators import dedup as dd
 from .operators import similarity as sim
-from .sources.synthweb import generate_web
+from .sources.synthweb import SynthDoc, SynthWeb, generate_web
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -327,7 +327,8 @@ def q8_priority_topk(spark, sf_dir):
 def q12_metrics_agg(spark, sf_dir):
     """Q12 session metrics through the REAL snapshot store
     (sources/tables.py): per-round metric deltas are appended to a
-    SnapshotTable (atomic manifest commits + lineage) and the final
+    SnapshotTable (one write job each, atomic manifest commits,
+    per-file row counts from the Parquet footers) and the final
     counters aggregate over read_until — the same write/read path the
     crawl's metrics/seen/frontier tables use. A broken append,
     manifest, or time-travel read changes the totals."""
@@ -346,7 +347,7 @@ def q12_metrics_agg(spark, sf_dir):
                 F.sum("event_id").alias("sum_event_id"),
             )
         )
-        store.table("metrics").append(delta, r, collect_lineage=True)
+        store.table("metrics").append(delta, r)
     merged = store.table("metrics").read_until(spark)
     return merged.groupBy("event_type").agg(
         F.sum("n_events").alias("n_events"),
@@ -1838,6 +1839,48 @@ def crawl_politeness(spark, sf_dir):
     )
 
 
+def _html_doc(url: str, body: str) -> SynthDoc:
+    """A one-text-span text/html synthetic page."""
+    return SynthDoc(url, [("text", body, None, 0)], "text/html")
+
+
+def _store_crawl(spark, web, cfg, tables, resume_after=None, **kw):
+    """Crawl ``web`` into a temporary snapshot store (no politeness
+    budget, no per-round metrics) and return the collected rows of
+    each named store table, [] for one never written. With
+    ``resume_after=k`` the first engine stops after k rounds and a
+    second one resumes the same store to completion."""
+    import tempfile
+
+    from .plans.crawl import SparkCrawler
+
+    docs = web.to_spark(spark)
+    with tempfile.TemporaryDirectory() as td:
+        def engine(**more):
+            return SparkCrawler(
+                spark, docs, cfg, politeness_budget=0,
+                collect_metrics=False, state_dir=td, **kw, **more,
+            )
+
+        if resume_after is None:
+            crawler = engine()
+            crawler.run(web.seeds)
+        else:
+            engine(max_rounds=resume_after).run(web.seeds)
+            crawler = engine()
+            crawler.resume()
+        frames = [crawler.store.table(t).read_until(spark) for t in tables]
+        return [df.collect() if df is not None else [] for df in frames]
+
+
+def _log_frame(spark, log):
+    """(round, depth, url) of crawl-log rows."""
+    return spark.createDataFrame(
+        [(r["round"], r["depth"], r["url"]) for r in log],
+        "round int, depth int, url string",
+    )
+
+
 # Golden writefile sink rows (S9), generated ONCE from the pure-Python
 # oracle over generate_web(seed=42) per sf size (engine parity also
 # enforced by tests/test_writefile.py). A writefile crawl expands only
@@ -1864,26 +1907,17 @@ def crawl_writefile(spark, sf_dir):
     the html filetype bound to writefile; return the files-sink rows
     (url, dedup-suffixed filename). Oracle: literal golden VALUES from
     the pure-Python oracle (builtin.c:63-133 naming)."""
-    import tempfile
-
     from .config import writefile_config
-    from .plans.crawl import SparkCrawler
 
     n_docs, n_hosts = _sf_params(sf_dir)
     web = generate_web(n_docs=n_docs, n_hosts=n_hosts, seed=42)
-    cfg = writefile_config(robotstxt=True)
-    with tempfile.TemporaryDirectory() as td:
-        crawler = SparkCrawler(
-            spark, web.to_spark(spark), cfg, politeness_budget=0,
-            collect_metrics=False, state_dir=td,
-        )
-        crawler.run(web.seeds)
-        fdf = crawler.store.table("files").read_until(spark)
-        rows = (
-            [(r["url"], r["filename"]) for r in fdf.collect()]
-            if fdf is not None else []
-        )
-    return spark.createDataFrame(rows, "url string, filename string")
+    (files,) = _store_crawl(
+        spark, web, writefile_config(robotstxt=True), ["files"]
+    )
+    return spark.createDataFrame(
+        [(r["url"], r["filename"]) for r in files],
+        "url string, filename string",
+    )
 
 
 # Golden fetch log for the S6 FTP crawl (conf/ftp.conf semantics over
@@ -1915,10 +1949,8 @@ def crawl_ftp(spark, sf_dir):
     deterministic FTP tree; returns the crawl log (round, depth, url).
     Oracle: literal golden VALUES from the pure-Python oracle."""
     import dataclasses
-    import tempfile
 
     from .config_loader import load_config
-    from .plans.crawl import SparkCrawler
     from .sources.synthweb import generate_ftp_web
 
     cfg = load_config(
@@ -1935,21 +1967,8 @@ def crawl_ftp(spark, sf_dir):
         ),
     )
     cfg.validate()
-    web = generate_ftp_web()
-    with tempfile.TemporaryDirectory() as td:
-        crawler = SparkCrawler(
-            spark, web.to_spark(spark), cfg, politeness_budget=0,
-            collect_metrics=False, state_dir=td,
-        )
-        crawler.run(web.seeds)
-        log = crawler.store.table("crawl_log").read_until(spark)
-        rows = (
-            [(r["round"], r["depth"], r["url"]) for r in log.collect()]
-            if log is not None else []
-        )
-    return spark.createDataFrame(
-        rows, "round int, depth int, url string"
-    )
+    (log,) = _store_crawl(spark, generate_ftp_web(), cfg, ["crawl_log"])
+    return _log_frame(spark, log)
 
 
 # Golden crawl log for the residue-path jvm crawl: a web whose links
@@ -1977,11 +1996,7 @@ _RESIDUE_JVM_GOLDEN_SQL = """
 
 
 def _residue_web():
-    from .sources.synthweb import SynthDoc, SynthWeb
-
-    def h(url, body):
-        return SynthDoc(url, [("text", body, None, 0)], "text/html")
-
+    h = _html_doc
     docs = [
         h("http://r1.test/d/index.html",
           '<a href="fast.html">f</a>'
@@ -2012,26 +2027,11 @@ def crawl_residue_jvm(spark, sf_dir):
     crawl log. Oracle: literal golden VALUES from the pure-Python
     oracle — parity proves the fast/residue routing loses no link and
     double-admits none."""
-    import tempfile
-
-    from .plans.crawl import SparkCrawler
-
-    web = _residue_web()
-    with tempfile.TemporaryDirectory() as td:
-        crawler = SparkCrawler(
-            spark, web.to_spark(spark), default_config(),
-            politeness_budget=0, collect_metrics=False, state_dir=td,
-            resolver_mode="jvm",
-        )
-        crawler.run(web.seeds)
-        log = crawler.store.table("crawl_log").read_until(spark)
-        rows = (
-            [(r["round"], r["depth"], r["url"]) for r in log.collect()]
-            if log is not None else []
-        )
-    return spark.createDataFrame(
-        rows, "round int, depth int, url string"
+    (log,) = _store_crawl(
+        spark, _residue_web(), default_config(), ["crawl_log"],
+        resolver_mode="jvm",
     )
+    return _log_frame(spark, log)
 
 
 # Golden attribute targets for the title.conf crawl: the reference's
@@ -2064,11 +2064,8 @@ def crawl_title_conf(spark, sf_dir):
     (default.conf leaves the reference default of 1, crawler.c:47).
     Oracle: literal golden VALUES from the pure-Python oracle."""
     import dataclasses
-    import tempfile
 
     from .config_loader import load_config
-    from .plans.crawl import SparkCrawler
-    from .sources.synthweb import SynthDoc, SynthWeb
 
     cfg = load_config(
         "/root/reference/conf/title.conf",
@@ -2091,10 +2088,7 @@ def crawl_title_conf(spark, sf_dir):
         ),
     )
     cfg.validate()
-
-    def h(url, body):
-        return SynthDoc(url, [("text", body, None, 0)], "text/html")
-
+    h = _html_doc
     web = SynthWeb(
         docs=[
             h("http://t1.test/index.html",
@@ -2111,19 +2105,12 @@ def crawl_title_conf(spark, sf_dir):
         seeds=["http://t1.test/index.html",
                "http://t2.test/index.html"],
     )
-    with tempfile.TemporaryDirectory() as td:
-        crawler = SparkCrawler(
-            spark, web.to_spark(spark), cfg, politeness_budget=0,
-            collect_metrics=False, state_dir=td,
-        )
-        crawler.run(web.seeds)
-        tdf = crawler.store.table("attr_targets").read_until(spark)
-        rows = (
-            [(r["url"], r["attributes"]["title"]) for r in tdf.collect()
-             if "title" in r["attributes"]]
-            if tdf is not None else []
-        )
-    return spark.createDataFrame(rows, "url string, title string")
+    (attrs,) = _store_crawl(spark, web, cfg, ["attr_targets"])
+    return spark.createDataFrame(
+        [(r["url"], r["attributes"]["title"]) for r in attrs
+         if "title" in r["attributes"]],
+        "url string, title string",
+    )
 
 
 # Golden target rows for the google.conf conf-fixture entry: the
@@ -2154,11 +2141,7 @@ def crawl_google_conf(spark, sf_dir):
     anchors (the decoy link is dropped), and FULL<*> routes them to
     the 'result' target table (S12). Oracle: literal golden VALUES
     from the pure-Python oracle crawler."""
-    import tempfile
-
     from .config_loader import load_config
-    from .plans.crawl import SparkCrawler
-    from .sources.synthweb import SynthDoc, SynthWeb
 
     cfg = load_config(
         "/root/reference/conf/google.conf",
@@ -2169,22 +2152,14 @@ def crawl_google_conf(spark, sf_dir):
             '<a class="decoy" href="http://no.example/">no</a>'
             '<A CLASS="l" HREF="http://r2.example/hit2">b</A>')
     web = SynthWeb(
-        docs=[SynthDoc(search_url, [("text", body, None, 0)],
-                       "text/html")],
+        docs=[_html_doc(search_url, body)],
         seeds=["spark crawl"],  # raw query — init composes the URL
     )
-    with tempfile.TemporaryDirectory() as td:
-        crawler = SparkCrawler(
-            spark, web.to_spark(spark), cfg, politeness_budget=0,
-            collect_metrics=False, state_dir=td,
-        )
-        crawler.run(web.seeds)
-        tdf = crawler.store.table("targets").read_until(spark)
-        rows = (
-            sorted((r["url"], r["filetype"]) for r in tdf.collect())
-            if tdf is not None else []
-        )
-    return spark.createDataFrame(rows, "url string, filetype string")
+    (targets,) = _store_crawl(spark, web, cfg, ["targets"])
+    return spark.createDataFrame(
+        sorted((r["url"], r["filetype"]) for r in targets),
+        "url string, filetype string",
+    )
 
 
 # Golden attr rows for the xmlsource.conf conf-fixture entry: the
@@ -2224,11 +2199,8 @@ def crawl_xmlsource_conf(spark, sf_dir):
     html_to_xml the pytest golden asserts against the reference
     behavior)."""
     import dataclasses
-    import tempfile
 
     from .config_loader import load_config
-    from .plans.crawl import SparkCrawler
-    from .sources.synthweb import SynthDoc, SynthWeb
 
     cfg = load_config(
         "/root/reference/conf/xmlsource.conf",
@@ -2246,10 +2218,7 @@ def crawl_xmlsource_conf(spark, sf_dir):
         ),
     )
     cfg.validate()
-
-    def h(url, body):
-        return SynthDoc(url, [("text", body, None, 0)], "text/html")
-
+    h = _html_doc
     web = SynthWeb(
         docs=[
             h("http://x9.test/index.html",
@@ -2262,20 +2231,12 @@ def crawl_xmlsource_conf(spark, sf_dir):
         ],
         seeds=["http://x9.test/index.html"],
     )
-    with tempfile.TemporaryDirectory() as td:
-        crawler = SparkCrawler(
-            spark, web.to_spark(spark), cfg, politeness_budget=0,
-            collect_metrics=False, state_dir=td,
-        )
-        crawler.run(web.seeds)
-        tdf = crawler.store.table("attr_targets").read_until(spark)
-        rows = (
-            [(r["url"], r["attributes"]["xmlsource"])
-             for r in tdf.collect()
-             if "xmlsource" in r["attributes"]]
-            if tdf is not None else []
-        )
-    return spark.createDataFrame(rows, "url string, xmlsource string")
+    (attrs,) = _store_crawl(spark, web, cfg, ["attr_targets"])
+    return spark.createDataFrame(
+        [(r["url"], r["attributes"]["xmlsource"]) for r in attrs
+         if "xmlsource" in r["attributes"]],
+        "url string, xmlsource string",
+    )
 
 
 # Golden crawl log for the stop/resume entry: a 4-round chain web
@@ -2307,17 +2268,7 @@ def crawl_resume(spark, sf_dir):
     pure-Python oracle's UNINTERRUPTED run — equality proves the
     snapshot store (S13 frontier + F8 seen + log) round-trips the
     whole crawl state across a kill/restart boundary."""
-    import tempfile
-
-    from .plans.crawl import SparkCrawler
-
-    def h(url, body):
-        from .sources.synthweb import SynthDoc
-
-        return SynthDoc(url, [("text", body, None, 0)], "text/html")
-
-    from .sources.synthweb import SynthWeb
-
+    h = _html_doc
     web = SynthWeb(
         docs=[
             h("http://rs.test/index.html",
@@ -2332,26 +2283,10 @@ def crawl_resume(spark, sf_dir):
         ],
         seeds=["http://rs.test/index.html"],
     )
-    with tempfile.TemporaryDirectory() as td:
-        docs_df = web.to_spark(spark)
-        interrupted = SparkCrawler(
-            spark, docs_df, default_config(), politeness_budget=0,
-            collect_metrics=False, state_dir=td, max_rounds=2,
-        )
-        interrupted.run(web.seeds)
-        resumed = SparkCrawler(
-            spark, docs_df, default_config(), politeness_budget=0,
-            collect_metrics=False, state_dir=td,
-        )
-        resumed.resume()
-        log = resumed.store.table("crawl_log").read_until(spark)
-        rows = (
-            [(r["round"], r["depth"], r["url"]) for r in log.collect()]
-            if log is not None else []
-        )
-    return spark.createDataFrame(
-        rows, "round int, depth int, url string"
+    (log,) = _store_crawl(
+        spark, web, default_config(), ["crawl_log"], resume_after=2
     )
+    return _log_frame(spark, log)
 
 
 _JACCARD_EDGES_SQL = """
@@ -2787,11 +2722,10 @@ def composed_web():
     confinement (+ escape via the un-jailed inner crawler), a peek
     chain with its own per-host jail, the relative-link-on-peeked-page
     EXTERNAL-inheritance quirk, no peek nesting, and the peek budget."""
-    from .sources.synthweb import SynthDoc, SynthWeb
-
     def doc(url, hrefs):
-        body = "".join(f'<a href="{h}">x</a>' for h in hrefs)
-        return SynthDoc(url, [("text", body, None, 0)], "text/html")
+        return _html_doc(
+            url, "".join(f'<a href="{h}">x</a>' for h in hrefs)
+        )
 
     docs = [
         # seed dir /sub -> the outer crawl's jail
@@ -2838,28 +2772,12 @@ def crawl_composed_epeek_jail_switch(spark, sf_dir):
     also in tests/test_crawl_composed.py). The web is fixed (not
     sf-scaled) — the semantics under test are routing decisions, not
     volume."""
-    import tempfile
-
-    from .plans.crawl import SparkCrawler
-
-    web = composed_web()
-    cfg = composed_config()
-    with tempfile.TemporaryDirectory() as td:
-        crawler = SparkCrawler(
-            spark, web.to_spark(spark), cfg, crawler="outer",
-            politeness_budget=0, collect_metrics=False, state_dir=td,
-        )
-        crawler.run(web.seeds)
-        log = crawler.store.table("crawl_log").read_until(spark)
-        rows = [
-            ("fetch", r["round"], r["depth"], r["url"])
-            for r in log.collect()
-        ]
-        tdf = crawler.store.table("targets").read_until(spark)
-        if tdf is not None:
-            rows += [
-                ("target", -1, -1, r["url"]) for r in tdf.collect()
-            ]
+    log, targets = _store_crawl(
+        spark, composed_web(), composed_config(),
+        ["crawl_log", "targets"], crawler="outer",
+    )
     return spark.createDataFrame(
-        rows, "kind string, round int, depth int, url string"
+        [("fetch", r["round"], r["depth"], r["url"]) for r in log]
+        + [("target", -1, -1, r["url"]) for r in targets],
+        "kind string, round int, depth int, url string",
     )

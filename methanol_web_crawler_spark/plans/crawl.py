@@ -655,8 +655,7 @@ class SparkCrawler:
         if not k or r % k != k - 1:
             return
         self.store.table("seen_bucketed").append(
-            self._read_seen(), r, collect_lineage=False,
-            bucket_by=("seen_key", SEEN_BUCKETS),
+            self._read_seen(), r, bucket_by=("seen_key", SEEN_BUCKETS)
         )
         self._seen_bucketed = self.store.table(
             "seen_bucketed"
@@ -682,17 +681,15 @@ class SparkCrawler:
         pending, seen, seed_targets = self._admit_seeds(seeds)
         if self.store:
             # snapshot 0 — the resume baseline
-            self.store.table("seen").append(seen, 0, collect_lineage=False)
-            self.store.table("frontier").append(
-                pending, 0, collect_lineage=True
-            )
+            self.store.table("seen").append(seen, 0)
+            self.store.table("frontier").append(pending, 0)
             if seed_targets:
                 self.store.table("targets").append(
                     self.spark.createDataFrame(
                         [(t["url"], t["filetype"], 0) for t in seed_targets],
                         "url string, filetype string, round int",
                     ),
-                    0, collect_lineage=False,
+                    0,
                 )
         if self.bloom is not None:
             self.bloom.update(seen.select("key_hash"))
@@ -702,8 +699,8 @@ class SparkCrawler:
 
     def resume(self) -> CrawlStats:
         """Continue a crawl exactly from the latest snapshots (north
-        rule: resumable from any checkpoint with per-partition
-        lineage — see SnapshotTable manifests)."""
+        rule: resumable from any checkpoint with per-file lineage —
+        see SnapshotTable manifests)."""
         assert self.store is not None, "resume requires state_dir"
         spark = self.spark
         ft = self.store.table("frontier")
@@ -884,7 +881,7 @@ class SparkCrawler:
                     row["bloom_definitely_new"] = obs_bloom[0].get["n"]
                     row["bloom_maybe"] = obs_bloom[1].get["n"]
                 self._record_round(stats, row)
-            self._snapshot_state(r, hosts, jail, parked, names)
+            self._snapshot_state(r, d, hosts, jail, parked, names)
             # fetched is localCheckpointed — its blocks free via the
             # ContextCleaner when the reference drops next round
             if self.budget:
@@ -947,12 +944,9 @@ class SparkCrawler:
         new frontier (adopt_parked) and the parked state empties."""
         pending = adopt_parked(parked).persist()
         if self.store:
-            self.store.table("frontier").append(
-                pending, r, collect_lineage=True
-            )
+            self.store.table("frontier").append(pending, r)
             self.store.table("parked_state").append(
-                self.spark.createDataFrame([], FRONTIER_SCHEMA),
-                r, collect_lineage=False,
+                self.spark.createDataFrame([], FRONTIER_SCHEMA), r
             )
         return pending
 
@@ -1120,9 +1114,7 @@ class SparkCrawler:
             ]
             if self.log_spans:
                 log_cols.append("spans")
-            self.store.table("crawl_log").append(
-                fetched.select(*log_cols), r, collect_lineage=False
-            )
+            self.store.table("crawl_log").append(fetched.select(*log_cols), r)
         if not self.writefile_fts:
             return fetched, names
         return self._writefile_stage(fetched, names, r)
@@ -1207,7 +1199,7 @@ class SparkCrawler:
                     "url", "filetype", "filename", "body",
                     F.lit(round_no).alias("round"),
                 ),
-                round_no, collect_lineage=True,
+                round_no,
             )
 
         new_counts = wfb.groupBy("base").agg(
@@ -1251,9 +1243,9 @@ class SparkCrawler:
           builtin html whole-body one (html.c:179-183) — no Python;
         - the attrs-parser mapInPandas stage for filetypes whose chain
           sets named attributes (js.c set_attribute analog).
-        In store mode they are appended and the append's lineage
-        read-back counts them from the (small) snapshot: returns
-        (None, rows). Otherwise returns (frame, 0) for _loop to count
+        In store mode they are appended and the manifest entry's
+        footer row count counts them: returns (None, rows). Otherwise
+        returns (frame, 0) for _loop to count
         (the reference counts m.targets unconditionally,
         worker.c:913-917). (None, 0) when no filetype has attributes."""
         frames = []
@@ -1289,10 +1281,7 @@ class SparkCrawler:
         out = out.withColumn("round", F.lit(r))
         if not self.store:
             return out, 0
-        entry = self.store.table("attr_targets").append(
-            out, r, collect_lineage=True
-        )
-        return None, entry.get("rows", 0)
+        return None, self.store.table("attr_targets").append(out, r)["rows"]
 
     def _admit_plan(
         self,
@@ -1388,20 +1377,17 @@ class SparkCrawler:
         resume point. Returns (next frontier, next seen, parked)."""
         seen_delta = _seen_rows(admitted, r)
         if self.store:
-            self.store.table("seen").append(seen_delta, r,
-                                            collect_lineage=True)
+            self.store.table("seen").append(seen_delta, r)
         if self.bloom is not None:
             self.bloom.update(seen_delta.select("key_hash"))
             if self.store:
-                self.store.table("bloom_state").append(
-                    self.bloom.state, r + 1, collect_lineage=False
-                )
+                self.store.table("bloom_state").append(self.bloom.state, r + 1)
         if self.store:
             self.store.table("targets").append(
                 admitted.filter(F.col("route") == "target").select(
                     "url", "filetype", F.lit(r).alias("round")
                 ),
-                r, collect_lineage=False,
+                r,
             )
 
         frontier_add = admitted.filter(
@@ -1420,9 +1406,7 @@ class SparkCrawler:
             rest.select(*FRONTIER_COLS)
         ).unionByName(frontier_add)
         if self.store:
-            self.store.table("frontier").append(
-                new_pending, r + 1, collect_lineage=True
-            )
+            self.store.table("frontier").append(new_pending, r + 1)
         return new_pending, seen.unionByName(seen_delta), parked
 
     def _record_round(self, stats: CrawlStats, row: dict) -> None:
@@ -1437,37 +1421,33 @@ class SparkCrawler:
                     "round int, depth int, fetched long,"
                     " admitted long, targets long, selected long",
                 ),
-                row["round"], collect_lineage=False,
+                row["round"],
             )
 
     def _snapshot_state(
         self,
         r: int,
+        d: int,
         hosts: DataFrame,
         jail: Optional[DataFrame],
         parked: Optional[DataFrame],
         names: Optional[DataFrame],
     ) -> None:
-        """Full-state snapshots for exact resume (store mode)."""
+        """Full-state snapshots for exact resume (store mode), written
+        only in rounds that change them: hosts and jail at depth 0
+        (their one update point), names every writefile round, parked
+        while an EXTERNAL crawler keeps it (``_adopt_parked`` records
+        its emptying). ``resume`` reads each one's latest snapshot."""
         if not self.store:
             return
-        self.store.table("hosts_state").append(
-            hosts, r + 1, collect_lineage=False
-        )
-        if jail is not None:
-            self.store.table("jail_state").append(
-                jail, r + 1, collect_lineage=False
-            )
+        if d == 0 and self.robots_enabled:
+            self.store.table("hosts_state").append(hosts, r + 1)
+        if d == 0 and jail is not None:
+            self.store.table("jail_state").append(jail, r + 1)
         if names is not None:
-            self.store.table("names_state").append(
-                names, r + 1, collect_lineage=False
-            )
-        self.store.table("parked_state").append(
-            parked
-            if parked is not None
-            else self.spark.createDataFrame([], FRONTIER_SCHEMA),
-            r + 1, collect_lineage=False,
-        )
+            self.store.table("names_state").append(names, r + 1)
+        if parked is not None:
+            self.store.table("parked_state").append(parked, r + 1)
 
     # -- session lifecycle (mn-slaved analog) ---------------------------
 
@@ -1490,7 +1470,7 @@ class SparkCrawler:
                 "session_id string, state string, rounds int,"
                 " fetched long, seen long",
             ),
-            r, collect_lineage=False,
+            r,
         )
 
     def _finish_session(self, stats: CrawlStats, r: int) -> None:

@@ -11,10 +11,13 @@ Layout::
     <root>/<table>/data/r=<round>-<uuid>/   (parquet files)
     <root>/<table>/manifest.json            (snapshot log)
 
-Each manifest entry records the round, the data path, row count and
-per-partition lineage (partition id -> rows), giving exact resume
-from any checkpoint: a restarted crawl reads frontier/seen/hosts at
-``latest_round`` and continues.
+Each manifest entry records the round, the data path, its row count
+and per-data-file lineage (file name -> rows), read from the Parquet
+footers of the files the append just wrote (Iceberg's per-file
+``record_count``, taken from the writer with no re-scan): an append
+is one write job. A restarted crawl reads frontier/seen at
+``latest_round`` and the full-state tables at their latest snapshot,
+and continues.
 """
 
 from __future__ import annotations
@@ -24,8 +27,8 @@ import os
 import uuid
 from typing import List, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class SnapshotTable:
@@ -52,10 +55,11 @@ class SnapshotTable:
     # -- write ---------------------------------------------------------
 
     def append(self, df: DataFrame, round_no: int,
-               collect_lineage: bool = True,
                bucket_by: Optional[tuple] = None) -> dict:
-        """Append one snapshot. Returns the manifest entry (with row
-        count + per-partition lineage when requested).
+        """Append one snapshot. Returns the manifest entry: round,
+        path, ``rows`` and ``partitions`` (data file name -> rows,
+        from the written files' Parquet footers — no Spark job runs
+        after the write).
 
         ``bucket_by=(col, n)`` writes the snapshot as a BUCKETED
         parquet table (repartitioned first so each bucket is ONE
@@ -87,18 +91,11 @@ class SnapshotTable:
         if bucket_by:
             entry["bucket_by"] = [bucket_by[0], int(bucket_by[1])]
             entry["schema_ddl"] = df.schema.toDDL()
-        if collect_lineage:
-            spark = df.sparkSession
-            written = spark.read.parquet(path)
-            lineage = (
-                written.groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .collect()
-            )
-            entry["rows"] = int(sum(r["count"] for r in lineage))
-            entry["partitions"] = {
-                str(r["pid"]): int(r["count"]) for r in lineage
-            }
+        entry["partitions"] = {
+            f: pq.read_metadata(os.path.join(path, f)).num_rows
+            for f in sorted(os.listdir(path)) if f.endswith(".parquet")
+        }
+        entry["rows"] = sum(entry["partitions"].values())
         manifest = self._read_manifest()
         manifest["snapshots"].append(entry)
         self._write_manifest(manifest)

@@ -187,37 +187,63 @@ class TestSpanInvariant:
         assert checked > 0
 
 
+def _robots_crawl():
+    return (
+        generate_web(n_docs=50, n_hosts=3, seed=707),
+        default_config(robotstxt=True), {"politeness_budget": 3},
+    )
+
+
+def _external_crawl():
+    """TestGoldenExternal's crawl: 14 rounds, the first adoption wave
+    of parked external hosts opens round 9."""
+    return (
+        generate_web(n_docs=60, n_hosts=4, seed=505,
+                     cross_host_fraction=0.4),
+        default_config(external=True), {"politeness_budget": 3},
+    )
+
+
+def _jail_crawl():
+    """The jail crawl of tests/test_crawl_switch_epeek.py: 2 rounds,
+    the jail is set in round 0 only."""
+    from tests.test_crawl_switch_epeek import TestJail, jail_config
+
+    return TestJail().make_web(), jail_config(), {"crawler": "jailer"}
+
+
 class TestResume:
-    def test_resume_from_checkpoint(self, spark, tmp_path):
-        """Kill after round k, resume from the frontier snapshot —
-        final state identical to the uninterrupted run."""
-        web = generate_web(n_docs=50, n_hosts=3, seed=707)
-        cfg = default_config(robotstxt=True)
+    @pytest.mark.parametrize(
+        "crawl, stop",
+        [
+            (_robots_crawl, 2),
+            # stopped before the adoption wave, the resume restores and
+            # adopts the parked hosts; after it, the hosts parked since
+            (_external_crawl, 9),
+            (_external_crawl, 10),
+            (_jail_crawl, 1),
+        ],
+        ids=["robots-r2", "external-r9", "external-r10", "jail-r1"],
+    )
+    def test_resume_from_checkpoint(self, spark, tmp_path, crawl, stop):
+        """Kill after round ``stop``, resume from the snapshots — final
+        state identical to the uninterrupted run."""
+        web, cfg, kw = crawl()
 
-        full_dir = str(tmp_path / "full")
-        engine_full = SparkCrawler(
-            spark, web.to_spark(spark), cfg,
-            politeness_budget=3, state_dir=full_dir,
-        )
+        def engine(state_dir, **more):
+            return SparkCrawler(
+                spark, web.to_spark(spark), cfg,
+                state_dir=str(tmp_path / state_dir), **kw, **more,
+            )
+
+        engine_full = engine("full")
         engine_full.run(web.seeds)
-        full_seen = seen_of(engine_full)
-        full_rounds = rounds_of(engine_full, spark)
-
-        part_dir = str(tmp_path / "part")
-        engine_a = SparkCrawler(
-            spark, web.to_spark(spark), cfg,
-            politeness_budget=3, state_dir=part_dir, max_rounds=2,
-        )
-        engine_a.run(web.seeds)
-
-        engine_b = SparkCrawler(
-            spark, web.to_spark(spark), cfg,
-            politeness_budget=3, state_dir=part_dir,
-        )
+        engine("part", max_rounds=stop).run(web.seeds)
+        engine_b = engine("part")
         engine_b.resume()
 
-        assert seen_of(engine_b) == full_seen
-        assert rounds_of(engine_b, spark) == full_rounds
+        assert seen_of(engine_b) == seen_of(engine_full)
+        assert rounds_of(engine_b, spark) == rounds_of(engine_full, spark)
 
 
 class TestSeedGuessing:

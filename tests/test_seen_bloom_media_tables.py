@@ -1,6 +1,8 @@
 """Unit tests: partitioned bloom seen-filter, media plumbing,
 snapshot tables, distributed generator determinism."""
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -188,14 +190,40 @@ class TestSnapshotStore:
         assert t.read_until(spark).count() == 1
 
     def test_lineage_recorded(self, spark, tmp_path):
-        store = SnapshotStore(str(tmp_path))
-        t = store.table("x")
-        entry = t.append(
-            spark.range(100).select(F.col("id").alias("a")), 0,
-            collect_lineage=True,
-        )
-        assert entry["rows"] == 100
-        assert sum(entry["partitions"].values()) == 100
+        """``rows`` and the per-data-file ``partitions`` of a plain, an
+        empty and a bucketed append equal the rows written."""
+        t = SnapshotStore(str(tmp_path)).table("x")
+        df = spark.range(0, 100, numPartitions=4)
+        for frame, bucket_by, rows, files in (
+            (df, None, 100, 4),
+            (df.limit(0), None, 0, None),
+            (df, ("id", 8), 100, 8),
+        ):
+            entry = t.append(frame, 0, bucket_by=bucket_by)
+            assert entry == t.snapshots()[-1]
+            assert entry["rows"] == sum(entry["partitions"].values())
+            assert entry["rows"] == rows
+            if files is not None:
+                assert len(entry["partitions"]) == files
+
+    def test_append_runs_no_job_after_the_write(self, spark, tmp_path):
+        """The lineage costs no Spark job: an append runs no more jobs
+        than a bare parquet write of the same frame."""
+        sc = spark.sparkContext
+        df = spark.range(0, 100, numPartitions=4)
+
+        def jobs(action):
+            group = f"append-jobs-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                action()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        bare = jobs(lambda: df.write.parquet(str(tmp_path / "bare")))
+        t = SnapshotStore(str(tmp_path / "store")).table("x")
+        assert 0 < jobs(lambda: t.append(df, 0)) <= bare
 
 
 class TestDistributedGenerator:
@@ -355,8 +383,7 @@ class TestSeenCompaction:
             F.xxhash64(F.col("id").cast("string")).alias("key_hash"),
             F.lit(0).alias("first_round"),
         )
-        t.append(df, 0, collect_lineage=False,
-                 bucket_by=("seen_key", 8))
+        t.append(df, 0, bucket_by=("seen_key", 8))
         att = t.read_bucketed(spark, table_name="seen_bt_test")
         assert att.count() == 1000
         cand = spark.range(500).select(
