@@ -37,7 +37,9 @@ whole-stage codegen and only the residue rows reach Python:
 
 Residue rows — UMEX crawlers (which match on the full URL), ports,
 userinfo, escapes, dot-leading hrefs, ``..`` pops, fragments —
-take the exact Python admitter on a (small) filtered row set.
+take the exact Python admitter (udfs.make_link_admitter, which runs
+the scalar resolver's own per-link admission step) on a (small)
+filtered row set.
 
 Equivalence with the scalar resolver (udfs.make_link_resolver_scalar,
 the semantics spec) is pinned by tests/test_resolver_jvm_diff.py (fuzz

@@ -6,6 +6,14 @@ the input_hint mandate. The closures capture the (tiny) broadcast
 crawl config; heavy lookups (content types, the seen set) are joins,
 not closure state.
 
+The stages: the link resolver (whole documents) and the link admitter
+(JVM-extracted residue hrefs) share one per-link admission step,
+``_link_admission``; the HEAD stage routes content-type-classified
+rows through the same route/peek tail, ``_routed``; the attribute
+extractor is the one attribute path (named attrs-parser attributes
+and the whole-body 'html' attribute); the robots parser is a pandas
+UDF body.
+
 Multi-crawler semantics (Q4/Q5): every frontier row carries its
 ``crawler``; a fetched filetype with ``switch_to`` classifies and
 routes its children under the switched crawler's ftindex
@@ -26,16 +34,9 @@ from pyspark.sql import types as T
 
 from ..config import CrawlConfig
 from ..functions.canonicalize import ParsedUrl, add_url
-from ..functions.classify import FT, HEAD, FtIndex
+from ..functions.classify import HEAD, FtIndex
 from ..functions.robots import parse_robots
-from ..operators.admission import (
-    R_DISCARD,
-    R_EXTERNAL,
-    R_FRONTIER,
-    R_TARGET,
-    extract_links_from_spans,
-    route_of,
-)
+from ..operators.admission import extract_links_from_spans, route_of
 
 # candidate-link rows emitted by the parse/resolve stage
 CANDIDATE_SCHEMA = T.StructType(
@@ -79,6 +80,78 @@ def build_indexes(config: CrawlConfig) -> Dict[str, FtIndex]:
     return {c.name: FtIndex(config, c) for c in config.crawlers}
 
 
+def _span_dicts(spans) -> List[dict]:
+    """A document's Arrow span structs as the parser chain's dicts."""
+    return [
+        {
+            "kind": s["kind"],
+            "text": s["text"],
+            "media_ref": s["media_ref"],
+            "offset": s["offset"],
+        }
+        for s in spans
+    ]
+
+
+def _routed(idx: FtIndex, config: CrawlConfig, name: Optional[str],
+            external: bool, peek: bool, depth: int) -> tuple:
+    """(route, ft_rank, peek, depth) of a classified child: route_of,
+    and an external peek start re-enters the child at depth 0 with
+    ``peek`` set (worker.c:679-703)."""
+    route, rank, peek_start = route_of(name, external, idx, config, peek)
+    if peek_start:
+        return route, rank, True, 0
+    return route, rank, peek, depth
+
+
+def _link_admission(config: CrawlConfig, default_crawler: str):
+    """The per-link admission step (ue_add + lm_worker_bind_url,
+    urlengine.c:170-250 / worker.c:666-714) that the resolver and the
+    admitter share. Returns ``admit(row, links, depth, rcount)``,
+    which yields the CANDIDATE_SCHEMA rows of the parent ``row``'s
+    ``(sibling_ix, href)`` pairs: canonicalized against the parent
+    URL, classified under the switched crawler's index, then marked
+    for the HEAD stage, routed, or discarded."""
+    indexes = build_indexes(config)
+
+    def admit(row, links, depth: int, rcount: int):
+        base = ParsedUrl(
+            row.url, row.host_o, row.host_l, row.file_o, row.ext_o,
+            row.protocol, row.is_dynamic, row.www,
+        )
+        # the crawler switch happens before the handler runs
+        cr_name = (
+            config.filetype(row.filetype).switch_to
+            or getattr(row, "crawler", None) or default_crawler
+        )
+        idx = indexes[cr_name]
+        parent_peek = bool(getattr(row, "peek", False))
+        parent_external = bool(row.external)
+        fetch_round, fetch_ord = int(row.fetch_round), int(row.fetch_ord)
+        for six, href in links:
+            res = add_url(base, href, parent_external)
+            if res is None:
+                continue
+            parsed, external = res
+            kind, name = idx.match_by_url(parsed)
+            if kind == HEAD:
+                route, rank, peek, d = None, None, parent_peek, depth
+            else:
+                route, rank, peek, d = _routed(
+                    idx, config, name, external, parent_peek, depth
+                )
+            yield [
+                parsed.url, parsed.host_o, parsed.host_l,
+                parsed.file_o, parsed.ext_o, parsed.protocol,
+                parsed.is_dynamic, parsed.www_prefix, parsed.seen_key,
+                parsed.host_identity, external, kind == HEAD, name,
+                rank, route, cr_name, peek, d, fetch_round, fetch_ord,
+                six, rcount,
+            ]
+
+    return admit
+
+
 def make_link_resolver_scalar(config: CrawlConfig, default_crawler: str):
     """mapInPandas stage: fetched pages -> candidate link rows.
 
@@ -94,111 +167,39 @@ def make_link_resolver_scalar(config: CrawlConfig, default_crawler: str):
     location). For 3xx rows the Location header is the single
     candidate at the SAME depth (ue_revert, urlengine.c:158-165);
     otherwise the filetype's parser chain extracts links and children
-    land one level deeper.
+    land one level deeper. Each link then takes the shared admission
+    step (_link_admission).
     """
 
     def resolve(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        indexes = build_indexes(config)
+        admit = _link_admission(config, default_crawler)
         cols = [f.name for f in CANDIDATE_SCHEMA.fields]
 
         for pdf in it:
             out: List[list] = []
             for row in pdf.itertuples(index=False):
-                base = ParsedUrl(
-                    row.url,
-                    row.host_o,
-                    row.host_l,
-                    row.file_o,
-                    row.ext_o,
-                    row.protocol,
-                    row.is_dynamic,
-                    row.www,
-                )
-                cr_name = getattr(row, "crawler", None) or default_crawler
-                parent_peek = bool(getattr(row, "peek", False))
-                ft = config.filetype(row.filetype)
-                # crawler switch happens before the handler runs
-                eff_name = ft.switch_to or cr_name
-                idx = indexes[eff_name]
-
                 status = row.status
-                is_redirect = (
+                if (
                     status is not None
                     and not pd.isna(status)
                     and 300 <= int(status) < 400
                     and isinstance(row.location, str)
                     and row.location
-                )
-                if is_redirect:
+                ):
                     if row.redirect_count + 1 >= 20:
                         continue  # redirect-loop breaker (worker.c:808)
-                    pairs = [(0, row.location)]
-                    child_depth = int(row.depth)
+                    links = [(0, row.location)]
+                    depth = int(row.depth)
                     rcount = int(row.redirect_count) + 1
                 else:
-                    if not ft.parsers or row.spans is None:
+                    parsers = config.filetype(row.filetype).parsers
+                    if not parsers or row.spans is None:
                         continue
-                    spans = [
-                        {
-                            "kind": s["kind"],
-                            "text": s["text"],
-                            "media_ref": s["media_ref"],
-                            "offset": s["offset"],
-                        }
-                        for s in row.spans
-                    ]
-                    links = extract_links_from_spans(spans, ft.parsers)
-                    pairs = list(enumerate(links))
-                    child_depth = int(row.depth) + 1
-                    rcount = 0
-
-                for six, href in pairs:
-                    res = add_url(base, href, bool(row.external))
-                    if res is None:
-                        continue
-                    parsed, external = res
-                    kind, name = idx.match_by_url(parsed)
-                    needs_head = kind == HEAD
-                    depth = child_depth
-                    peek = parent_peek
-                    if needs_head:
-                        route, rank = None, None
-                    elif kind == FT:
-                        route, rank, peek_start = route_of(
-                            name, external, idx, config, parent_peek
-                        )
-                        if peek_start:
-                            peek = True
-                            depth = 0
-                    else:
-                        name = None
-                        route, rank = R_DISCARD, len(idx.ft_list)
-                    out.append(
-                        [
-                            parsed.url,
-                            parsed.host_o,
-                            parsed.host_l,
-                            parsed.file_o,
-                            parsed.ext_o,
-                            parsed.protocol,
-                            parsed.is_dynamic,
-                            parsed.www_prefix,
-                            parsed.seen_key,
-                            parsed.host_identity,
-                            external,
-                            needs_head,
-                            name,
-                            rank,
-                            route,
-                            eff_name,
-                            peek,
-                            depth,
-                            int(row.fetch_round),
-                            int(row.fetch_ord),
-                            six,
-                            rcount,
-                        ]
-                    )
+                    links = enumerate(extract_links_from_spans(
+                        _span_dicts(row.spans), parsers
+                    ))
+                    depth, rcount = int(row.depth) + 1, 0
+                out.extend(admit(row, links, depth, rcount))
             yield pd.DataFrame(out, columns=cols)
 
     return resolve
@@ -210,63 +211,23 @@ def make_link_admitter(config: CrawlConfig, default_crawler: str):
     The downstream half of the resolver for the jvm extraction mode
     (functions/extract_jvm.py): inputs already carry one raw href per
     row plus the parent's URL fields, child depth and redirect count —
-    NO span text crosses Arrow. Canonicalization/classification/
-    routing are byte-identical to the scalar resolver's inner loop
-    (ue_add + lm_worker_bind_url, urlengine.c:170-250 /
-    worker.c:666-714)."""
+    NO span text crosses Arrow. Each row takes the resolver's
+    admission step (_link_admission)."""
 
-    def admit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        indexes = build_indexes(config)
+    def admit_rows(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        admit = _link_admission(config, default_crawler)
         cols = [f.name for f in CANDIDATE_SCHEMA.fields]
 
         for pdf in it:
             out: List[list] = []
             for row in pdf.itertuples(index=False):
-                base = ParsedUrl(
-                    row.url, row.host_o, row.host_l, row.file_o,
-                    row.ext_o, row.protocol, row.is_dynamic, row.www,
-                )
-                cr_name = getattr(row, "crawler", None) or default_crawler
-                parent_peek = bool(getattr(row, "peek", False))
-                ft = config.filetype(row.filetype)
-                eff_name = ft.switch_to or cr_name
-                idx = indexes[eff_name]
-
-                res = add_url(base, row.href, bool(row.external))
-                if res is None:
-                    continue
-                parsed, external = res
-                kind, name = idx.match_by_url(parsed)
-                needs_head = kind == HEAD
-                depth = int(row.child_depth)
-                peek = parent_peek
-                if needs_head:
-                    route, rank = None, None
-                elif kind == FT:
-                    route, rank, peek_start = route_of(
-                        name, external, idx, config, parent_peek
-                    )
-                    if peek_start:
-                        peek = True
-                        depth = 0
-                else:
-                    name = None
-                    route, rank = R_DISCARD, len(idx.ft_list)
-                out.append(
-                    [
-                        parsed.url, parsed.host_o, parsed.host_l,
-                        parsed.file_o, parsed.ext_o, parsed.protocol,
-                        parsed.is_dynamic, parsed.www_prefix,
-                        parsed.seen_key, parsed.host_identity,
-                        external, needs_head, name, rank, route,
-                        eff_name, peek, depth,
-                        int(row.fetch_round), int(row.fetch_ord),
-                        int(row.sibling_ix), int(row.rcount),
-                    ]
-                )
+                out.extend(admit(
+                    row, [(int(row.sibling_ix), row.href)],
+                    int(row.child_depth), int(row.rcount),
+                ))
             yield pd.DataFrame(out, columns=cols)
 
-    return admit
+    return admit_rows
 
 
 # attribute-target rows emitted by the attrs extraction stage (P11)
@@ -284,11 +245,11 @@ ATTR_TARGET_SCHEMA = T.StructType(
 def make_attr_extractor(config: CrawlConfig):
     """mapInPandas stage: fetched pages -> attribute-target rows (P11).
 
-    Runs the filetype's parser chain for its "attrs"-kind stages
-    (js.c:305-330 set_attribute analog) plus the builtin html parser's
-    whole-body 'html' attribute when declared (html.c:179-183); emits
-    one row per document whose attribute list changed
-    (worker.c:913-917)."""
+    The one attribute path: runs the filetype's parser chain for its
+    "attrs"-kind stages (js.c:305-330 set_attribute analog) plus the
+    builtin html parser's whole-body 'html' attribute when declared
+    (html.c:179-183); emits one row per document whose attribute list
+    changed (worker.c:913-917)."""
     from ..operators.admission import run_parser_chain
 
     def extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -298,15 +259,7 @@ def make_attr_extractor(config: CrawlConfig):
                 ft = config.filetype(row.filetype)
                 if row.spans is None:
                     continue
-                spans = [
-                    {
-                        "kind": s["kind"],
-                        "text": s["text"],
-                        "media_ref": s["media_ref"],
-                        "offset": s["offset"],
-                    }
-                    for s in row.spans
-                ]
+                spans = _span_dicts(row.spans)
                 attrs = {}
                 if "html" in ft.attributes and "html" in ft.parsers:
                     attrs["html"] = "".join(
@@ -327,53 +280,42 @@ def make_attr_extractor(config: CrawlConfig):
 
 
 def make_head_classifier(config: CrawlConfig, default_crawler: str):
-    """Resolve POSSIBLE_MATCH rows by content type (the reference's
-    HEAD request, worker.c:567-631) under the row's crawler; finalize
-    route/peek/depth."""
+    """mapInPandas stage: POSSIBLE_MATCH candidate rows joined with
+    their ``content_type`` -> candidate rows. Classifies by content
+    type (the reference's HEAD request, worker.c:567-631) under the
+    row's crawler, then routes like the link admission step; a HEAD
+    row's tentative peek column is its parent's peek state."""
+    cols = [f.name for f in CANDIDATE_SCHEMA.fields]
 
-    def classify(pdf: pd.DataFrame) -> pd.DataFrame:
+    def classify(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         indexes = build_indexes(config)
-        # the decision is a pure function of (content_type, crawler,
-        # external, peek) — memoize over the batch's UNIQUE keys so
-        # the per-row loop is dict lookups, not classifier calls
+        # the result is a pure function of the row's few-valued
+        # (content_type, crawler, external, peek, depth): memoize it
+        # so the per-row loop is dict lookups, not classifier calls
         memo: dict = {}
-        fts, ranks, routes, peeks, depths = [], [], [], [], []
-        for ct, ext, cr_name, peek, depth in zip(
-            pdf["content_type"], pdf["external"], pdf["crawler"],
-            pdf["peek"], pdf["depth"],
-        ):
-            key = (
-                ct if isinstance(ct, str) else None,
-                cr_name or default_crawler, bool(ext), bool(peek),
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            heads = []
+            for key in zip(
+                pdf["content_type"], pdf["crawler"], pdf["external"],
+                pdf["peek"], pdf["depth"],
+            ):
+                hit = memo.get(key)
+                if hit is None:
+                    ct, cr_name, ext, peek, depth = key
+                    idx = indexes[cr_name or default_crawler]
+                    name = idx.match_by_mime(
+                        ct if isinstance(ct, str) else None
+                    )
+                    hit = memo[key] = (name, *_routed(
+                        idx, config, name, bool(ext), bool(peek), int(depth)
+                    ))
+                heads.append(hit)
+            pdf[["filetype", "route", "ft_rank", "peek", "depth"]] = (
+                pd.DataFrame(heads, index=pdf.index)
             )
-            hit = memo.get(key)
-            if hit is None:
-                idx = indexes[key[1]]
-                name = idx.match_by_mime(key[0])
-                # a HEAD row's parent peek state is its tentative
-                # peek column
-                route, rank, peek_start = route_of(
-                    name, key[2], idx, config, key[3]
-                )
-                hit = memo[key] = (name, route, rank, peek_start)
-            name, route, rank, peek_start = hit
-            if peek_start:
-                peek = True
-                depth = 0
-            fts.append(name)
-            ranks.append(rank)
-            routes.append(route)
-            peeks.append(bool(peek))
-            depths.append(int(depth))
-        return pd.DataFrame(
-            {
-                "filetype": fts,
-                "ft_rank": ranks,
-                "route": routes,
-                "peek": peeks,
-                "depth": depths,
-            }
-        )
+            yield pdf[cols]
 
     return classify
 

@@ -367,27 +367,9 @@ class SparkCrawler:
         self.max_rounds = max_rounds
         self.robots_enabled = any(c.robotstxt for c in config.crawlers)
         self.jail_crawlers = [c.name for c in config.crawlers if c.jail]
-        # P11 attribute emission: which filetypes go through which path
-        from ..functions.parsers import resolve_parser
-
-        def _has_attrs_parser(ft) -> bool:
-            return any(
-                (resolve_parser(p) or ("", None))[0] == "attrs"
-                for p in ft.parsers
-            )
-
-        self.attr_fts_py = [
-            f.name
-            for f in self.idx.ft_list
-            if f.attributes and _has_attrs_parser(f)
-        ]
-        self.attr_fts_html = [
-            f.name
-            for f in self.idx.ft_list
-            if "html" in f.attributes
-            and "html" in f.parsers
-            and f.name not in self.attr_fts_py
-        ]
+        # P11 attribute emission: filetypes that declare attributes go
+        # through the attribute extractor (udfs.make_attr_extractor)
+        self.attr_fts = [f.name for f in self.idx.ft_list if f.attributes]
         # static plan pruning: HEAD (POSSIBLE_MATCH) rows can only
         # exist when some crawler has a "lookup" binding — otherwise
         # the whole content-type resolution stage is dropped
@@ -718,13 +700,14 @@ class SparkCrawler:
         parked = self.store.table("parked_state").read_latest(spark)
         if parked is not None and parked.isEmpty():
             parked = None
+        seen = self._read_seen()
         if self.bloom is not None:
-            state = self.store.table("bloom_state").read_latest(spark)
-            if state is not None:
-                self.bloom.state = state.localCheckpoint()
+            # the bitmaps are the OR of every seen key's bits: rebuild
+            # them from the seen set rather than snapshot them per round
+            self.bloom.update(seen.select("key_hash"))
         return self._loop(
             ft.read_round(spark, r0),
-            self._read_seen(),
+            seen,
             parked.persist() if parked is not None else None,
             r0,
             CrawlStats(),
@@ -822,7 +805,8 @@ class SparkCrawler:
                 self._n_seen_est += n_admitted
 
             new_pending, new_seen, parked = self._route(
-                admitted, seen, parked, deferred, rest, r
+                admitted, n_admitted, n_targets, seen, parked, deferred,
+                rest, r,
             )
             old_pending = pending
             seen.unpersist()
@@ -893,7 +877,6 @@ class SparkCrawler:
         stats.seen = seen.count()
         stats.wall_s = time.time() - t0
         self._final_seen = seen
-        self._final_pending = pending
         self._finish_session(stats, r)
         return stats
 
@@ -1237,48 +1220,28 @@ class SparkCrawler:
     def _attr_targets(
         self, parse_input: DataFrame, r: int
     ) -> Tuple[Optional[DataFrame], int]:
-        """Attribute targets (P11), both paths emitting (url, filetype,
-        attributes map):
-        - a JVM expression for filetypes whose ONLY attribute is the
-          builtin html whole-body one (html.c:179-183) — no Python;
-        - the attrs-parser mapInPandas stage for filetypes whose chain
-          sets named attributes (js.c set_attribute analog).
+        """Attribute targets (P11): the attribute extractor's (url,
+        filetype, attributes map) rows for the fetched documents of
+        filetypes that declare attributes — attrs-kind parser stages
+        (js.c set_attribute analog) and the builtin html parser's
+        whole-body 'html' attribute (html.c:179-183) alike.
         In store mode they are appended and the manifest entry's
         footer row count counts them: returns (None, rows). Otherwise
         returns (frame, 0) for _loop to count
         (the reference counts m.targets unconditionally,
         worker.c:913-917). (None, 0) when no filetype has attributes."""
-        frames = []
-        if self.attr_fts_html:
-            frames.append(
-                parse_input.filter(
-                    F.col("filetype").isin(self.attr_fts_html)
-                    & _not_redirect()
-                ).select(
-                    "url", "filetype",
-                    F.create_map(
-                        F.lit("html"), _span_body()
-                    ).alias("attributes"),
-                )
-            )
-        if self.attr_fts_py:
-            frames.append(
-                parse_input.filter(
-                    F.col("filetype").isin(self.attr_fts_py)
-                    & _not_redirect()
-                )
-                .select("url", "filetype", "spans")
-                .mapInPandas(
-                    make_attr_extractor(self.config),
-                    ATTR_TARGET_SCHEMA,
-                )
-            )
-        if not frames:
+        if not self.attr_fts:
             return None, 0
-        out = frames[0]
-        for fdf in frames[1:]:
-            out = out.unionByName(fdf)
-        out = out.withColumn("round", F.lit(r))
+        out = (
+            parse_input.filter(
+                F.col("filetype").isin(self.attr_fts) & _not_redirect()
+            )
+            .select("url", "filetype", "spans")
+            .mapInPandas(
+                make_attr_extractor(self.config), ATTR_TARGET_SCHEMA
+            )
+            .withColumn("round", F.lit(r))
+        )
         if not self.store:
             return out, 0
         return None, self.store.table("attr_targets").append(out, r)["rows"]
@@ -1343,12 +1306,11 @@ class SparkCrawler:
         if self.any_lookup:
             resolved_head = (
                 admitted.filter(F.col("needs_head"))
-                .drop("filetype", "ft_rank", "route")
                 .join(
                     self.docs_ct, F.col("url") == F.col("doc_id"), "left"
                 )
                 .drop("doc_id")
-                .mapInPandas(_head_mapper(head_classify), CANDIDATE_SCHEMA)
+                .mapInPandas(head_classify, CANDIDATE_SCHEMA)
             )
             admitted = admitted.filter(~F.col("needs_head")).unionByName(
                 resolved_head
@@ -1364,25 +1326,29 @@ class SparkCrawler:
     def _route(
         self,
         admitted: DataFrame,
+        n_admitted: int,
+        n_targets: int,
         seen: DataFrame,
         parked: Optional[DataFrame],
         deferred: DataFrame,
         rest: DataFrame,
         r: int,
     ) -> Tuple[DataFrame, DataFrame, Optional[DataFrame]]:
-        """Route the materialized ``admitted`` delta: the seen delta
-        (and bloom update), targets, the next frontier (depth-budgeted)
-        and parked external hosts. Store mode snapshots the seen delta,
-        bloom, targets and the next frontier — reading that back is the
-        resume point. Returns (next frontier, next seen, parked)."""
+        """Route the materialized ``admitted`` delta of ``n_admitted``
+        rows, ``n_targets`` of them targets: the seen delta (and bloom
+        update), targets, the next frontier (depth-budgeted) and parked
+        external hosts. Store mode snapshots the seen delta and targets
+        when they are non-empty, and the next frontier in every round —
+        reading that back is the resume point (``resume`` rebuilds the
+        bloom from the seen set). Returns (next frontier, next seen,
+        parked)."""
         seen_delta = _seen_rows(admitted, r)
-        if self.store:
-            self.store.table("seen").append(seen_delta, r)
-        if self.bloom is not None:
-            self.bloom.update(seen_delta.select("key_hash"))
+        if n_admitted:
             if self.store:
-                self.store.table("bloom_state").append(self.bloom.state, r + 1)
-        if self.store:
+                self.store.table("seen").append(seen_delta, r)
+            if self.bloom is not None:
+                self.bloom.update(seen_delta.select("key_hash"))
+        if self.store and n_targets:
             self.store.table("targets").append(
                 admitted.filter(F.col("route") == "target").select(
                     "url", "filetype", F.lit(r).alias("round")
@@ -1499,29 +1465,3 @@ class SparkCrawler:
             self.hooks.invoke("cleanup", {
                 "session_id": self._session_id or "",
             })
-
-
-def _head_mapper(head_classify):
-    """mapInPandas wrapper applying the mime classifier and restoring
-    the CANDIDATE_SCHEMA column set/order."""
-    import pandas as pd
-
-    cols = [f.name for f in CANDIDATE_SCHEMA.fields]
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            res = head_classify(
-                pdf[["content_type", "external", "crawler", "peek",
-                     "depth"]]
-            )
-            pdf = pdf.drop(columns=["content_type"])
-            pdf["filetype"] = res["filetype"].values
-            pdf["ft_rank"] = res["ft_rank"].values
-            pdf["route"] = res["route"].values
-            pdf["peek"] = res["peek"].values
-            pdf["depth"] = res["depth"].values
-            yield pdf[cols]
-
-    return fn

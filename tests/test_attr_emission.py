@@ -1,10 +1,18 @@
 """P11 general attribute emission: golden parity engine vs oracle for
 the conf/title.conf and conf/meta.conf analogs (attrs-kind parsers over
-the xmlconv chain), plus the declared-name matching quirk."""
+the xmlconv chain) and the html parser's whole-body 'html' attribute,
+plus the declared-name matching quirk."""
+
+import dataclasses
 
 import pytest
 
-from methanol_web_crawler_spark.config import meta_config, title_config
+from methanol_web_crawler_spark.config import (
+    CrawlConfig,
+    default_config,
+    meta_config,
+    title_config,
+)
 from methanol_web_crawler_spark.operators.admission import (
     _declared_attr,
     run_parser_chain,
@@ -59,7 +67,23 @@ def _oracle_attr_targets(oracle):
     )
 
 
-@pytest.mark.parametrize("make_cfg", [title_config, meta_config])
+def html_attr_config(**crawler_overrides) -> CrawlConfig:
+    """default.conf whose html filetype declares the builtin html
+    parser's whole-body 'html' attribute (html.c:179-183)."""
+    cfg = default_config(**crawler_overrides)
+    return CrawlConfig(
+        filetypes=tuple(
+            dataclasses.replace(f, attributes=("html",))
+            if f.name == "html" else f
+            for f in cfg.filetypes
+        ),
+        crawlers=cfg.crawlers,
+    )
+
+
+@pytest.mark.parametrize(
+    "make_cfg", [title_config, meta_config, html_attr_config]
+)
 def test_attr_targets_golden(spark, tmp_path, titleweb, make_cfg):
     cfg = make_cfg(robotstxt=True)
     oracle = OracleCrawler(titleweb.doc_map, cfg,
@@ -73,7 +97,18 @@ def test_attr_targets_golden(spark, tmp_path, titleweb, make_cfg):
     want = _oracle_attr_targets(oracle)
     assert got == want
 
-    if make_cfg is title_config:
+    # store-less, the engine counts the same targets as the oracle
+    storeless = SparkCrawler(
+        spark, titleweb.to_spark(spark), cfg, politeness_budget=0,
+    ).run(titleweb.seeds)
+    assert storeless.targets == stats.targets == len(oracle.targets)
+
+    if make_cfg is html_attr_config:
+        # every fetched html page carries its whole body -> 3 targets
+        assert len(got) == 3
+        assert all(dict(a)["html"].startswith("<HTML>")
+                   for (_, _, a) in got)
+    elif make_cfg is title_config:
         # every fetched html page has a <title> -> 3 attr targets
         assert len(got) == 3
         titles = {u: dict(a)["title"] for (u, _, a) in got}

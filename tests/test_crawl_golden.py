@@ -12,7 +12,11 @@ import pytest
 from methanol_web_crawler_spark.config import default_config, media_config
 from methanol_web_crawler_spark.oracle.crawler import OracleCrawler
 from methanol_web_crawler_spark.plans.crawl import SparkCrawler
-from methanol_web_crawler_spark.sources.synthweb import generate_web
+from methanol_web_crawler_spark.sources.synthweb import (
+    SynthDoc,
+    SynthWeb,
+    generate_web,
+)
 
 
 def run_both(spark, web, cfg, crawler, budget, state_dir=None, **kw):
@@ -75,12 +79,17 @@ class TestGoldenDefault:
 
 
 class TestGoldenMedia:
+    @staticmethod
+    def config():
+        return media_config(robotstxt=True)
+
     @pytest.fixture(scope="class")
     def result(self, spark, tmp_path_factory):
         web = generate_web(n_docs=80, n_hosts=5, seed=202)
-        cfg = media_config(robotstxt=True)
         state = str(tmp_path_factory.mktemp("state"))
-        return run_both(spark, web, cfg, "media", 4, state_dir=state), spark
+        return run_both(
+            spark, web, self.config(), "media", 4, state_dir=state
+        ), spark
 
     def test_seen_set_exact(self, result):
         (oracle, engine, stats), spark = result
@@ -100,6 +109,19 @@ class TestGoldenMedia:
         )
         want = sorted((t.url, t.filetype) for t in oracle.targets)
         assert got == want
+
+
+class TestGoldenMediaLookup(TestGoldenMedia):
+    """TestGoldenMedia's crawl with extension-less, directory and
+    dynamic URLs bound to "lookup": their filetype comes from the
+    content type (the HEAD stage, make_head_classifier)."""
+
+    @staticmethod
+    def config():
+        return media_config(
+            robotstxt=True, extless_url="lookup", dir_url="lookup",
+            dynamic_url="lookup",
+        )
 
 
 class TestGoldenUnlimitedBudget:
@@ -139,7 +161,7 @@ class TestGoldenDepthLimit:
 
 
 class TestGoldenExternal:
-    def test_external_adoption(self, spark, tmp_path):
+    def _crawl(self, spark, tmp_path, **kw):
         web = generate_web(n_docs=60, n_hosts=4, seed=505,
                            cross_host_fraction=0.4)
         cfg = default_config(external=True)
@@ -148,13 +170,28 @@ class TestGoldenExternal:
         ).run(web.seeds)
         engine = SparkCrawler(
             spark, web.to_spark(spark), cfg,
-            politeness_budget=3, state_dir=str(tmp_path),
+            politeness_budget=3, state_dir=str(tmp_path), **kw,
         )
-        stats = engine.run(web.seeds)
+        engine.run(web.seeds)
         assert seen_of(engine) == oracle.seen
         got = rounds_of(engine, spark)
         for rnd, records in enumerate(oracle.rounds):
             assert got.get(rnd, []) == [r.url for r in records], f"round {rnd}"
+        return engine
+
+    def test_external_adoption(self, spark, tmp_path):
+        self._crawl(spark, tmp_path)
+
+    def test_bloom_crawl_writes_no_empty_deltas(self, spark, tmp_path):
+        """Rounds that route no target or admit no key append no
+        targets / seen snapshot."""
+        engine = self._crawl(spark, tmp_path, bloom_buckets=4)
+        snaps = [
+            s
+            for t in ("targets", "seen")
+            for s in engine.store.table(t).snapshots()
+        ]
+        assert snaps and all(s["rows"] > 0 for s in snaps)
 
 
 class TestSpanInvariant:
@@ -212,6 +249,27 @@ def _jail_crawl():
     return TestJail().make_web(), jail_config(), {"crawler": "jailer"}
 
 
+def _bloom_crawl():
+    """A bloom crawl whose round 0 admits no key (a.html has no links);
+    round 1's b.html links back to a.html, which the resumed bloom
+    must know from the seed keys of the seen set."""
+    h = "http://b.test"
+
+    def page(path, links):
+        body = "".join(f'<a href="{h}/{x}">x</a>' for x in links)
+        return SynthDoc(f"{h}/{path}", [("text", body, None, 0)],
+                        "text/html")
+
+    web = SynthWeb(
+        docs=[page("a.html", []), page("b.html", ["a.html", "c.html"]),
+              page("c.html", [])],
+        seeds=[f"{h}/a.html", f"{h}/b.html"],
+    )
+    return web, default_config(), {
+        "politeness_budget": 1, "bloom_buckets": 4,
+    }
+
+
 class TestResume:
     @pytest.mark.parametrize(
         "crawl, stop",
@@ -222,8 +280,10 @@ class TestResume:
             (_external_crawl, 9),
             (_external_crawl, 10),
             (_jail_crawl, 1),
+            (_bloom_crawl, 1),
         ],
-        ids=["robots-r2", "external-r9", "external-r10", "jail-r1"],
+        ids=["robots-r2", "external-r9", "external-r10", "jail-r1",
+             "bloom-r1"],
     )
     def test_resume_from_checkpoint(self, spark, tmp_path, crawl, stop):
         """Kill after round ``stop``, resume from the snapshots — final
