@@ -2423,46 +2423,11 @@ def _run_stream(q_df, name: str, mode: str):
     return q
 
 
-def _stream_src_dir(sf_dir: str, table: str) -> str:
-    """The file-stream source wants a DIRECTORY (basePath); the sf
-    tables are single parquet files in a read-only tree. Shim: a tmpfs
-    directory holding one symlink to the file (same /dev/shm
-    convention as the scaling bench's input cache).
-
-    The dirs deliberately PERSIST for the boot (a few symlinks, no
-    data): multiple processes (driver verify + pytest) stream from
-    the same shim concurrently, so exit-time cleanup by one would
-    yank the source out from under another mid-stream. Staleness is
-    handled instead — a symlink whose target moved is re-pointed
-    below, and a non-symlink collider fails loudly."""
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    d = f"/dev/shm/methanol-stream-src/{tag}-{table}"
-    os.makedirs(d, exist_ok=True)
-    ln = f"{d}/{table}.parquet"
-    target = f"{sf_dir}/{table}.parquet"
-    # /dev/shm persists per boot while sf dirs can be regenerated at a
-    # different path with the same basename: a stale symlink would
-    # silently stream the OLD bytes (or fail to list) while the DuckDB
-    # oracle reads the new sf_dir. Re-point whenever the target moved.
-    if os.path.islink(ln) and os.readlink(ln) != target:
-        os.unlink(ln)
-    if not os.path.islink(ln):
-        try:
-            os.symlink(target, ln)
-        except FileExistsError:
-            pass  # a concurrent creator won the race — verified below
-    # never trust the entry blindly: a non-symlink collider (stray
-    # file/dir) or a racing creator pointing at a DIFFERENT sf path
-    # would silently stream stale bytes while the oracle reads the
-    # new ones — fail loudly instead
-    if not os.path.islink(ln) or os.readlink(ln) != target:
-        raise RuntimeError(
-            f"stream-source shim entry {ln!r} is not a symlink to "
-            f"{target!r} (stale or foreign collider — remove it)"
-        )
-    return d
+def _stream_src(sf_dir: str, table: str) -> str:
+    """The file-stream source path of one sf table: a brace glob
+    naming its one parquet file (the source wants a directory or a
+    glob; a plain file path fails its basePath check)."""
+    return f"{sf_dir}/{{{table}.parquet}}"
 
 
 @_register(
@@ -2506,7 +2471,7 @@ def stream_sessionize_final(spark, sf_dir):
     src = (
         spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1")
-        .parquet(_stream_src_dir(sf_dir, "events"))
+        .parquet(_stream_src(sf_dir, "events"))
     )
     sess = sessionize_stream(
         src.withColumn("ts", F.col("ts").cast("timestamp")),
@@ -2547,11 +2512,10 @@ def stream_dedup_final(spark, sf_dir):
     from .streaming.dedup_stream import streaming_dedup
 
     sch = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    src_dir = _stream_src_dir(sf_dir, "documents")
     mk = lambda: (  # noqa: E731
         spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+        .parquet(_stream_src(sf_dir, "documents"))
     )
     url = F.concat(
         F.lit("http://docs.example.com/d"),

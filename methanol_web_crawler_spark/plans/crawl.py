@@ -99,10 +99,6 @@ NAMES_SCHEMA = "base string, cnt long"
 METRICS_COLS = ("round", "depth", "fetched", "admitted", "targets",
                 "selected")
 
-# bucket count of the compacted seen table (at 100 TB this is the
-# Iceberg bucket(seen_key) spec; locally a bucketed parquet table)
-SEEN_BUCKETS = 64
-
 _SORT_COLS = ["ft_rank", "parent_round", "parent_ord", "sibling_ix"]
 
 
@@ -113,6 +109,13 @@ def _seen_rows(df: DataFrame, first_round: int) -> DataFrame:
         F.xxhash64("seen_key").alias("key_hash"),
         F.lit(first_round).alias("first_round"),
     )
+
+
+def _counted(df: DataFrame, name: str) -> Tuple[DataFrame, Observation]:
+    """``df`` with an Observation of its row count ``n``, which the
+    first action on the returned frame fills — counting adds no job."""
+    obs = Observation(name)
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def _span_body() -> "F.Column":
@@ -296,14 +299,16 @@ class CrawlStats:
 
 
 class SparkCrawler:
-    # scale-adaptive physical-plan gates. localCheckpointed state
-    # frames (hosts/jail/seen) carry NO size statistics, so the
+    # scale-adaptive physical-plan gates. A localCheckpointed frame
+    # keeps its source plan's size estimate, which is useless for
+    # state built by joins or createDataFrame (a 46-row hosts state
+    # estimates 0.5-1.25 GB, round 0's seen set 1e19 B), so the
     # planner sort-merge-joins even a 200-row hosts table — both
-    # sides exchanged+sorted every round. The driver tracks the row
-    # counts it already knows (counts over materialized checkpoints
-    # are metadata-cheap) and hints broadcast while the state is below
-    # `broadcast_state_max` rows; past it — the 100 TB regime — the
-    # plan falls back to the exchange/bucketed path automatically.
+    # sides exchanged+sorted every round. The driver tracks exact row
+    # counts instead, observed on jobs that already run (or read from
+    # the snapshot manifests), and hints broadcast while the state is
+    # below `broadcast_state_max` rows; past it — the 100 TB regime —
+    # the plan falls back to the exchange path automatically.
     # Checkpoint partition counts derive from tracked row counts
     # (~checkpoint_rows_per_part rows each, capped at
     # defaultParallelism) instead of a flat defaultParallelism: a
@@ -311,14 +316,6 @@ class SparkCrawler:
     # round while a 10^9-row frontier keeps full parallelism.
     broadcast_state_max = 1_000_000
     checkpoint_rows_per_part = 100_000
-    # bucketed seen table (PLANS.md design, enacted): in store mode,
-    # every `seen_compact_every` rounds the full seen set is compacted
-    # into a parquet table BUCKETED by seen_key; the per-round exact
-    # anti-join then scans it with NO exchange on the seen side (only
-    # candidates shuffle into the bucket layout) and removes the few
-    # post-compaction delta rounds with a broadcast anti-join. 0
-    # disables compaction.
-    seen_compact_every = 8
     # resolver_mode="auto" runs the JVM extract+admit path for waves of
     # at least this many rows (the measured crossover, see __init__)
     auto_jvm_threshold = 1_500_000
@@ -440,8 +437,6 @@ class SparkCrawler:
         # states; cleanup runs from close()
         self.hooks = hooks
         self._session_id: Optional[str] = None
-        self._seen_bucketed: Optional[DataFrame] = None
-        self._compact_round = -1
         # bloom sizing: frontier-derived when the caller states an
         # expected key count (operators/seen.py sized_for — ~9.6
         # bits/key at 1% FP), else BloomSeenFilter's default bitmap
@@ -461,8 +456,7 @@ class SparkCrawler:
         # setup, like the robots bootstrap below) removes the
         # docs-side Exchange+Sort from every round's sort-merge fetch
         # join: only the (small) wave side shuffles into the docs
-        # layout. This is the engine-side twin of the bucketed seen
-        # table.
+        # layout.
         n_shuffle = int(
             spark.conf.get("spark.sql.shuffle.partitions", "200")
         )
@@ -495,24 +489,27 @@ class SparkCrawler:
             # plan IS the materialized blocks, so every later join
             # reads them directly — cache-fragment substitution does
             # not reliably kick in under a join for python-UDF
-            # lineage, and the parse must never re-run in-round
-            self.robots_cache = (
+            # lineage, and the parse must never re-run in-round. Its
+            # size (the broadcast gate) is observed on that job
+            robots_cache, obs = _counted(
                 self.docs.filter(F.col("doc_id").endswith("/robots.txt"))
                 .select(
                     F.col("doc_id").alias("robots_url"),
                     robots_parse(_span_body()).alias("rules"),
-                )
-                .localCheckpoint()
+                ),
+                "robots",
             )
-            # cheap count on the just-materialized blocks: feeds the
-            # broadcast gate (bootstrap state setup)
-            self._n_robots = self.robots_cache.count()
+            self.robots_cache = robots_cache.localCheckpoint()
+            self._n_robots = obs.get["n"]
         else:
             self._n_robots = 0
 
         self._n_hosts: Optional[int] = None
         self._n_jail: Optional[int] = None
-        self._n_seen_est: Optional[int] = None
+        # exact seen-set size, set by each entry point and kept
+        # current with the admitted counts: it gates the broadcast
+        # anti-join and is CrawlStats.seen
+        self._n_seen = 0
 
     # -- seed admission (driver-side; seeds are tiny) -------------------
 
@@ -556,9 +553,7 @@ class SparkCrawler:
                 )
             )
         pending = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        # exact driver-side bootstrap count for the seen-broadcast
-        # gate (per-round admitted deltas keep it current in _loop)
-        self._n_seen_est = len(seed_seen)
+        self._n_seen = len(seed_seen)
         # seed keys that were admitted but routed away still occupy
         # the seen set
         frontier_keys = {r[8] for r in rows}
@@ -588,7 +583,7 @@ class SparkCrawler:
             1, min(cap, est_rows // self.checkpoint_rows_per_part + 1)
         )
 
-    # -- seen anti-join (bucketed fast path) -----------------------------
+    # -- seen anti-join ----------------------------------------------------
 
     def _read_seen(self) -> DataFrame:
         """The full seen set from its snapshots (store mode)."""
@@ -597,52 +592,13 @@ class SparkCrawler:
         )
 
     def _anti_seen(self, cand: DataFrame, seen: DataFrame) -> DataFrame:
-        """Remove already-seen keys from ``cand``.
-
-        With a compacted bucketed seen snapshot attached, the big
-        anti-join side is a bucketed table scan (no seen-side
-        exchange; candidates shuffle into its bucket layout) and the
-        post-compaction rounds — a few small deltas — broadcast.
-        Otherwise: the plain anti-join against the in-memory union."""
-        if self._seen_bucketed is not None:
-            out = cand.join(
-                self._seen_bucketed.select("seen_key"),
-                "seen_key", "left_anti",
-            )
-            recent = self.store.table("seen").read_since(
-                self.spark, self._compact_round
-            )
-            if recent is not None:
-                out = out.join(
-                    F.broadcast(recent.select("seen_key")),
-                    "seen_key", "left_anti",
-                )
-            return out
-        # driver-tracked seen size gates a broadcast anti-join (no
-        # exchange on either side) while the set is small; seed crawls
-        # track it exactly (bootstrap count + per-round admitted
-        # deltas), frontier/resume entries leave it None -> exchange
+        """Remove already-seen keys from ``cand``: one anti-join,
+        broadcast (no exchange on either side) while the exact seen
+        size is small."""
         return cand.join(
-            self._maybe_broadcast(
-                seen.select("seen_key"), self._n_seen_est
-            ),
+            self._maybe_broadcast(seen.select("seen_key"), self._n_seen),
             "seen_key", "left_anti",
         )
-
-    def _maybe_compact_seen(self, r: int) -> None:
-        """Cadenced seen-table compaction (store mode): rewrite the
-        full set as ONE bucketed snapshot and re-attach it as a
-        bucketed table scan for the next rounds' anti-joins."""
-        k = self.seen_compact_every
-        if not k or r % k != k - 1:
-            return
-        self.store.table("seen_bucketed").append(
-            self._read_seen(), r, bucket_by=("seen_key", SEEN_BUCKETS)
-        )
-        self._seen_bucketed = self.store.table(
-            "seen_bucketed"
-        ).read_bucketed(self.spark, table_name="seen_bucketed_attach")
-        self._compact_round = r
 
     # -- entry points -----------------------------------------------------
 
@@ -688,18 +644,14 @@ class SparkCrawler:
         ft = self.store.table("frontier")
         r0 = ft.latest_round()
         assert r0 is not None, "no frontier snapshot to resume from"
-        sb = self.store.table("seen_bucketed")
-        last_compact = sb.latest_round()
-        if last_compact is not None:
-            # re-attach the compacted bucketed seen scan (files carry
-            # the bucket ids; the in-memory catalog forgot them)
-            self._seen_bucketed = sb.read_bucketed(
-                spark, table_name="seen_bucketed_attach"
-            )
-            self._compact_round = last_compact
-        parked = self.store.table("parked_state").read_latest(spark)
-        if parked is not None and parked.isEmpty():
-            parked = None
+        # state sizes from the manifests' Parquet-footer row counts: an
+        # empty latest parked snapshot means nothing is parked
+        pt = self.store.table("parked_state")
+        snaps = pt.snapshots()
+        parked = pt.read_latest(spark) if snaps and snaps[-1]["rows"] else None
+        self._n_seen = sum(
+            s["rows"] for s in self.store.table("seen").snapshots()
+        )
         seen = self._read_seen()
         if self.bloom is not None:
             # the bitmaps are the OR of every seen key's bits: rebuild
@@ -724,6 +676,7 @@ class SparkCrawler:
         bench entry (one or few mega-rounds over a large frontier)."""
         if seen is None:
             seen = _seen_rows(pending, 0)
+        self._n_seen = seen.count()
         if self.bloom is not None:
             # seed the filter with the initial seen keys — run() does
             # this for seed crawls; without it every frontier key
@@ -770,22 +723,27 @@ class SparkCrawler:
                 continue
             mode = self._round_mode(n_wave)
             selected, deferred = self._select(elig)
-            # new hosts only enter at depth 0 (worker.c:269-283); the
-            # counts on the materialized blocks are metadata-cheap and
-            # feed the broadcast gates of the per-round joins
+            # new hosts only enter at depth 0 (worker.c:269-283); their
+            # sizes, observed on the checkpoints, feed the broadcast
+            # gates of the per-round joins
             if self.robots_enabled and d == 0:
-                hosts = self._update_hosts(hosts, selected).localCheckpoint()
-                self._n_hosts = hosts.count()
+                hosts, obs_h = _counted(
+                    self._update_hosts(hosts, selected), f"hosts_r{r}"
+                )
+                hosts = hosts.localCheckpoint()
+                self._n_hosts = obs_h.get["n"]
             if self.jail_crawlers and d == 0:
-                jail = self._update_jail(jail, selected).localCheckpoint()
-                self._n_jail = jail.count()
+                jail, obs_j = _counted(
+                    self._update_jail(jail, selected), f"jail_r{r}"
+                )
+                jail = jail.localCheckpoint()
+                self._n_jail = obs_j.get["n"]
 
-            obs_f = Observation(f"fetch_r{r}")
-            fetched = (
-                self._fetch_plan(self._gate(selected, hosts, jail), r)
-                .observe(obs_f, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
+            fetched, obs_f = _counted(
+                self._fetch_plan(self._gate(selected, hosts, jail), r),
+                f"fetch_r{r}",
             )
+            fetched = fetched.localCheckpoint()
             n_fetched = obs_f.get["n"]
             parse_input, names = self._parse_input(fetched, names, r)
             if names is not None:
@@ -801,8 +759,7 @@ class SparkCrawler:
             for c in caches:
                 c.unpersist()
             n_admitted, n_targets = obs_a.get["n"], obs_a.get["targets"]
-            if self._n_seen_est is not None:
-                self._n_seen_est += n_admitted
+            self._n_seen += n_admitted
 
             new_pending, new_seen, parked = self._route(
                 admitted, n_admitted, n_targets, seen, parked, deferred,
@@ -816,7 +773,6 @@ class SparkCrawler:
                 pending = self.store.table("frontier").read_round(
                     spark, r + 1
                 ).persist()
-                self._maybe_compact_seen(r)
                 seen = self._read_seen().persist()
             else:
                 # coalesce before the checkpoint: the 3-way union
@@ -874,7 +830,7 @@ class SparkCrawler:
             r += 1
             stats.rounds = r
 
-        stats.seen = seen.count()
+        stats.seen = self._n_seen
         stats.wall_s = time.time() - t0
         self._final_seen = seen
         self._finish_session(stats, r)
@@ -1286,14 +1242,11 @@ class SparkCrawler:
             definitely_new, maybe = self.bloom.split(
                 candidates.withColumn("key_hash", F.xxhash64("seen_key"))
             )
-            obs_bloom = [Observation(f"bloom_new_r{r}"),
-                         Observation(f"bloom_maybe_r{r}")]
-            definitely_new = definitely_new.observe(
-                obs_bloom[0], F.count(F.lit(1)).alias("n")
+            definitely_new, obs_new = _counted(
+                definitely_new, f"bloom_new_r{r}"
             )
-            maybe = maybe.observe(
-                obs_bloom[1], F.count(F.lit(1)).alias("n")
-            )
+            maybe, obs_maybe = _counted(maybe, f"bloom_maybe_r{r}")
+            obs_bloom = [obs_new, obs_maybe]
             admitted = definitely_new.unionByName(
                 self._anti_seen(maybe, seen)
             ).drop("key_hash")

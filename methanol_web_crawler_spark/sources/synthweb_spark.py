@@ -101,8 +101,14 @@ def generate_web_df(
     host_col = F.col("host_ix")
     local_col = F.col("local_ix")
     cnt = F.col("cnt")
-    url = _page_url(host_col, local_col)
-    kind = _page_kind(host_col, local_col)
+    n_exp = links_per_doc - 1
+
+    def expander(i: int) -> "F.Column":
+        # expander links: page j -> pages j*L+i+1 — full coverage of
+        # the host in ~log_L(cnt) crawl rounds (avoids the
+        # pathological long-tail BFS of purely random targets)
+        # (L-1)-ary tree: j -> j*(L-1)+1..(L-1) covers every id
+        return _page_url(host_col, (local_col * n_exp + F.lit(i + 1)) % cnt)
 
     # link targets: mostly same-host (existing local_ix), some
     # cross-host (the other host's page 0 — its discovery root)
@@ -112,25 +118,19 @@ def generate_web_df(
         other_host = (
             r % F.lit(max(n_hosts - 1, 1)) + host_col + 1
         ) % F.lit(n_hosts)
-        if i < links_per_doc - 1:
-            # expander links: page j -> pages j*L+i+1 — full coverage
-            # of the host in ~log_L(cnt) crawl rounds (avoids the
-            # pathological long-tail BFS of purely random targets)
-            # (L-1)-ary tree: j -> j*(L-1)+1..(L-1) covers every id
-            tgt_local = (
-                local_col * (links_per_doc - 1) + F.lit(i + 1)
-            ) % cnt
+        if i < n_exp:
+            same_host = expander(i)
         else:
-            tgt_local = _h(seed + 200 + i, host_col, local_col) % cnt
+            same_host = _page_url(
+                host_col, _h(seed + 200 + i, host_col, local_col) % cnt
+            )
         return F.when(
             is_cross, _page_url(other_host, F.lit(0).cast("long"))
-        ).otherwise(_page_url(host_col, tgt_local))
+        ).otherwise(same_host)
 
     # all expander links present; the last (random) link appears on a
     # hash-chosen subset of pages
-    n_links = F.lit(links_per_doc - 1) + (
-        _h(seed + 1, host_col, local_col) % 2
-    )
+    n_links = F.lit(n_exp) + (_h(seed + 1, host_col, local_col) % 2)
 
     # text_repeat scales the per-document text volume toward realistic
     # page sizes (real pages are tens of KB; parse/canonicalize cost
@@ -143,6 +143,19 @@ def generate_web_df(
         (_h(seed + 2, host_col, local_col) % 1000).cast("string"),
     )
 
+    # the URL columns are computed once, in their own projection, and
+    # the bodies below reuse them: one projection holding every
+    # _page_url copy outgrows the 64 KB generated-method limit
+    docs = docs.select(
+        "host_ix", "local_ix", "cnt",
+        _page_url(host_col, local_col).alias("url"),
+        _page_kind(host_col, local_col).alias("kind"),
+        words.alias("words"), n_links.alias("n_links"),
+        *[link(i).alias(f"link{i}") for i in range(links_per_doc)],
+        *[expander(i).alias(f"exp{i}") for i in range(n_exp)],
+    )
+    kind, words, n_links = F.col("kind"), F.col("words"), F.col("n_links")
+
     # text span: an HTML fragment with up to `links_per_doc` hrefs,
     # only the first n_links of which are "real" (the rest omitted)
     frag_parts = []
@@ -152,7 +165,7 @@ def generate_web_df(
                 F.lit(i) < n_links,
                 F.concat(
                     F.lit('<p>'), words, F.lit('</p><a href="'),
-                    link(i), F.lit('">x</a>'),
+                    F.col(f"link{i}"), F.lit('">x</a>'),
                 ),
             ).otherwise(F.lit(""))
         )
@@ -161,33 +174,18 @@ def generate_web_df(
     # css/txt pages carry the same expander targets (multiple url()
     # refs / bare URLs) so the host coverage tree survives any page
     # kind on the path
-    css_body = F.concat(
-        *[
-            F.concat(
-                F.lit(f".x{i} {{ background: url("),
-                _page_url(
-                    host_col,
-                    (local_col * (links_per_doc - 1) + F.lit(i + 1))
-                    % cnt,
-                ),
-                F.lit("); }\n"),
-            )
-            for i in range(links_per_doc - 1)
-        ]
-    )
+    css_body = F.concat(*[
+        F.concat(
+            F.lit(f".x{i} {{ background: url("), F.col(f"exp{i}"),
+            F.lit("); }\n"),
+        )
+        for i in range(n_exp)
+    ])
     txt_body = F.concat(
         words,
         *[
-            F.concat(
-                F.lit(" "),
-                _page_url(
-                    host_col,
-                    (local_col * (links_per_doc - 1) + F.lit(i + 1))
-                    % cnt,
-                ),
-                F.lit(" "),
-            )
-            for i in range(links_per_doc - 1)
+            F.concat(F.lit(" "), F.col(f"exp{i}"), F.lit(" "))
+            for i in range(n_exp)
         ],
         F.lit("tail"),
     )
@@ -239,7 +237,7 @@ def generate_web_df(
     )
 
     pages = docs.select(
-        url.alias("doc_id"),
+        F.col("url").alias("doc_id"),
         F.when(is_redirect, F.array().cast(
             "array<struct<kind:string,text:string,media_ref:string,"
             "offset:int>>"

@@ -3,8 +3,10 @@
 Iceberg's transactional semantics behind a thin interface, with no
 Iceberg runtime (SURVEY.md §7 note): immutable parquet data files + a
 JSON manifest log with atomic commit (write-tmp + rename) and
-time-travel reads. The crawl plan uses ``append`` (optionally
-bucketed), the ``read_*`` family and ``latest_round``.
+time-travel reads. The crawl plan uses ``append``, ``snapshots``,
+``read_round``/``read_until``/``read_latest`` and ``latest_round``;
+the bucketed append, ``read_since`` and ``read_bucketed`` have no
+engine caller (PLANS.md, bucketed seen table).
 
 Layout::
 
@@ -63,11 +65,10 @@ class SnapshotTable:
 
         ``bucket_by=(col, n)`` writes the snapshot as a BUCKETED
         parquet table (repartitioned first so each bucket is ONE
-        file, sorted by the bucket column) — the seen-table layout at
-        scale: a bucketed scan re-attached via ``read_bucketed``
-        joins with NO exchange on this side, so the per-round
-        anti-join shuffles only the candidates (PLANS.md seen-table
-        design, enacted)."""
+        file, sorted by the bucket column): a bucketed scan
+        re-attached via ``read_bucketed`` joins on ``col`` with NO
+        exchange on this side, so only the other side shuffles
+        (PLANS.md, bucketed seen table)."""
         path = os.path.join(
             self.data_dir, f"r={round_no:06d}-{uuid.uuid4().hex[:8]}"
         )

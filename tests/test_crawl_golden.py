@@ -306,6 +306,42 @@ class TestResume:
         assert rounds_of(engine_b, spark) == rounds_of(engine_full, spark)
 
 
+@pytest.mark.parametrize(
+    "entry", ["run", "run-store", "resume", "run_frontier"]
+)
+def test_seen_size_is_exact(spark, tmp_path, entry):
+    """Every entry point keeps the exact seen size that gates the
+    broadcast anti-join, and ``CrawlStats.seen`` is that size."""
+    web, cfg, kw = _robots_crawl()
+
+    def engine(state_dir=None, **more):
+        return SparkCrawler(
+            spark, web.to_spark(spark), cfg,
+            state_dir=state_dir and str(tmp_path / state_dir),
+            **kw, **more,
+        )
+
+    if entry == "run":
+        eng = engine()
+        stats = eng.run(web.seeds)
+    elif entry == "run-store":
+        eng = engine("s")
+        stats = eng.run(web.seeds)
+    elif entry == "resume":
+        engine("s", max_rounds=2).run(web.seeds)
+        eng = engine("s")
+        stats = eng.resume()
+        assert stats.seen == sum(
+            s["rows"] for s in eng.store.table("seen").snapshots()
+        )
+    else:
+        pending, seen, _ = engine()._admit_seeds(web.seeds)
+        eng = engine()
+        stats = eng.run_frontier(pending, seen)
+    assert stats.seen > len(web.seeds)
+    assert stats.seen == eng._n_seen == eng._final_seen.count()
+
+
 class TestSeedGuessing:
     def test_protocol_less_seeds(self, spark, tmp_path):
         """CLI-style seeds without protocol crawl identically in

@@ -225,6 +225,41 @@ class TestSnapshotStore:
         t = SnapshotStore(str(tmp_path / "store")).table("x")
         assert 0 < jobs(lambda: t.append(df, 0)) <= bare
 
+    def test_bucketed_anti_join_no_seen_side_exchange(
+        self, spark, tmp_path
+    ):
+        from tests.test_plan_audit import formatted_plan
+
+        store = SnapshotStore(str(tmp_path))
+        t = store.table("seen_bucketed")
+        df = spark.range(1000).select(
+            F.concat(F.lit("k"), F.col("id").cast("string")).alias(
+                "seen_key"
+            ),
+            F.xxhash64(F.col("id").cast("string")).alias("key_hash"),
+            F.lit(0).alias("first_round"),
+        )
+        t.append(df, 0, bucket_by=("seen_key", 8))
+        att = t.read_bucketed(spark, table_name="seen_bt_test")
+        assert att.count() == 1000
+        cand = spark.range(500).select(
+            F.concat(F.lit("k"), (F.col("id") * 3).cast("string"))
+            .alias("seen_key")
+        )
+        j = cand.join(
+            att.select("seen_key").hint("merge"),
+            "seen_key", "left_anti",
+        )
+        plan = formatted_plan(j)
+        assert "Bucketed: true" in plan
+        # exactly ONE exchange node — the candidates side shuffling
+        # into the seen table's bucket layout; the seen scan has none
+        # (formatted output repeats each node in a details section, so
+        # count the numbered node headers, not the substring)
+        import re as _re
+
+        assert len(_re.findall(r"\(\d+\) Exchange", plan)) == 1
+
 
 class TestDistributedGenerator:
     def test_deterministic_across_parallelism(self, spark):
@@ -304,102 +339,3 @@ class TestBloomSizing:
         # and inserted keys never leak through
         n2, m2 = b.split(seen)
         assert n2.count() == 0
-
-
-class TestSeenCompaction:
-    """Bucketed seen table (PLANS.md design, enacted): cadenced
-    compaction + bucketed-scan anti-join."""
-
-    def test_compacted_crawl_matches_oracle(self, spark, tmp_path):
-        from methanol_web_crawler_spark.config import default_config
-        from methanol_web_crawler_spark.oracle.crawler import (
-            OracleCrawler,
-        )
-        from methanol_web_crawler_spark.plans.crawl import SparkCrawler
-        from methanol_web_crawler_spark.sources.synthweb import (
-            generate_web,
-        )
-
-        web = generate_web(n_docs=60, n_hosts=4, seed=99)
-        cfg = default_config()
-        oracle = OracleCrawler(web.doc_map, cfg).run(web.seeds)
-        engine = SparkCrawler(
-            spark, web.to_spark(spark), cfg, state_dir=str(tmp_path),
-        )
-        engine.seen_compact_every = 1
-        stats = engine.run(web.seeds)
-        assert engine._seen_bucketed is not None  # compaction ran
-        seen = {
-            r["seen_key"]
-            for r in engine._final_seen.select("seen_key").collect()
-        }
-        assert seen == oracle.seen
-        assert stats.fetched == len(oracle.fetched_urls)
-
-    def test_resume_reattaches_bucketed_seen(self, spark, tmp_path):
-        from methanol_web_crawler_spark.config import default_config
-        from methanol_web_crawler_spark.plans.crawl import SparkCrawler
-        from methanol_web_crawler_spark.sources.synthweb import (
-            generate_web,
-        )
-
-        web = generate_web(n_docs=60, n_hosts=4, seed=99)
-        cfg = default_config()
-
-        def compacting(state_dir, **kw):
-            engine = SparkCrawler(
-                spark, web.to_spark(spark), cfg, state_dir=state_dir, **kw
-            )
-            engine.seen_compact_every = 1
-            return engine
-
-        full = compacting(str(tmp_path / "full"))
-        want = full.run(web.seeds)
-        compacting(str(tmp_path / "part"), max_rounds=2).run(web.seeds)
-        cont = compacting(str(tmp_path / "part"))
-        got = cont.resume()
-        assert cont._compact_round >= 1  # re-attached before looping
-        seen_full = {
-            r["seen_key"]
-            for r in full._final_seen.select("seen_key").collect()
-        }
-        seen_cont = {
-            r["seen_key"]
-            for r in cont._final_seen.select("seen_key").collect()
-        }
-        assert seen_cont == seen_full
-
-    def test_bucketed_anti_join_no_seen_side_exchange(
-        self, spark, tmp_path
-    ):
-        from tests.test_plan_audit import formatted_plan
-
-        store = SnapshotStore(str(tmp_path))
-        t = store.table("seen_bucketed")
-        df = spark.range(1000).select(
-            F.concat(F.lit("k"), F.col("id").cast("string")).alias(
-                "seen_key"
-            ),
-            F.xxhash64(F.col("id").cast("string")).alias("key_hash"),
-            F.lit(0).alias("first_round"),
-        )
-        t.append(df, 0, bucket_by=("seen_key", 8))
-        att = t.read_bucketed(spark, table_name="seen_bt_test")
-        assert att.count() == 1000
-        cand = spark.range(500).select(
-            F.concat(F.lit("k"), (F.col("id") * 3).cast("string"))
-            .alias("seen_key")
-        )
-        j = cand.join(
-            att.select("seen_key").hint("merge"),
-            "seen_key", "left_anti",
-        )
-        plan = formatted_plan(j)
-        assert "Bucketed: true" in plan
-        # exactly ONE exchange node — the candidates side shuffling
-        # into the seen table's bucket layout; the seen scan has none
-        # (formatted output repeats each node in a details section, so
-        # count the numbered node headers, not the substring)
-        import re as _re
-
-        assert len(_re.findall(r"\(\d+\) Exchange", plan)) == 1
