@@ -96,8 +96,27 @@ HOSTS_SCHEMA = T.StructType(
 JAIL_SCHEMA = "host string, jail_prefix string"
 # writefile naming state: cumulative per-basename download counts
 NAMES_SCHEMA = "base string, cnt long"
-METRICS_COLS = ("round", "depth", "fetched", "admitted", "targets",
-                "selected")
+METRICS_SCHEMA = T.StructType(
+    [T.StructField(c, T.IntegerType()) for c in ("round", "depth")]
+    + [T.StructField(c, T.LongType())
+       for c in ("fetched", "admitted", "targets", "selected")]
+)
+TARGETS_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("filetype", T.StringType()),
+        T.StructField("round", T.IntegerType()),
+    ]
+)
+SESSIONS_SCHEMA = T.StructType(
+    [
+        T.StructField("session_id", T.StringType()),
+        T.StructField("state", T.StringType()),
+        T.StructField("rounds", T.IntegerType()),
+        T.StructField("fetched", T.LongType()),
+        T.StructField("seen", T.LongType()),
+    ]
+)
 
 _SORT_COLS = ["ft_rank", "parent_round", "parent_ord", "sibling_ix"]
 
@@ -513,7 +532,9 @@ class SparkCrawler:
 
     # -- seed admission (driver-side; seeds are tiny) -------------------
 
-    def _admit_seeds(self, seeds: List[str]) -> Tuple[DataFrame, DataFrame, List[dict]]:
+    def _admit_seeds(self, seeds: List[str]) -> Tuple[list, DataFrame, list]:
+        """(frontier rows, seen frame, target rows) of the seeds: the
+        FRONTIER_SCHEMA and TARGETS_SCHEMA rows stay on the driver."""
         seed_seen: set = set()
 
         def tryadd(k: str) -> bool:
@@ -522,10 +543,11 @@ class SparkCrawler:
             seed_seen.add(k)
             return True
 
-        # content types for HEAD-classified seeds via one tiny lookup
+        # content types for HEAD-classified seeds via one tiny lookup;
+        # only a "lookup" binding classifies a seed HEAD
         ct_rows = (
             self.docs_ct.filter(F.col("doc_id").isin(seeds)).collect()
-            if seeds
+            if seeds and self.any_lookup
             else []
         )
         ct_map = {r["doc_id"]: r["content_type"] for r in ct_rows}
@@ -538,10 +560,7 @@ class SparkCrawler:
             if adm is None or adm.route == "discard":
                 continue
             if adm.route == "target":
-                targets.append(
-                    {"url": adm.parsed.url, "filetype": adm.filetype,
-                     "round": 0}
-                )
+                targets.append((adm.parsed.url, adm.filetype, 0))
                 continue
             p = adm.parsed
             rows.append(
@@ -552,19 +571,12 @@ class SparkCrawler:
                     self.crawler_name, False, 0, -1, -1, ix, 0, False,
                 )
             )
-        pending = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
         self._n_seen = len(seed_seen)
-        # seed keys that were admitted but routed away still occupy
-        # the seen set
-        frontier_keys = {r[8] for r in rows}
-        extra = [(k,) for k in seed_seen if k not in frontier_keys]
-        if extra:
-            pending_keys = pending.select("seen_key").unionByName(
-                self.spark.createDataFrame(extra, "seen_key string")
-            )
-        else:
-            pending_keys = pending
-        return pending, _seen_rows(pending_keys, 0), targets
+        # every admitted seed key is seen, routed to the frontier or not
+        seen_keys = self.spark.createDataFrame(
+            [(k,) for k in sorted(seed_seen)], "seen_key string"
+        )
+        return rows, _seen_rows(seen_keys, 0), targets
 
     # -- scale-adaptive plan gates ---------------------------------------
 
@@ -616,23 +628,23 @@ class SparkCrawler:
             init_fn = resolve_init(self.crawler.init)
             if init_fn is not None:
                 seeds = list(init_fn(seeds))
-        pending, seen, seed_targets = self._admit_seeds(seeds)
+        rows, seen, seed_targets = self._admit_seeds(seeds)
         if self.store:
-            # snapshot 0 — the resume baseline
+            # snapshot 0 — the resume baseline; the frontier and target
+            # rows are on the driver, which writes them with no job
             self.store.table("seen").append(seen, 0)
-            self.store.table("frontier").append(pending, 0)
+            self.store.table("frontier").append(
+                rows, 0, schema=FRONTIER_SCHEMA
+            )
             if seed_targets:
                 self.store.table("targets").append(
-                    self.spark.createDataFrame(
-                        [(t["url"], t["filetype"], 0) for t in seed_targets],
-                        "url string, filetype string, round int",
-                    ),
-                    0,
+                    seed_targets, 0, schema=TARGETS_SCHEMA
                 )
         if self.bloom is not None:
             self.bloom.update(seen.select("key_hash"))
         return self._loop(
-            pending, seen, None, 0, CrawlStats(targets=len(seed_targets))
+            self.spark.createDataFrame(rows, FRONTIER_SCHEMA), seen, None,
+            0, CrawlStats(targets=len(seed_targets)),
         )
 
     def resume(self) -> CrawlStats:
@@ -885,7 +897,7 @@ class SparkCrawler:
         if self.store:
             self.store.table("frontier").append(pending, r)
             self.store.table("parked_state").append(
-                self.spark.createDataFrame([], FRONTIER_SCHEMA), r
+                [], r, schema=FRONTIER_SCHEMA
             )
         return pending
 
@@ -1335,12 +1347,8 @@ class SparkCrawler:
         stats.per_round.append(row)
         if self.store:
             self.store.table("metrics").append(
-                self.spark.createDataFrame(
-                    [tuple(row[c] for c in METRICS_COLS)],
-                    "round int, depth int, fetched long,"
-                    " admitted long, targets long, selected long",
-                ),
-                row["round"],
+                [tuple(row[c] for c in METRICS_SCHEMA.names)],
+                row["round"], schema=METRICS_SCHEMA,
             )
 
     def _snapshot_state(
@@ -1384,12 +1392,7 @@ class SparkCrawler:
         if not self.store:
             return
         self.store.table("sessions").append(
-            self.spark.createDataFrame(
-                [self._session_row(state, stats, r)],
-                "session_id string, state string, rounds int,"
-                " fetched long, seen long",
-            ),
-            r,
+            [self._session_row(state, stats, r)], r, schema=SESSIONS_SCHEMA
         )
 
     def _finish_session(self, stats: CrawlStats, r: int) -> None:

@@ -11,7 +11,10 @@ import pytest
 
 from methanol_web_crawler_spark.config import default_config, media_config
 from methanol_web_crawler_spark.oracle.crawler import OracleCrawler
-from methanol_web_crawler_spark.plans.crawl import SparkCrawler
+from methanol_web_crawler_spark.plans.crawl import (
+    FRONTIER_SCHEMA,
+    SparkCrawler,
+)
 from methanol_web_crawler_spark.sources.synthweb import (
     SynthDoc,
     SynthWeb,
@@ -274,6 +277,9 @@ class TestResume:
     @pytest.mark.parametrize(
         "crawl, stop",
         [
+            # stopped before round 0, only the seed snapshots exist:
+            # the frontier the driver wrote is the resume point
+            (_robots_crawl, 0),
             (_robots_crawl, 2),
             # stopped before the adoption wave, the resume restores and
             # adopts the parked hosts; after it, the hosts parked since
@@ -282,8 +288,8 @@ class TestResume:
             (_jail_crawl, 1),
             (_bloom_crawl, 1),
         ],
-        ids=["robots-r2", "external-r9", "external-r10", "jail-r1",
-             "bloom-r1"],
+        ids=["seed-r0", "robots-r2", "external-r9", "external-r10",
+             "jail-r1", "bloom-r1"],
     )
     def test_resume_from_checkpoint(self, spark, tmp_path, crawl, stop):
         """Kill after round ``stop``, resume from the snapshots — final
@@ -335,9 +341,11 @@ def test_seen_size_is_exact(spark, tmp_path, entry):
             s["rows"] for s in eng.store.table("seen").snapshots()
         )
     else:
-        pending, seen, _ = engine()._admit_seeds(web.seeds)
+        rows, seen, _ = engine()._admit_seeds(web.seeds)
         eng = engine()
-        stats = eng.run_frontier(pending, seen)
+        stats = eng.run_frontier(
+            spark.createDataFrame(rows, FRONTIER_SCHEMA), seen
+        )
     assert stats.seen > len(web.seeds)
     assert stats.seen == eng._n_seen == eng._final_seen.count()
 

@@ -5,6 +5,7 @@ import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from methanol_web_crawler_spark.operators.media import (
     decode_media,
@@ -13,6 +14,19 @@ from methanol_web_crawler_spark.operators.media import (
 from methanol_web_crawler_spark.operators.seen import BloomSeenFilter
 from methanol_web_crawler_spark.sources.synthweb_spark import generate_web_df
 from methanol_web_crawler_spark.sources.tables import SnapshotStore
+
+
+def _jobs(spark, action):
+    """(result, Spark jobs run) of ``action()``, counted under a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"store-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestBloomSeenFilter:
@@ -209,21 +223,70 @@ class TestSnapshotStore:
     def test_append_runs_no_job_after_the_write(self, spark, tmp_path):
         """The lineage costs no Spark job: an append runs no more jobs
         than a bare parquet write of the same frame."""
-        sc = spark.sparkContext
         df = spark.range(0, 100, numPartitions=4)
-
-        def jobs(action):
-            group = f"append-jobs-{uuid.uuid4().hex}"
-            sc.setJobGroup(group, group)
-            try:
-                action()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-
-        bare = jobs(lambda: df.write.parquet(str(tmp_path / "bare")))
+        _, bare = _jobs(
+            spark, lambda: df.write.parquet(str(tmp_path / "bare"))
+        )
         t = SnapshotStore(str(tmp_path / "store")).table("x")
-        assert 0 < jobs(lambda: t.append(df, 0)) <= bare
+        _, n = _jobs(spark, lambda: t.append(df, 0))
+        assert 0 < n <= bare
+
+    def test_reads_run_no_job(self, spark, tmp_path):
+        """A read hands the recorded schema to the Parquet reader: it
+        builds its frame with no schema-inference job, and the frame's
+        schema is the appended one with every field nullable."""
+        t = SnapshotStore(str(tmp_path)).table("x")
+        df = spark.range(0, 10, numPartitions=2).select(
+            "id",
+            F.lit(1).alias("first_round"),
+            F.when(F.col("id") > 4, F.col("id").cast("string"))
+            .alias("key"),
+        )
+        for r in range(3):
+            t.append(df, r)
+        nullable = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in df.schema]
+        )
+        assert nullable != df.schema
+        for read in (
+            lambda: t.read_round(spark, 1),
+            lambda: t.read_until(spark, 1),
+            lambda: t.read_latest(spark),
+        ):
+            frame, n = _jobs(spark, read)
+            assert n == 0
+            assert frame.schema == nullable
+        assert t.read_until(spark, 1).count() == 20
+
+    def test_append_driver_rows(self, spark, tmp_path):
+        """Rows the driver holds are written by the driver with no
+        Spark job, commit the same manifest entry as a frame append,
+        and read back as the frame of the same rows."""
+        from methanol_web_crawler_spark.plans.crawl import FRONTIER_SCHEMA
+
+        t = SnapshotStore(str(tmp_path)).table("frontier")
+        rows = [
+            ("http://a.test/x.html", 7, 6, 13, 15, "http", False, False,
+             "a.test/x.html", "a.test", "html", 0, "default", False, 1,
+             3, 2**40, 0, 0, False),
+            ("http://b.test/", 7, 6, None, None, "http", None, True,
+             "b.test/", "b.test", None, 2, "default", True, 2, -1, -1,
+             None, 1, None),
+        ]
+        for r, data in ((0, []), (1, rows)):
+            entry, n = _jobs(
+                spark, lambda: t.append(data, r, schema=FRONTIER_SCHEMA)
+            )
+            assert n == 0
+            assert entry == t.snapshots()[-1]
+            assert entry["rows"] == len(data)
+            assert list(entry["partitions"].values()) == [len(data)]
+        assert t.read_round(spark, 0).count() == 0
+        latest = t.read_latest(spark)
+        assert latest.schema == FRONTIER_SCHEMA
+        assert latest.collect() == spark.createDataFrame(
+            rows, FRONTIER_SCHEMA
+        ).collect()
 
     def test_bucketed_anti_join_no_seen_side_exchange(
         self, spark, tmp_path

@@ -44,6 +44,10 @@ class TestSessionHooks:
         assert states[0] == "running"
         assert states[-2:] == ["hook", "done"]
         assert len({r["session_id"] for r in rows}) == 1
+        types = dict(c.store.table("sessions").read_until(spark).dtypes)
+        assert [types[k] for k in ("rounds", "fetched", "seen")] == [
+            "int", "bigint", "bigint"
+        ]
 
     def test_shell_hook_gets_nol_env(self, spark, tmp_path):
         out = tmp_path / "hook_out.txt"
