@@ -50,7 +50,7 @@ from ..functions.udfs import (
     make_robots_parser,
 )
 from ..operators.admission import admit_seed
-from ..operators.seen import BloomSeenFilter
+from ..operators.seen import BloomSeenFilter, key_hash
 from ..sources.tables import SnapshotStore
 
 FRONTIER_COLS = [
@@ -85,7 +85,14 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-SEEN_COLS = ["seen_key", "key_hash", "first_round"]
+# key_hash is Spark's xxhash64(seen_key) (operators/seen.py key_hash)
+SEEN_SCHEMA = T.StructType(
+    [
+        T.StructField("seen_key", T.StringType()),
+        T.StructField("key_hash", T.LongType()),
+        T.StructField("first_round", T.IntegerType()),
+    ]
+)
 
 HOSTS_SCHEMA = T.StructType(
     [
@@ -122,7 +129,7 @@ _SORT_COLS = ["ft_rank", "parent_round", "parent_ord", "sibling_ix"]
 
 
 def _seen_rows(df: DataFrame, first_round: int) -> DataFrame:
-    """Seen-set rows (SEEN_COLS) for the keys of ``df``."""
+    """Seen-set rows (SEEN_SCHEMA) for the keys of ``df``."""
     return df.select(
         "seen_key",
         F.xxhash64("seen_key").alias("key_hash"),
@@ -217,24 +224,30 @@ def robots_gate_expr() -> "F.Column":
 
 def split_wave(
     pending: DataFrame,
+    depth_counts: Optional[Dict[int, int]] = None,
 ) -> Tuple[int, int, int, DataFrame, DataFrame]:
     """Q1 ue_next round selection: one driver agg (per-depth counts,
     a handful of rows), then the BSP wave is the min-depth slice of
-    the frontier (ue.c's depth-ordered next_url analog). Returns
+    the frontier (ue.c's depth-ordered next_url analog). A caller that
+    already knows the counts passes them as ``depth_counts`` ({depth:
+    rows}; the seed frontier is all depth 0) and no job runs. Returns
     (n_pending, depth, n_wave, elig, rest) — n_pending counts the
     whole frontier (loop-termination signal), n_wave counts only the
     min-depth slice that actually feeds this round (the auto resolver
     gate reads it; the total would overcount multi-depth backlogs)."""
-    rows = pending.groupBy("depth").agg(
-        F.count("*").alias("n")
-    ).collect()
-    if not rows:
+    if depth_counts is None:
+        rows = pending.groupBy("depth").agg(
+            F.count("*").alias("n")
+        ).collect()
+        depth_counts = {r["depth"]: r["n"] for r in rows}
+    n_pending = sum(depth_counts.values())
+    if not n_pending:
         return 0, -1, 0, pending.limit(0), pending.limit(0)
-    d = min(r["depth"] for r in rows)
+    d = min(depth for depth, n in depth_counts.items() if n)
     return (
-        sum(r["n"] for r in rows),
+        n_pending,
         d,
-        next(r["n"] for r in rows if r["depth"] == d),
+        depth_counts[d],
         pending.filter(F.col("depth") == d),
         pending.filter(F.col("depth") != d),
     )
@@ -532,9 +545,10 @@ class SparkCrawler:
 
     # -- seed admission (driver-side; seeds are tiny) -------------------
 
-    def _admit_seeds(self, seeds: List[str]) -> Tuple[list, DataFrame, list]:
-        """(frontier rows, seen frame, target rows) of the seeds: the
-        FRONTIER_SCHEMA and TARGETS_SCHEMA rows stay on the driver."""
+    def _admit_seeds(self, seeds: List[str]) -> Tuple[list, list, list]:
+        """(frontier rows, seen rows, target rows) of the seeds: row
+        tuples of FRONTIER_SCHEMA, SEEN_SCHEMA and TARGETS_SCHEMA, all
+        built on the driver (the seen keys hashed by key_hash)."""
         seed_seen: set = set()
 
         def tryadd(k: str) -> bool:
@@ -573,10 +587,8 @@ class SparkCrawler:
             )
         self._n_seen = len(seed_seen)
         # every admitted seed key is seen, routed to the frontier or not
-        seen_keys = self.spark.createDataFrame(
-            [(k,) for k in sorted(seed_seen)], "seen_key string"
-        )
-        return rows, _seen_rows(seen_keys, 0), targets
+        seen = [(k, key_hash(k), 0) for k in sorted(seed_seen)]
+        return rows, seen, targets
 
     # -- scale-adaptive plan gates ---------------------------------------
 
@@ -600,7 +612,7 @@ class SparkCrawler:
     def _read_seen(self) -> DataFrame:
         """The full seen set from its snapshots (store mode)."""
         return self.store.table("seen").read_until(self.spark).select(
-            *SEEN_COLS
+            *SEEN_SCHEMA.names
         )
 
     def _anti_seen(self, cand: DataFrame, seen: DataFrame) -> DataFrame:
@@ -630,9 +642,9 @@ class SparkCrawler:
                 seeds = list(init_fn(seeds))
         rows, seen, seed_targets = self._admit_seeds(seeds)
         if self.store:
-            # snapshot 0 — the resume baseline; the frontier and target
-            # rows are on the driver, which writes them with no job
-            self.store.table("seen").append(seen, 0)
+            # snapshot 0 — the resume baseline; the seed rows are on
+            # the driver, which writes them with no job
+            self.store.table("seen").append(seen, 0, schema=SEEN_SCHEMA)
             self.store.table("frontier").append(
                 rows, 0, schema=FRONTIER_SCHEMA
             )
@@ -641,10 +653,13 @@ class SparkCrawler:
                     seed_targets, 0, schema=TARGETS_SCHEMA
                 )
         if self.bloom is not None:
-            self.bloom.update(seen.select("key_hash"))
+            self.bloom.reset(h for _, h, _ in seen)
         return self._loop(
-            self.spark.createDataFrame(rows, FRONTIER_SCHEMA), seen, None,
+            self.spark.createDataFrame(rows, FRONTIER_SCHEMA),
+            self.spark.createDataFrame(seen, SEEN_SCHEMA), None,
             0, CrawlStats(targets=len(seed_targets)),
+            # the seed frontier is all depth 0: no count job
+            wave_counts={0: len(rows)},
         )
 
     def resume(self) -> CrawlStats:
@@ -668,6 +683,9 @@ class SparkCrawler:
         if self.bloom is not None:
             # the bitmaps are the OR of every seen key's bits: rebuild
             # them from the seen set rather than snapshot them per round
+            # (built at the first probe; a resume that runs no round
+            # builds none)
+            self.bloom.reset()
             self.bloom.update(seen.select("key_hash"))
         return self._loop(
             ft.read_round(spark, r0),
@@ -695,6 +713,7 @@ class SparkCrawler:
             # bypasses the exact anti-join as "definitely new" and the
             # seen set inflates (a bench_scaling --bloom run's seen
             # total shows it)
+            self.bloom.reset()
             self.bloom.update(seen.select("key_hash"))
         return self._loop(pending, seen, None, 0, CrawlStats())
 
@@ -708,10 +727,14 @@ class SparkCrawler:
         start_round: int,
         stats: CrawlStats,
         restore: bool = False,
+        wave_counts: Optional[Dict[int, int]] = None,
     ) -> CrawlStats:
         """The BSP round loop (worker.c:214-407): each round runs the
         phase methods below in order. They build frames and issue
-        store appends; every Spark action of a round is issued here.
+        store appends; every Spark action of a round is issued here,
+        except the bloom merge inside ``BloomSeenFilter.split``.
+        ``wave_counts`` are the first frontier's per-depth counts when
+        the caller knows them (``split_wave``).
         The round's two checkpoints are ``fetched`` and ``admitted``;
         its counts ride on them as observed metrics (worker.c:913-917
         counts as it goes), so counting costs no job."""
@@ -726,7 +749,10 @@ class SparkCrawler:
 
         r = start_round
         while r < self.max_rounds:
-            n_pending, d, n_wave, elig, rest = split_wave(pending)
+            n_pending, d, n_wave, elig, rest = split_wave(
+                pending, wave_counts
+            )
+            wave_counts = None
             if n_pending == 0:
                 if parked is None or parked.isEmpty():
                     break

@@ -5,6 +5,7 @@ from methanol_web_crawler_spark.config import default_config
 from methanol_web_crawler_spark.oracle.crawler import OracleCrawler
 from methanol_web_crawler_spark.plans.crawl import SparkCrawler
 from methanol_web_crawler_spark.sources.synthweb import generate_web
+from tests.test_seen_bloom_media_tables import _jobs
 
 
 def seen_of(engine):
@@ -69,6 +70,68 @@ class TestBloomParity:
             new, maybe = m["bloom_definitely_new"], m["bloom_maybe"]
             assert new <= m["admitted"] <= new + maybe, m
             assert m["admitted"] == first.get(m["round"], 0), m
+
+
+class TestBloomCrawlEntries:
+    def test_seed_run_and_idle_resume_run_no_job(self, spark, tmp_path):
+        """Store and bloom on: the seeds are hashed, snapshotted and
+        inserted into the bloom on the driver, and inserts only merge
+        at the next probe, so a ``run`` with ``max_rounds=0`` and a
+        fresh engine's ``resume`` that runs no round start no Spark
+        job (before: 4 for the run, 3 and 4 for the two resumes). The
+        state they leave resumes to the oracle's crawl."""
+        web = generate_web(n_docs=60, n_hosts=4, seed=99)
+        cfg = default_config(robotstxt=True)
+        docs = web.to_spark(spark)
+
+        def engine(state, max_rounds):
+            return SparkCrawler(
+                spark, docs, cfg, politeness_budget=2,
+                state_dir=str(tmp_path / state), bloom_buckets=8,
+                max_rounds=max_rounds,
+            )
+
+        # engines are built outside the counted calls: construction
+        # checkpoints the robots cache
+        first = engine("seed", 0)
+        stats, jobs = _jobs(spark, lambda: first.run(web.seeds))
+        assert (jobs, stats.rounds, stats.seen) == (0, 0, len(web.seeds))
+        second = engine("seed", 0)
+        stats, jobs = _jobs(spark, second.resume)
+        assert (jobs, stats.rounds) == (0, 0)
+
+        engine("r1", 1).run(web.seeds)
+        second = engine("r1", 1)
+        stats, jobs = _jobs(spark, second.resume)
+        assert (jobs, stats.rounds) == (0, 0)
+
+        oracle = OracleCrawler(
+            web.doc_map, cfg, politeness_budget=2
+        ).run(web.seeds)
+        for state in ("seed", "r1"):
+            last = engine(state, 10_000)
+            last.resume()
+            assert seen_of(last) == oracle.seen, state
+            got = rounds_of(last, spark)
+            for rnd, records in enumerate(oracle.rounds):
+                assert got.get(rnd, []) == [r.url for r in records], rnd
+
+    def test_second_run_starts_a_fresh_filter(self, spark):
+        """A second ``run`` on the same store-less bloom engine, from
+        other seeds, crawls what a fresh crawl of those seeds does."""
+        web = generate_web(n_docs=60, n_hosts=4, seed=99)
+        cfg = default_config(robotstxt=True)
+        engine = SparkCrawler(
+            spark, web.to_spark(spark), cfg, politeness_budget=2,
+            bloom_buckets=8,
+        )
+        engine.run(web.seeds[:1])
+        stats = engine.run(web.seeds[1:])
+        oracle = OracleCrawler(
+            web.doc_map, cfg, politeness_budget=2
+        ).run(web.seeds[1:])
+        assert seen_of(engine) == oracle.seen
+        assert stats.fetched == sum(len(r) for r in oracle.rounds)
 
 
 class TestSaltedPolitenessParity:

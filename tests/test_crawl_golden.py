@@ -13,6 +13,7 @@ from methanol_web_crawler_spark.config import default_config, media_config
 from methanol_web_crawler_spark.oracle.crawler import OracleCrawler
 from methanol_web_crawler_spark.plans.crawl import (
     FRONTIER_SCHEMA,
+    SEEN_SCHEMA,
     SparkCrawler,
 )
 from methanol_web_crawler_spark.sources.synthweb import (
@@ -341,10 +342,11 @@ def test_seen_size_is_exact(spark, tmp_path, entry):
             s["rows"] for s in eng.store.table("seen").snapshots()
         )
     else:
-        rows, seen, _ = engine()._admit_seeds(web.seeds)
+        rows, seen_rows, _ = engine()._admit_seeds(web.seeds)
         eng = engine()
         stats = eng.run_frontier(
-            spark.createDataFrame(rows, FRONTIER_SCHEMA), seen
+            spark.createDataFrame(rows, FRONTIER_SCHEMA),
+            spark.createDataFrame(seen_rows, SEEN_SCHEMA),
         )
     assert stats.seen > len(web.seeds)
     assert stats.seen == eng._n_seen == eng._final_seen.count()

@@ -1,6 +1,7 @@
 """Unit tests: partitioned bloom seen-filter, media plumbing,
 snapshot tables, distributed generator determinism."""
 
+import random
 import uuid
 
 import pytest
@@ -11,7 +12,10 @@ from methanol_web_crawler_spark.operators.media import (
     decode_media,
     media_metadata,
 )
-from methanol_web_crawler_spark.operators.seen import BloomSeenFilter
+from methanol_web_crawler_spark.operators.seen import (
+    BloomSeenFilter,
+    key_hash,
+)
 from methanol_web_crawler_spark.sources.synthweb_spark import generate_web_df
 from methanol_web_crawler_spark.sources.tables import SnapshotStore
 
@@ -29,13 +33,53 @@ def _jobs(spark, action):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-class TestBloomSeenFilter:
-    def test_no_false_negatives(self, spark):
-        bloom = BloomSeenFilter(spark, n_buckets=8, m_bits=1 << 14, k=4)
-        keys = spark.range(1000).select(
-            F.xxhash64(F.col("id").cast("string")).alias("key_hash")
-        )
+def _key_hashes(spark, ids):
+    return spark.range(*ids).select(
+        F.xxhash64(F.col("id").cast("string")).alias("key_hash")
+    )
+
+
+def _insert(spark, bloom, keys, how):
+    """Insert the ``key_hash`` frame ``keys``: from driver-held hashes
+    with ``reset`` (which must run no job), or with ``update``."""
+    if how == "reset":
+        hashes = [r["key_hash"] for r in keys.collect()]
+        _, jobs = _jobs(spark, lambda: bloom.reset(hashes))
+        assert jobs == 0
+    else:
         bloom.update(keys)
+
+
+class TestKeyHash:
+    def test_matches_spark_xxhash64(self, spark):
+        """The driver's key_hash is Spark's xxhash64 on ASCII and
+        multi-byte UTF-8 keys of 0-100 characters: the 32-byte stripe
+        loop and the 8-, 4- and 1-byte tails all run."""
+        rnd = random.Random(11)
+        alphabet = (
+            [chr(c) for c in range(32, 127)]
+            + ["\u00e9", "\u00df", "\u4e2d", "\u0800", "\U0001f600"]
+        )
+        keys = [
+            "".join(rnd.choice(alphabet[:95] if i % 2 else alphabet)
+                    for _ in range(rnd.randint(0, 100)))
+            for i in range(2000)
+        ]
+        assert {len(k.encode("utf-8")) % 32 for k in keys} == set(range(32))
+        want = {
+            r["k"]: r["h"]
+            for r in spark.createDataFrame([(k,) for k in keys], "k string")
+            .select("k", F.xxhash64("k").alias("h")).collect()
+        }
+        assert {k: key_hash(k) for k in keys} == want
+
+
+class TestBloomSeenFilter:
+    @pytest.mark.parametrize("how", ["reset", "update"])
+    def test_no_false_negatives(self, spark, how):
+        bloom = BloomSeenFilter(spark, n_buckets=8, m_bits=1 << 14, k=4)
+        keys = _key_hashes(spark, (1000,))
+        _insert(spark, bloom, keys, how)
         # every inserted key must be "maybe seen"
         new, maybe = bloom.split(keys)
         assert new.count() == 0
@@ -56,17 +100,19 @@ class TestBloomSeenFilter:
         assert n_new >= 1900
         assert n_new + maybe.count() == 2000
 
-    def test_incremental_updates(self, spark):
+    @pytest.mark.parametrize("how", ["reset", "update"])
+    def test_incremental_updates(self, spark, how):
         bloom = BloomSeenFilter(spark, n_buckets=4, m_bits=1 << 14, k=4)
-        a = spark.range(100).select(
-            F.xxhash64(F.col("id").cast("string")).alias("key_hash")
-        )
-        b = spark.range(100, 200).select(
-            F.xxhash64(F.col("id").cast("string")).alias("key_hash")
-        )
-        bloom.update(a)
+        a = _key_hashes(spark, (100,))
+        b = _key_hashes(spark, (100, 200))
+        c = _key_hashes(spark, (200, 300))
+        _insert(spark, bloom, a, how)
         bloom.update(b)
         new, maybe = bloom.split(a.unionByName(b))
+        assert new.count() == 0
+        # a later insert merges into the already-merged bitmaps
+        bloom.update(c)
+        new, maybe = bloom.split(a.unionByName(b).unionByName(c))
         assert new.count() == 0
 
 
