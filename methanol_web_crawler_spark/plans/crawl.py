@@ -94,13 +94,14 @@ SEEN_SCHEMA = T.StructType(
     ]
 )
 
+# per-host state: robots rules (robots on) and jail prefix (jail on)
 HOSTS_SCHEMA = T.StructType(
     [
         T.StructField("host", T.StringType()),
         T.StructField("rules", ROBOTS_RULES_TYPE),
+        T.StructField("jail_prefix", T.StringType()),
     ]
 )
-JAIL_SCHEMA = "host string, jail_prefix string"
 # writefile naming state: cumulative per-basename download counts
 NAMES_SCHEMA = "base string, cnt long"
 METRICS_SCHEMA = T.StructType(
@@ -537,7 +538,6 @@ class SparkCrawler:
             self._n_robots = 0
 
         self._n_hosts: Optional[int] = None
-        self._n_jail: Optional[int] = None
         # exact seen-set size, set by each entry point and kept
         # current with the admitted counts: it gates the broadcast
         # anti-join and is CrawlStats.seen
@@ -656,7 +656,7 @@ class SparkCrawler:
             self.bloom.reset(h for _, h, _ in seen)
         return self._loop(
             self.spark.createDataFrame(rows, FRONTIER_SCHEMA),
-            self.spark.createDataFrame(seen, SEEN_SCHEMA), None,
+            self.spark.createDataFrame(seen, SEEN_SCHEMA),
             0, CrawlStats(targets=len(seed_targets)),
             # the seed frontier is all depth 0: no count job
             wave_counts={0: len(rows)},
@@ -671,11 +671,7 @@ class SparkCrawler:
         ft = self.store.table("frontier")
         r0 = ft.latest_round()
         assert r0 is not None, "no frontier snapshot to resume from"
-        # state sizes from the manifests' Parquet-footer row counts: an
-        # empty latest parked snapshot means nothing is parked
-        pt = self.store.table("parked_state")
-        snaps = pt.snapshots()
-        parked = pt.read_latest(spark) if snaps and snaps[-1]["rows"] else None
+        # the seen size from the manifest's Parquet-footer row counts
         self._n_seen = sum(
             s["rows"] for s in self.store.table("seen").snapshots()
         )
@@ -688,12 +684,7 @@ class SparkCrawler:
             self.bloom.reset()
             self.bloom.update(seen.select("key_hash"))
         return self._loop(
-            ft.read_round(spark, r0),
-            seen,
-            parked.persist() if parked is not None else None,
-            r0,
-            CrawlStats(),
-            restore=True,
+            ft.read_round(spark, r0), seen, r0, CrawlStats(), restore=True
         )
 
     def run_frontier(
@@ -715,7 +706,7 @@ class SparkCrawler:
             # total shows it)
             self.bloom.reset()
             self.bloom.update(seen.select("key_hash"))
-        return self._loop(pending, seen, None, 0, CrawlStats())
+        return self._loop(pending, seen, 0, CrawlStats())
 
     # -- the round loop ---------------------------------------------------
 
@@ -723,7 +714,6 @@ class SparkCrawler:
         self,
         pending: DataFrame,
         seen: DataFrame,
-        parked: Optional[DataFrame],
         start_round: int,
         stats: CrawlStats,
         restore: bool = False,
@@ -743,7 +733,7 @@ class SparkCrawler:
         self._append_session("running", stats, start_round)
         stages = self._round_stages()
         pending, seen = pending.persist(), seen.persist()
-        hosts, jail, names = self._initial_state(restore)
+        hosts, names, parked = self._initial_state(restore)
         if names is not None:
             names = names.localCheckpoint()
 
@@ -761,24 +751,18 @@ class SparkCrawler:
                 continue
             mode = self._round_mode(n_wave)
             selected, deferred = self._select(elig)
-            # new hosts only enter at depth 0 (worker.c:269-283); their
-            # sizes, observed on the checkpoints, feed the broadcast
-            # gates of the per-round joins
-            if self.robots_enabled and d == 0:
+            # new hosts only enter at depth 0 (worker.c:269-287); the
+            # state's size, observed on its checkpoint, feeds the gate's
+            # broadcast
+            if hosts is not None and d == 0:
                 hosts, obs_h = _counted(
                     self._update_hosts(hosts, selected), f"hosts_r{r}"
                 )
                 hosts = hosts.localCheckpoint()
                 self._n_hosts = obs_h.get["n"]
-            if self.jail_crawlers and d == 0:
-                jail, obs_j = _counted(
-                    self._update_jail(jail, selected), f"jail_r{r}"
-                )
-                jail = jail.localCheckpoint()
-                self._n_jail = obs_j.get["n"]
 
             fetched, obs_f = _counted(
-                self._fetch_plan(self._gate(selected, hosts, jail), r),
+                self._fetch_plan(self._gate(selected, hosts), r),
                 f"fetch_r{r}",
             )
             fetched = fetched.localCheckpoint()
@@ -859,7 +843,7 @@ class SparkCrawler:
                     row["bloom_definitely_new"] = obs_bloom[0].get["n"]
                     row["bloom_maybe"] = obs_bloom[1].get["n"]
                 self._record_round(stats, row)
-            self._snapshot_state(r, d, hosts, jail, parked, names)
+            self._snapshot_state(r, d, hosts, parked, names)
             # fetched is localCheckpointed — its blocks free via the
             # ContextCleaner when the reference drops next round
             if self.budget:
@@ -891,30 +875,31 @@ class SparkCrawler:
         )
 
     def _initial_state(self, restore: bool):
-        """The hosts, jail and writefile-names state entering the loop:
-        the latest snapshots when ``restore`` (resume), else empty.
-        jail/names are None unless some crawler jails / some filetype
-        binds writefile; names keep exact dedup numbering on resume."""
+        """The full-state tables entering the loop, (hosts, names,
+        parked): the latest snapshots when ``restore`` (resume), else
+        empty. hosts is None unless robots or jail is on, names unless
+        some filetype binds writefile (they keep exact dedup numbering
+        on resume), parked unless the latest parked snapshot has rows.
+        The hosts size is the manifest's Parquet-footer row count."""
 
-        def state(table: str, schema):
-            df = (
-                self.store.table(table).read_latest(self.spark)
-                if restore else None
-            )
-            if df is None:
-                df = self.spark.createDataFrame([], schema)
-            return df
+        def latest(table: str, schema=None):
+            """(latest snapshot, else an empty ``schema`` frame or
+            None, its row count)."""
+            t = self.store.table(table) if restore else None
+            snaps = t.snapshots() if t else []
+            if snaps:
+                return t.read_latest(self.spark), snaps[-1]["rows"]
+            empty = self.spark.createDataFrame([], schema) if schema else None
+            return empty, 0
 
-        hosts = state("hosts_state", HOSTS_SCHEMA).persist()
-        jail = (
-            state("jail_state", JAIL_SCHEMA).persist()
-            if self.jail_crawlers else None
-        )
-        names = (
-            state("names_state", NAMES_SCHEMA)
-            if self.writefile_fts else None
-        )
-        return hosts, jail, names
+        hosts = names = None
+        if self.robots_enabled or self.jail_crawlers:
+            hosts, self._n_hosts = latest("hosts_state", HOSTS_SCHEMA)
+            hosts = hosts.persist()
+        if self.writefile_fts:
+            names, _ = latest("names_state", NAMES_SCHEMA)
+        parked, n_parked = latest("parked_state")
+        return hosts, names, parked.persist() if n_parked else None
 
     def _adopt_parked(self, parked: DataFrame, r: int) -> DataFrame:
         """Host-adoption wave: parked rows re-enter at depth 0 as the
@@ -963,78 +948,72 @@ class SparkCrawler:
     def _update_hosts(
         self, hosts: DataFrame, selected: DataFrame
     ) -> DataFrame:
-        """Fetch robots.txt for hosts entering at depth 0 (worker.c:
-        269-283; fetched even when the crawler ignores robots —
-        preserved). The robots URL uses the www-stripped host identity
-        (worker.c:1002-1004)."""
-        new_hosts = (
+        """The per-host state after the hosts entering at depth 0
+        (worker.c:269-287 fetches a new host's robots.txt and captures
+        its jail URL in one block). Per arriving host: its robots rules
+        when robots is on (fetched even when the crawler ignores robots
+        — preserved; the robots URL uses the www-stripped host
+        identity, worker.c:1002-1004), and the directory region of its
+        first jailing URL in crawl order as the jail prefix. A known
+        host keeps its rules and prefix; it gains a prefix the first
+        time a jailing crawler enters it."""
+        arrivals = (
             selected.filter(F.col("depth") == 0)
-            .select("host")
-            .distinct()
-            .join(hosts.select("host"), "host", "left_anti")
+            .groupBy("host")
+            .agg(
+                F.min_by(
+                    _dir_region(),
+                    F.when(
+                        F.col("crawler").isin(self.jail_crawlers),
+                        F.struct(*_SORT_COLS),
+                    ),
+                ).alias("jail_prefix")
+            )
         )
-        fetched = (
-            new_hosts.join(
+        if self.robots_enabled:
+            arrivals = arrivals.join(
                 self._maybe_broadcast(self.robots_cache, self._n_robots),
                 F.concat(F.lit("http://"), F.col("host"), F.lit("/robots.txt"))
                 == F.col("robots_url"),
                 "left",
             )
-            .select("host", "rules")
-        )
-        return hosts.unionByName(fetched)
-
-    def _update_jail(self, jail: DataFrame, selected: DataFrame) -> DataFrame:
-        """Jail prefixes for new hosts entering at depth 0 under a
-        jailing crawler: the directory region of the host's first URL
-        in crawl order."""
-        new_jail = (
-            selected.filter(
-                (F.col("depth") == 0)
-                & F.col("crawler").isin(self.jail_crawlers)
+        else:
+            arrivals = arrivals.withColumn(
+                "rules", F.lit(None).cast(ROBOTS_RULES_TYPE)
             )
-            .groupBy("host")
-            .agg(
-                F.min_by(
-                    _dir_region(), F.struct(*_SORT_COLS)
-                ).alias("jail_prefix")
-            )
-            .join(jail.select("host"), "host", "left_anti")
+        old, new = hosts.alias("old"), arrivals.alias("new")
+        return old.join(new, "host", "full_outer").select(
+            "host",
+            *(
+                F.coalesce(f"old.{c}", f"new.{c}").alias(c)
+                for c in ("rules", "jail_prefix")
+            ),
         )
-        return jail.unionByName(new_jail)
 
     def _gate(
-        self,
-        selected: DataFrame,
-        hosts: DataFrame,
-        jail: Optional[DataFrame],
+        self, selected: DataFrame, hosts: Optional[DataFrame]
     ) -> DataFrame:
-        """The jail and robots gates over the selected rows."""
-        gated = selected
+        """The jail and robots gates over the selected rows: one join
+        with the per-host state, then each gate's filter."""
+        if hosts is None:
+            return selected
+        gated = selected.join(
+            self._maybe_broadcast(hosts, self._n_hosts), "host", "left"
+        )
         if self.jail_crawlers:
-            gated = gated.join(
-                self._maybe_broadcast(jail, self._n_jail), "host", "left"
-            ).filter(
+            gated = gated.filter(
                 ~F.col("crawler").isin(self.jail_crawlers)
                 | (F.col("depth") == 0)
                 | F.col("jail_prefix").isNull()
                 | _dir_region().startswith(F.col("jail_prefix"))
-            ).drop("jail_prefix")
+            )
         if self.robots_enabled:
             # first path-prefix match wins, default allow
             # (filter.c:34-54) — a pure JVM higher-order expression,
             # no Python in the gate (NULL/empty rules coalesce to
             # allow, matching parse_robots of an absent body)
-            gated = (
-                gated.join(
-                    self._maybe_broadcast(hosts, self._n_hosts),
-                    "host", "left",
-                )
-                .withColumn("robots_ok", robots_gate_expr())
-                .filter(F.col("robots_ok"))
-                .drop("rules", "robots_ok")
-            )
-        return gated
+            gated = gated.filter(robots_gate_expr())
+        return gated.drop("rules", "jail_prefix")
 
     def _fetch_plan(self, gated: DataFrame, r: int) -> DataFrame:
         """Fetch ids in deterministic order, then the "fetch": the docs
@@ -1381,22 +1360,20 @@ class SparkCrawler:
         self,
         r: int,
         d: int,
-        hosts: DataFrame,
-        jail: Optional[DataFrame],
+        hosts: Optional[DataFrame],
         parked: Optional[DataFrame],
         names: Optional[DataFrame],
     ) -> None:
         """Full-state snapshots for exact resume (store mode), written
-        only in rounds that change them: hosts and jail at depth 0
-        (their one update point), names every writefile round, parked
-        while an EXTERNAL crawler keeps it (``_adopt_parked`` records
-        its emptying). ``resume`` reads each one's latest snapshot."""
+        only in rounds that change them: hosts at depth 0 (its one
+        update point), names every writefile round, parked while an
+        EXTERNAL crawler keeps it (``_adopt_parked`` records its
+        emptying). ``_initial_state`` reads each one's latest
+        snapshot."""
         if not self.store:
             return
-        if d == 0 and self.robots_enabled:
+        if d == 0 and hosts is not None:
             self.store.table("hosts_state").append(hosts, r + 1)
-        if d == 0 and jail is not None:
-            self.store.table("jail_state").append(jail, r + 1)
         if names is not None:
             self.store.table("names_state").append(names, r + 1)
         if parked is not None:

@@ -253,6 +253,17 @@ def _jail_crawl():
     return TestJail().make_web(), jail_config(), {"crawler": "jailer"}
 
 
+def _robots_jail_crawl():
+    """The jail crawl with robots on: one a.test robots.txt denies a
+    second seed; hosts and jail prefixes share one state."""
+    from tests.test_crawl_switch_epeek import jail_config, robots_jail_web
+
+    return (
+        robots_jail_web(), jail_config(robotstxt=True),
+        {"crawler": "jailer"},
+    )
+
+
 def _bloom_crawl():
     """A bloom crawl whose round 0 admits no key (a.html has no links);
     round 1's b.html links back to a.html, which the resumed bloom
@@ -287,10 +298,11 @@ class TestResume:
             (_external_crawl, 9),
             (_external_crawl, 10),
             (_jail_crawl, 1),
+            (_robots_jail_crawl, 1),
             (_bloom_crawl, 1),
         ],
         ids=["seed-r0", "robots-r2", "external-r9", "external-r10",
-             "jail-r1", "bloom-r1"],
+             "jail-r1", "robots-jail-r1", "bloom-r1"],
     )
     def test_resume_from_checkpoint(self, spark, tmp_path, crawl, stop):
         """Kill after round ``stop``, resume from the snapshots — final

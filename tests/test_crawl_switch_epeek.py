@@ -1,5 +1,7 @@
 """Golden tests for crawler switching (Q4) and external peek (Q5)."""
 
+import pytest
+
 from methanol_web_crawler_spark.config import (
     CrawlConfig,
     Crawler,
@@ -214,7 +216,9 @@ class TestExternalPeek:
         assert got == oracle.fetched_urls
 
 
-def jail_config():
+def jail_config(**crawler_overrides):
+    """One jailing html crawler, ``jailer``; any override kwargs apply
+    to it (e.g. robotstxt=True)."""
     html = Filetype(
         name="html", extensions=("html",),
         mimetypes=("text/html",), parsers=("html",),
@@ -222,11 +226,42 @@ def jail_config():
     cr = Crawler(
         name="jailer", filetypes=("html",), jail=True,
         dynamic_url="discard", extless_url="discard",
-        dir_url="@html", unknown_url="discard",
+        dir_url="@html", unknown_url="discard", **crawler_overrides,
     )
     cfg = CrawlConfig(filetypes=(html,), crawlers=(cr,))
     cfg.validate()
     return cfg
+
+
+def robots_jail_web():
+    """TestJail's web plus an a.test robots.txt that disallows
+    /sub/priv/, and a second seed there: the robots gate denies it,
+    the jail prefix comes from the first seed."""
+    web = TestJail().make_web()
+    priv = "http://a.test/sub/priv/p.html"
+    robots = SynthDoc(
+        "http://a.test/robots.txt",
+        [("text", "User-agent: *\nDisallow: /sub/priv/\n", None, 0)],
+        "text/plain",
+    )
+    return SynthWeb(
+        docs=web.docs + [html_doc(priv, ["/sub/inside.html"]), robots],
+        seeds=web.seeds + [priv],
+    )
+
+
+ARRIVAL_SCHEMA = (
+    "url string, host_o int, host_l int, file_o int, crawler string,"
+    " host string, depth int, ft_rank int, parent_round int,"
+    " parent_ord long, sibling_ix int"
+)
+
+
+def arrival(url, crawler, sibling_ix):
+    """A depth-0 selected row of ``url`` (ARRIVAL_SCHEMA)."""
+    host = url.split("/")[2]
+    return (url, 7, len(host), url.rindex("/"), crawler, host, 0, 0,
+            -1, -1, sibling_ix)
 
 
 class TestJail:
@@ -279,3 +314,93 @@ class TestJail:
             r["url"] for r in log.orderBy("round", "fetch_ord").collect()
         ]
         assert got == oracle.fetched_urls
+
+    def test_hosts_state_merge(self, spark):
+        """The per-host state keeps robots rules and jail prefix in one
+        row: a host entered first by a non-jailing crawler gets its
+        rules and no prefix, gains its prefix at its first jailing
+        arrival and keeps it after; two jailing rows of one host in one
+        arrival take the prefix of the smaller sort key."""
+        from dataclasses import replace
+
+        from methanol_web_crawler_spark.plans.crawl import HOSTS_SCHEMA
+
+        base = jail_config(robotstxt=True)
+        plain = replace(base.crawlers[0], name="plain", jail=False)
+        cfg = CrawlConfig(
+            filetypes=base.filetypes, crawlers=base.crawlers + (plain,)
+        )
+        cfg.validate()
+        engine = SparkCrawler(
+            spark, robots_jail_web().to_spark(spark), cfg,
+            crawler="jailer",
+        )
+
+        def update(hosts, *rows):
+            sel = spark.createDataFrame(
+                [arrival(*row) for row in rows], ARRIVAL_SCHEMA
+            )
+            hosts = engine._update_hosts(hosts, sel).localCheckpoint()
+            state = {
+                r["host"]: (r["rules"], r["jail_prefix"])
+                for r in hosts.collect()
+            }
+            return hosts, state
+
+        hosts, state = update(
+            spark.createDataFrame([], HOSTS_SCHEMA),
+            ("http://a.test/sub/index.html", "plain", 0),
+        )
+        rules = state["a.test"][0]
+        assert [(r["allow"], r["prefix"]) for r in rules] == [
+            (False, "/sub/priv/")
+        ]
+        assert state == {"a.test": (rules, None)}
+
+        hosts, state = update(
+            hosts,
+            ("http://a.test/other/out.html", "jailer", 0),
+            # b.test: the non-jailing row sorts first and is ignored;
+            # of the two jailing rows the smaller sort key wins
+            ("http://b.test/y/2.html", "plain", 0),
+            ("http://b.test/z/3.html", "jailer", 2),
+            ("http://b.test/x/1.html", "jailer", 1),
+        )
+        assert state == {"a.test": (rules, "/other"), "b.test": (None, "/x")}
+
+        _, state = update(
+            hosts,
+            ("http://a.test/sub/deep/two.html", "jailer", 0),
+            ("http://b.test/w/4.html", "jailer", 0),
+        )
+        assert state == {"a.test": (rules, "/other"), "b.test": (None, "/x")}
+
+    @pytest.mark.parametrize("store", [True, False], ids=["store", "no-store"])
+    def test_robots_and_jail_match_oracle(self, spark, tmp_path, store):
+        """Robots and jail on together: both gates read the one
+        per-host state, and the crawl equals the oracle's."""
+        web = robots_jail_web()
+        cfg = jail_config(robotstxt=True)
+        oracle = OracleCrawler(web.doc_map, cfg, crawler="jailer").run(
+            web.seeds
+        )
+        engine = SparkCrawler(
+            spark, web.to_spark(spark), cfg, crawler="jailer",
+            state_dir=str(tmp_path) if store else None,
+        )
+        stats = engine.run(web.seeds)
+        got_seen = {
+            r["seen_key"]
+            for r in engine._final_seen.select("seen_key").collect()
+        }
+        assert got_seen == oracle.seen
+        assert stats.fetched == len(oracle.fetched_urls) == 3
+        assert "http://a.test/sub/priv/p.html" not in oracle.fetched_urls
+        assert "http://a.test/other/out.html" not in oracle.fetched_urls
+        if store:
+            log = engine.store.table("crawl_log").read_until(spark)
+            got = [
+                r["url"]
+                for r in log.orderBy("round", "fetch_ord").collect()
+            ]
+            assert got == oracle.fetched_urls

@@ -154,7 +154,11 @@ class TestCrawlRoundPlans:
         assert crawler.robots_cache is not None
         hosts0 = spark.createDataFrame([], HOSTS_SCHEMA)
         sel = spark.createDataFrame(
-            [("h0000.test", 0)], "host string, depth int"
+            [("http://h0000.test/a.html", 7, 10, 17, "default",
+              "h0000.test", 0, 0, -1, -1, 0)],
+            "url string, host_o int, host_l int, file_o int,"
+            " crawler string, host string, depth int, ft_rank int,"
+            " parent_round int, parent_ord long, sibling_ix int",
         )
         probe = crawler._update_hosts(hosts0, sel)
         plan = formatted_plan(probe)
