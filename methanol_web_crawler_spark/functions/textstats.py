@@ -3,11 +3,18 @@
 Language-ID (marker-word heuristic), quality scoring, token counting
 and document fingerprinting — all as JVM-side column expressions
 (zero Python), each with an exact SQL oracle.
+
+The expression helpers take column names and return SQL text; the
+frame builders use one ``selectExpr`` string per output column. A
+Column-API node costs about a dozen py4j round trips on the driver
+(a ``F.filter`` with a Python lambda ~7 ms to build); one SQL string
+costs 3-7 round trips and ~0.3 ms whatever its size (PLANS.md, "Plan
+building on the driver").
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 # marker words per language for the n-gram/stopword heuristic;
 # deliberately simple and 1:1 reproducible in SQL
@@ -20,73 +27,65 @@ LANG_MARKERS = {
 }
 
 
-def token_count(text_col) -> "F.Column":
+def _nonempty_tokens(text_col: str) -> str:
+    return f"filter(split({text_col}, ' '), t -> t != '')"
+
+
+def token_count(text_col: str) -> str:
     """Whitespace token count (empty tokens excluded)."""
-    return F.size(F.filter(F.split(text_col, " "), lambda t: t != ""))
+    return f"size({_nonempty_tokens(text_col)})"
 
 
-def bpe_ish_token_count(text_col) -> "F.Column":
+def bpe_ish_token_count(text_col: str) -> str:
     """A BPE-flavored proxy: alphanumeric runs + standalone
     punctuation marks each count as one token."""
-    return F.size(
-        F.filter(
-            F.split(F.regexp_replace(text_col, "([^A-Za-z0-9 ])", " $1 "),
-                    " "),
-            lambda t: t != "",
-        )
+    return token_count(
+        f"regexp_replace({text_col}, '([^A-Za-z0-9 ])', ' $1 ')"
     )
 
 
-def marker_count(text_col, word: str) -> "F.Column":
+def marker_count(text_col: str, word: str) -> str:
     """Occurrences of a marker word with space padding."""
-    padded = F.concat(F.lit(" "), text_col, F.lit(" "))
+    padded = f"concat(' ', {text_col}, ' ')"
     target = f" {word} "
-    return (
-        (F.length(padded) - F.length(F.regexp_replace(padded,
-                                                      target, "")))
-        / len(target)
-    ).cast("int")
+    return (f"cast((length({padded}) - length(regexp_replace({padded}, "
+            f"'{target}', ''))) / {len(target)} as int)")
+
+
+def _marker_sum(text_col: str, words) -> str:
+    return "(" + " + ".join(marker_count(text_col, w) for w in words) + ")"
 
 
 LANG_ORDER = ("en", "es", "fr", "de", "zh")
 
 
-def lang_id(text_col) -> "F.Column":
+def lang_id(text_col: str) -> str:
     """Heuristic language id: the language whose marker words occur
     most often; a fixed CASE cascade (LANG_ORDER) breaks ties —
     first language whose score is maximal and positive wins.
     Deterministic and replicated verbatim in the SQL oracle."""
-    scores = {
-        lang: sum(
-            [marker_count(text_col, w) for w in LANG_MARKERS[lang]],
-            F.lit(0),
-        )
+    scores = {lang: _marker_sum(text_col, LANG_MARKERS[lang])
+              for lang in LANG_ORDER}
+    cases = " ".join(
+        f"WHEN {scores[lang]} > 0 AND " + " AND ".join(
+            f"{scores[lang]} >= {scores[other]}"
+            for other in LANG_ORDER if other != lang
+        ) + f" THEN '{lang}'"
         for lang in LANG_ORDER
-    }
-    expr = F.lit("unknown")
-    for lang in reversed(LANG_ORDER):
-        cond = scores[lang] > 0
-        for other in LANG_ORDER:
-            if other != lang:
-                cond = cond & (scores[lang] >= scores[other])
-        expr = F.when(cond, F.lit(lang)).otherwise(expr)
-    return expr
+    )
+    return f"CASE {cases} ELSE 'unknown' END"
 
 
-def word_ngrams(text, n: int):
+def word_ngrams(text_col: str, n: int) -> str:
     """All word n-grams of a text column as ``array<string>`` (space-
     joined), empty for texts with fewer than ``n`` tokens. The
-    ``when`` guard matters: ``sequence(1, size-n+1)`` with a stop
+    ``CASE`` guard matters: ``sequence(1, size-n+1)`` with a stop
     below 1 generates a DESCENDING range, not an empty one. Shared by
     the decontamination operator and the repetition feature."""
-    toks = F.filter(F.split(text, " "), lambda t: t != "")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
+    toks = _nonempty_tokens(text_col)
+    return (f"CASE WHEN size({toks}) >= {n} THEN transform(sequence(1, "
+            f"size({toks}) - {n} + 1), i -> concat_ws(' ', slice({toks}, "
+            f"i, {n}))) ELSE cast(array() as array<string>) END")
 
 
 def repetition_features(
@@ -102,19 +101,18 @@ def repetition_features(
     Returns ``(doc, n_grams, n_distinct_grams, rep_ratio)`` with
     ``rep_ratio = round(1 - distinct/total, 6)`` (0 for docs too
     short to have grams)."""
-    grams = word_ngrams(F.col(text_col), n)
-    n_grams = F.size(grams).cast("long")
-    n_distinct = F.size(F.array_distinct(grams)).cast("long")
-    return df.select(
-        F.col(id_col).alias("doc"),
-        n_grams.alias("n_grams"),
-        n_distinct.alias("n_distinct_grams"),
+    grams = word_ngrams(text_col, n)
+    n_grams = f"cast(size({grams}) as bigint)"
+    n_distinct = f"cast(size(array_distinct({grams})) as bigint)"
+    return df.selectExpr(
+        f"{id_col} AS doc",
+        f"{n_grams} AS n_grams",
+        f"{n_distinct} AS n_distinct_grams",
         # (total - distinct)/total, with the greatest() guard making
         # gram-less docs 0/1 = 0 (NOT the 1 - distinct/total form,
         # whose guard yields a bogus 1.0 for empty docs)
-        F.round(
-            (n_grams - n_distinct) / F.greatest(n_grams, F.lit(1)), 6
-        ).alias("rep_ratio"),
+        f"round(({n_grams} - {n_distinct}) / greatest({n_grams}, 1), 6)"
+        " AS rep_ratio",
     )
 
 
@@ -125,30 +123,21 @@ def quality_features(
     quality score (rounded — SQL-exact). ``extra_cols`` pass through
     unchanged so a pipeline can filter on ``quality`` without a
     join-back (operators/curation.py)."""
-    text = F.col(text_col)
-    n_chars = F.length(text)
-    n_tokens = token_count(text)
-    n_punct = F.length(F.regexp_replace(text, "[A-Za-z0-9 ]", ""))
-    n_stop = sum(
-        [marker_count(text, w) for w in ("the", "a", "and", "of")],
-        F.lit(0),
-    )
-    n_uniq = F.size(F.array_distinct(
-        F.filter(F.split(text, " "), lambda t: t != "")
-    ))
-    return df.select(
-        F.col(id_col).alias("doc"),
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        n_punct.alias("n_punct"),
-        n_stop.alias("n_stopwords"),
-        n_uniq.alias("n_unique_tokens"),
-        F.round(
-            (n_uniq / F.greatest(n_tokens, F.lit(1)))
-            * (1 - n_punct / F.greatest(n_chars, F.lit(1))),
-            6,
-        ).alias("quality"),
-        *[F.col(c) for c in extra_cols],
+    n_chars = f"length({text_col})"
+    n_tokens = token_count(text_col)
+    n_punct = f"length(regexp_replace({text_col}, '[A-Za-z0-9 ]', ''))"
+    n_uniq = f"size(array_distinct({_nonempty_tokens(text_col)}))"
+    return df.selectExpr(
+        f"{id_col} AS doc",
+        f"{n_chars} AS n_chars",
+        f"{n_tokens} AS n_tokens",
+        f"{n_punct} AS n_punct",
+        f"{_marker_sum(text_col, ('the', 'a', 'and', 'of'))}"
+        " AS n_stopwords",
+        f"{n_uniq} AS n_unique_tokens",
+        f"round(({n_uniq} / greatest({n_tokens}, 1)) * "
+        f"(1 - {n_punct} / greatest({n_chars}, 1)), 6) AS quality",
+        *extra_cols,
     )
 
 
@@ -164,25 +153,17 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str,
     aggregate — a pure JVM projection, zero shuffles (was two:
     posexplode + groupBy-doc). Each term is < mod ~ 2^30, so the long
     accumulator cannot overflow at any realistic token count."""
-    arr = F.split(F.col(text_col), " ")
-    terms = F.transform(
-        arr,
-        lambda t, i: F.when(
-            t != "",
-            ((i + F.lit(1))
-             * (F.conv(F.substring(F.md5(t), 1, 15), 16, 10)
-                .cast("long") % F.lit(mod))) % F.lit(mod),
-        ).otherwise(F.lit(0).cast("long")),
+    terms = (
+        f"transform(split({text_col}, ' '), (t, i) -> CASE WHEN t != '' "
+        f"THEN ((i + 1) * (cast(conv(substring(md5(t), 1, 15), 16, 10) "
+        f"as bigint) % {mod})) % {mod} ELSE 0L END)"
     )
     # cheap emptiness filter before the hash projection (trim != ''
     # iff some token is non-empty; split is on single spaces):
     # row-count consumers never evaluate the md5 terms
-    out = df.filter(F.trim(F.col(text_col)) != "").select(
-        F.col(id_col).alias("doc"), terms.alias("__t")
-    )
-    return out.select(
+    return df.filter(f"trim({text_col}) != ''").selectExpr(
+        f"{id_col} AS doc", f"{terms} AS __t"
+    ).selectExpr(
         "doc",
-        (F.aggregate(
-            F.col("__t"), F.lit(0).cast("long"), lambda acc, x: acc + x
-        ) % F.lit(mod)).alias("fingerprint"),
+        f"aggregate(__t, 0L, (acc, x) -> acc + x) % {mod} AS fingerprint",
     )

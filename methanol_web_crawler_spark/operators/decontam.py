@@ -50,14 +50,10 @@ def ngram_overlap(
     corpus doc (docs with no overlap — or too short to have grams —
     are kept with ``n_overlap = 0``).
     """
-    grams = word_ngrams(F.col(text_col), n)
+    grams = f"explode({word_ngrams(text_col, n)}) AS g"
 
-    eval_grams = (
-        eval_docs.select(F.explode(grams).alias("g")).distinct()
-    )
-    corpus_grams = corpus.select(
-        F.col(id_col), F.explode(grams).alias("g")
-    )
+    eval_grams = eval_docs.selectExpr(grams).distinct()
+    corpus_grams = corpus.selectExpr(id_col, grams)
     overlap = (
         corpus_grams.join(F.broadcast(eval_grams), "g")
         .groupBy(id_col)

@@ -10,11 +10,17 @@ operator has an exact integer-deterministic SQL oracle (DuckDB):
 All shuffles key on the dedup hash/bucket; at 100 TB the heavy ops
 (explode + groupBy token hashes, band-bucket self-joins) partition by
 those keys and skew is bounded by band-bucket size caps.
+
+Expressions are written as SQL text (``selectExpr``/``F.expr``, one
+string per output column) and the helpers take column names: building
+a plan is driver time with no Spark job running, and each Column-API
+node costs about a dozen py4j round trips (PySpark's per-node query
+context) — ``F.col`` 1.5 ms, ``F.transform`` with a Python lambda
+6.9 ms — where one ``F.expr`` string costs ~0.3 ms and 3-7 round
+trips whatever its size (PLANS.md, "Plan building on the driver").
 """
 
 from __future__ import annotations
-
-from typing import List
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -25,23 +31,19 @@ MINHASH_K = 16
 LSH_BANDS = 4  # 4 rows per band
 
 
-def _token_hash_of(tok, m: int = MINHASH_M):
-    """md5-derived integer token hash, portable to ANSI SQL, over an
-    arbitrary column/lambda arg (for within-row higher-order
-    expressions)."""
-    return (
-        F.conv(F.substring(F.md5(tok), 1, 15), 16, 10)
-        .cast("long") % F.lit(m)
-    )
+def _token_hash_of(tok: str, m: int = MINHASH_M) -> str:
+    """md5-derived integer token hash, portable to ANSI SQL, as SQL
+    text over a column or lambda variable name (for within-row
+    higher-order expressions)."""
+    return (f"(cast(conv(substring(md5({tok}), 1, 15), 16, 10) as bigint)"
+            f" % {m})")
 
 
-def token_array(text_col) -> "F.Column":
+def token_array(text_col: str) -> str:
     """Distinct whitespace tokens of one document as an array —
     within-row (array_distinct), no shuffle. Equals the distinct
     (doc, token) set when doc ids are unique per input row."""
-    return F.array_distinct(
-        F.filter(F.split(text_col, " "), lambda t: t != "")
-    )
+    return f"array_distinct(filter(split({text_col}, ' '), t -> t != ''))"
 
 
 def tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -52,22 +54,34 @@ def tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     exchanges — the old global distinct shuffled every (doc, token)
     edge for nothing, since ids are unique per input row (callers'
     precondition; documents/_duped_docs corpora satisfy it)."""
-    return df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(token_array(F.col(text_col))).alias("token"),
+    return df.selectExpr(
+        f"{id_col} AS doc", f"explode({token_array(text_col)}) AS token"
     )
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact content dedup: md5(text) groups; keeps the min id as the
     canonical representative and counts duplicates."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count("*").alias("n_copies"),
-        )
-        .filter(F.col("n_copies") >= 1)
+    return df.groupBy(F.expr(f"md5({text_col}) AS content_hash")).agg(
+        F.expr(f"min({id_col}) AS keep_id"), F.expr("count(*) AS n_copies")
+    )
+
+
+def _hashed_tokens(df: DataFrame, id_col: str, text_col: str,
+                   hash_sql: str) -> DataFrame:
+    """(doc, __h): each non-empty document's distinct tokens hashed by
+    ``hash_sql`` (SQL text over the token variable ``t``).
+
+    Filters BEFORE tokenizing/hashing: trim(text) != '' is true iff
+    the distinct token set is non-empty (split is on single spaces),
+    so row-count consumers never pay for split/array_distinct or the
+    md5 transform. Two-step projection: __h is referenced many times
+    downstream, and the md5 hashing is expensive enough that
+    CollapseProject keeps the producing Project separate (one hash
+    pass, then the per-signature passes)."""
+    return df.filter(f"trim({text_col}) != ''").selectExpr(
+        f"{id_col} AS doc", f"transform({token_array(text_col)}, "
+        f"t -> {hash_sql}) AS __h"
     )
 
 
@@ -87,34 +101,12 @@ def minhash_signatures(
     at any corpus size. Docs with no tokens drop out, exactly as the
     groupBy over the empty exploded set did.
     """
-    # filter BEFORE tokenizing/hashing: trim(text) != '' is true iff
-    # the distinct token set is non-empty (split is on single spaces),
-    # so row-count consumers never pay for split/array_distinct or the
-    # md5 transform
-    toks = df.filter(F.trim(F.col(text_col)) != "").select(
-        F.col(id_col).alias("doc"),
-        token_array(F.col(text_col)).alias("__toks"),
-    )
-    # two-step projection: __h is referenced k times below, and the
-    # md5 hashing is expensive enough that CollapseProject keeps the
-    # producing Project separate (one hash pass, k min passes)
-    base = toks.select(
-        "doc",
-        F.transform(
-            F.col("__toks"), lambda t: _token_hash_of(t, m)
-        ).alias("__h"),
-    )
-    sigs = [
-        F.array_min(
-            F.transform(
-                F.col("__h"),
-                lambda h: (F.lit(2 * i + 3) * h
-                           + F.lit(104729 * i + 12345)) % F.lit(m),
-            )
-        ).alias(f"sig{i}")
+    base = _hashed_tokens(df, id_col, text_col, _token_hash_of("t", m))
+    return base.selectExpr("doc", *[
+        f"array_min(transform(__h, h -> ({2 * i + 3} * h + "
+        f"{104729 * i + 12345}) % {m})) AS sig{i}"
         for i in range(k)
-    ]
-    return base.select("doc", *sigs)
+    ])
 
 
 def minhash_lsh_pairs(
@@ -147,24 +139,16 @@ def minhash_lsh_pairs(
     explosion variant measured SLOWER: materialising O(n^2) pair
     structs per bucket in an ObjectHashAggregate loses to the
     streaming sort-merge self-join.)"""
-    from pyspark.sql import Window
-
     rows = k // bands
     sig = minhash_signatures(df, id_col, text_col, k, m)
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "_",
-                *[F.col(f"sig{b * rows + j}").cast("string")
-                  for j in range(rows)],
-            ).alias("bucket"),
-        )
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', concat_ws('_', "
+        + ", ".join(f"cast(sig{b * rows + j} as string)"
+                    for j in range(rows))
+        + "))"
         for b in range(bands)
-    ])
-    banded = sig.select(
-        "doc", F.explode(band_structs).alias("bb")
-    ).select("doc", "bb.band", "bb.bucket")
+    )
+    banded = sig.selectExpr("doc", f"inline(array({band_structs}))")
     # explicit bucket-keyed repartition instead of letting the window/
     # join demand the exchange: AQE sizes post-shuffle partitions by
     # INPUT bytes, but this stage's output is QUADRATIC in bucket size
@@ -180,25 +164,25 @@ def minhash_lsh_pairs(
     if max_bucket_size:
         # same shuffle key as the self-join below, so the window's
         # exchange is reused rather than added
-        wb = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("__bn", F.count("*").over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
+        banded = _cap_groups(banded, "band, bucket", max_bucket_size)
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
+        banded.alias("a").join(
+            banded.alias("b"),
+            F.expr("a.band = b.band AND a.bucket = b.bucket "
+                   "AND a.doc < b.doc"),
         )
-        .select(
-            F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
-        )
+        .selectExpr("a.doc AS doc_a", "b.doc AS doc_b")
         .distinct()
+    )
+
+
+def _cap_groups(df: DataFrame, keys: str, cap: int) -> DataFrame:
+    """Rows of ``df`` whose group over ``keys`` (SQL text) has at most
+    ``cap`` rows — a count window, so no join back."""
+    return (
+        df.withColumn("__n", F.expr(f"count(*) OVER (PARTITION BY {keys})"))
+        .filter(f"__n <= {cap}")
+        .drop("__n")
     )
 
 
@@ -214,31 +198,14 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     bit i is set iff 2*size(filter(h, bit_i)) > n_tokens — a pure JVM
     projection over the hashed token array, zero shuffles (was two:
     explode+distinct and groupBy-doc)."""
-    # filter before tokenizing/hashing (as in minhash_signatures):
-    # row-count consumers never pay for the md5 transform
-    toks = df.filter(F.trim(F.col(text_col)) != "").select(
-        F.col(id_col).alias("doc"),
-        token_array(F.col(text_col)).alias("__toks"),
+    base = _hashed_tokens(df, id_col, text_col,
+                          f"{_token_hash_of('t')} % {1 << bits}")
+    fp = " + ".join(
+        f"CASE WHEN size(filter(__h, h -> (shiftright(h, {i}) & 1) = 1))"
+        f" * 2 > size(__h) THEN {1 << i} ELSE 0 END"
+        for i in range(bits)
     )
-    base = toks.select(
-        "doc",
-        F.transform(
-            F.col("__toks"),
-            lambda t: _token_hash_of(t) % F.lit(1 << bits),
-        ).alias("__h"),
-    )
-    ntok = F.size(F.col("__h"))
-    fp = None
-    for i in range(bits):
-        nset = F.size(
-            F.filter(
-                F.col("__h"),
-                lambda h: F.shiftright(h, i).bitwiseAND(1) == 1,
-            )
-        )
-        term = F.when(nset * 2 > ntok, F.lit(1 << i)).otherwise(0)
-        fp = term if fp is None else (fp + term)
-    return base.select("doc", fp.cast("long").alias("simhash"))
+    return base.selectExpr("doc", f"cast({fp} as bigint) AS simhash")
 
 
 def ngram_jaccard_pairs(
@@ -265,44 +232,26 @@ def ngram_jaccard_pairs(
     corpus. Set sizes come from a count window over doc (surviving
     tokens only — sample filtering keeps whole docs, so n is
     unchanged) instead of a groupBy+join back."""
-    from pyspark.sql import Window
-
     tok = tokens(df, id_col, text_col)
     if max_token_df:
-        wt = Window.partitionBy("token")
-        tok = (
-            tok.withColumn("__df", F.count("*").over(wt))
-            .filter(F.col("__df") <= max_token_df)
-            .drop("__df")
-        )
-    tok = tok.filter(
-        (F.col("doc") % mod_a == 0) | (F.col("doc") % mod_b == 0)
+        tok = _cap_groups(tok, "token", max_token_df)
+    sized = tok.filter(
+        f"doc % {mod_a} = 0 OR doc % {mod_b} = 0"
+    ).withColumn("n", F.expr("count(*) OVER (PARTITION BY doc)"))
+    ta = sized.filter(f"doc % {mod_a} = 0").selectExpr(
+        "doc AS doc_a", "n AS n_a", "token"
     )
-    sized = tok.withColumn(
-        "n", F.count("*").over(Window.partitionBy("doc"))
+    tb = sized.filter(f"doc % {mod_b} = 0").selectExpr(
+        "doc AS doc_b", "n AS n_b", "token"
     )
-    ta = sized.filter(F.col("doc") % mod_a == 0).select(
-        F.col("doc").alias("doc_a"), F.col("n").alias("n_a"), "token"
-    )
-    tb = sized.filter(F.col("doc") % mod_b == 0).select(
-        F.col("doc").alias("doc_b"), F.col("n").alias("n_b"), "token"
-    )
-    inter = (
+    return (
         ta.join(tb, "token")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        .filter("doc_a < doc_b")
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    jac = inter.withColumn(
-        "jaccard",
-        F.round(
-            F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-            6,
-        ),
-    )
-    return jac.filter(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", "jaccard"
+        .agg(F.expr("count(*) AS n_inter"))
+        .selectExpr("doc_a", "doc_b", "round(n_inter / "
+                    "(n_a + n_b - n_inter), 6) AS jaccard")
+        .filter(f"jaccard >= {threshold!r}D")
     )
 
 
@@ -318,41 +267,22 @@ def embedding_cosine_pairs_exact(
     recall pytest uses this as the ground truth
     (tests/test_dedup_skew_caps.py). Double-precision math stays
     JVM-side via ``aggregate``/``zip_with``."""
-    dotv = F.aggregate(
-        F.zip_with(
-            F.col("a.vec").cast("array<double>"),
-            F.col("b.vec").cast("array<double>"),
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.sqrt(
-            F.aggregate(
-                F.col(vec_col).cast("array<double>"),
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            )
-        ).alias("norm"),
-    )
-    a = base.filter(F.col("id") % sample_mod == 0).alias("a")
-    b = base.alias("b")
-    pairs = (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(
-                dotv / (F.col("a.norm") * F.col("b.norm")), 4
-            ).alias("cosine"),
+    from .similarity import _dot, _norm
+
+    base = df.selectExpr(
+        f"{id_col} AS id", f"cast({vec_col} as array<double>) AS vec"
+    ).selectExpr("id", "vec", f"{_norm('vec')} AS norm")
+    a = base.filter(f"id % {sample_mod} = 0").alias("a")
+    return (
+        a.join(base.alias("b"), F.expr("a.id < b.id"))
+        .selectExpr(
+            "a.id AS id_a", "b.id AS id_b",
+            f"round({_dot('a.vec', 'b.vec')} / (a.norm * b.norm), 4)"
+            " AS cosine",
         )
+        .orderBy(F.desc("cosine"), "id_a", "id_b")
+        .limit(top_n)
     )
-    return pairs.orderBy(
-        F.col("cosine").desc(), "id_a", "id_b"
-    ).limit(top_n)
 
 
 def embedding_cosine_pairs_lsh(
@@ -367,19 +297,9 @@ def embedding_cosine_pairs_lsh(
     registered only as the exact small-scale baseline). Same
     deterministic hyperplanes as similarity.lsh_topk, so the DuckDB
     oracle embeds them as full-precision literals."""
-    from pyspark.sql import Window
+    from .similarity import _dot, bucketed_vectors
 
-    from .similarity import _dot, _norm, hyperplanes, lsh_bucket
-
-    planes = hyperplanes(dim, n_planes)
-    base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .withColumn("norm", _norm(F.col("vec")))
-        .withColumn("bucket", lsh_bucket(F.col("vec"), planes))
-    )
+    base = bucketed_vectors(df, id_col, vec_col, n_planes, dim)
     # same rationale as minhash_lsh_pairs: pair output is quadratic in
     # bucket size, so keep the bucket exchange at full width instead
     # of letting AQE coalesce it by (small) input bytes
@@ -390,30 +310,17 @@ def embedding_cosine_pairs_lsh(
         "bucket",
     )
     if max_bucket_size:
-        wb = Window.partitionBy("bucket")
-        base = (
-            base.withColumn("__bn", F.count("*").over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
-    a = base.alias("a")
-    b = base.alias("b")
+        base = _cap_groups(base, "bucket", max_bucket_size)
     return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+        base.alias("a").join(
+            base.alias("b"), F.expr("a.bucket = b.bucket AND a.id < b.id")
         )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(
-                _dot(F.col("a.vec"), F.col("b.vec"))
-                / (F.col("a.norm") * F.col("b.norm")),
-                4,
-            ).alias("cosine"),
+        .selectExpr(
+            "a.id AS id_a", "b.id AS id_b",
+            f"round({_dot('a.vec', 'b.vec')} / (a.norm * b.norm), 4)"
+            " AS cosine",
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(f"cosine >= {threshold!r}D")
     )
 
 

@@ -58,7 +58,7 @@ def pack_offsets(
     """
     d = docs.select(
         F.col(id_col),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
+        F.expr(f"cast({token_count(text_col)} as bigint) AS n_tokens"),
         # md5 takes binary; cast through string so any id type
         # (BIGINT here) hashes identically to the oracle's
         # md5(CAST(id AS VARCHAR))

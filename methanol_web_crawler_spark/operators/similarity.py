@@ -9,24 +9,56 @@ buckets, partitioned by bucket key.
 Hyperplanes are pseudo-random but deterministic: plane_i[j] =
 sin(i*997 + j) — reproducible in ANSI SQL for oracle checks and
 identical across runs/cluster sizes.
+
+The expression helpers take column names (or SQL text) and return SQL
+text, so each output column costs one ``selectExpr``/``F.expr`` string
+to build: a Column-API node costs about a dozen py4j round trips on
+the driver, and the 6 x 64 hyperplane ladder of ``lsh_bucket`` as
+Columns would be ~400 ``F.lit`` nodes (PLANS.md, "Plan building on
+the driver"). Doubles enter the text as ``repr(x)D`` literals, which
+Spark parses to the same bits.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _dot(a: str, b: str) -> str:
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+            f"(acc, v) -> acc + v)")
 
 
-def _norm(v):
-    return F.sqrt(
-        F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
+def _norm(v: str) -> str:
+    return f"sqrt(aggregate({v}, 0.0D, (acc, x) -> acc + x * x))"
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, *extra: str):
+    """(id, vec, norm, *extra): vectors as array<double> with their L2
+    norm; ``extra`` are further SQL columns over ``vec``."""
+    return df.selectExpr(
+        f"{id_col} AS id", f"cast({vec_col} as array<double>) AS vec"
+    ).selectExpr("id", "vec", f"{_norm('vec')} AS norm", *extra)
+
+
+def _rerank_topk(cands: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k per query over candidate (vec, norm) x
+    (query_id, qvec, qnorm) rows: rank by rounded cosine, ties to the
+    lowest neighbor id."""
+    return cands.selectExpr(
+        "query_id", "id AS neighbor_id",
+        f"round({_dot('vec', 'qvec')} / (norm * qnorm), 4) AS cosine",
+    ).selectExpr(
+        "query_id", "row_number() OVER (PARTITION BY query_id "
+        "ORDER BY cosine DESC, neighbor_id) AS rank",
+        "neighbor_id", "cosine",
+    ).filter(f"rank <= {k}")
+
+
+def _queries(base: DataFrame, n_queries: int, *extra: str) -> DataFrame:
+    """The first ``n_queries`` ids of ``base`` as the query side."""
+    return base.filter(f"id < {n_queries}").selectExpr(
+        "id AS query_id", "vec AS qvec", "norm AS qnorm", *extra
     )
 
 
@@ -37,40 +69,17 @@ def brute_force_topk(
     """Exact cosine top-k: the first ``n_queries`` ids (deterministic)
     against the whole table. Query side is broadcast — no shuffle of
     the big side."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("norm", _norm(F.col("vec")))
-    queries = base.filter(F.col("id") < n_queries).select(
-        F.col("id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-    )
-    scored = (
-        base.join(F.broadcast(queries), F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("vec"), F.col("qvec"))
-                / (F.col("norm") * F.col("qnorm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    base = _vectors(df, id_col, vec_col)
+    return _rerank_topk(
+        base.join(F.broadcast(_queries(base, n_queries)),
+                  F.expr("id != query_id")),
+        k,
     )
 
 
 def hyperplanes(dim: int, n_planes: int = 8):
-    """Deterministic pseudo-random hyperplane matrix as a literal
-    array-of-arrays column: plane_i[j] = sin(i*997 + j)."""
+    """Deterministic pseudo-random hyperplane matrix: plane_i[j] =
+    sin(i*997 + j)."""
     import math
 
     return [
@@ -79,17 +88,34 @@ def hyperplanes(dim: int, n_planes: int = 8):
     ]
 
 
-def lsh_bucket(vec_col, planes) -> "F.Column":
+def double_array(xs) -> str:
+    """SQL text of an array<double> literal with exactly these values:
+    ``repr`` is the shortest text that round-trips a Python float, and
+    Spark parses a ``D``-suffixed literal with Java's correctly rounded
+    ``Double.parseDouble``."""
+    return f"array({', '.join(f'{x!r}D' for x in xs)})"
+
+
+def lsh_bucket(vec_col: str, planes) -> str:
     """Sign-bit bucket id of a vector against the hyperplanes —
     pure JVM expression."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        d = _dot(vec_col, F.array(*[F.lit(x) for x in plane]))
-        bucket = bucket + F.when(d > 0, F.lit(1 << i)).otherwise(0)
-    return bucket
+    return "(" + " + ".join(
+        f"CASE WHEN {_dot(vec_col, double_array(plane))} > 0 "
+        f"THEN {1 << i} ELSE 0 END"
+        for i, plane in enumerate(planes)
+    ) + ")"
 
 
-def quantize_fixed_point(vec_col, scale: float = 1000.0):
+def bucketed_vectors(df: DataFrame, id_col: str, vec_col: str,
+                     n_planes: int, dim: int) -> DataFrame:
+    """(id, vec, norm, bucket): vectors with their hyperplane-LSH
+    sign bucket."""
+    planes = hyperplanes(dim, n_planes)
+    return _vectors(df, id_col, vec_col,
+                    f"{lsh_bucket('vec', planes)} AS bucket")
+
+
+def quantize_fixed_point(vec_col: str, scale: float = 1000.0) -> str:
     """Fixed-point quantization: floor(x*scale + 0.5) as long.
 
     Each step (cast float->double, one multiply, one add, floor) is a
@@ -99,34 +125,27 @@ def quantize_fixed_point(vec_col, scale: float = 1000.0):
     with zero float-summation-order risk. Quantized (int8/int16/fixed-
     point) vectors are also the standard ANN memory layout at scale,
     so this is the representation a 100 TB deployment would store."""
-    return F.transform(
-        vec_col,
-        lambda x: F.floor(x * F.lit(scale) + F.lit(0.5)).cast("long"),
-    )
+    return (f"transform({vec_col}, "
+            f"x -> cast(floor(x * {scale!r}D + 0.5D) as bigint))")
 
 
-def _int_sqdist(qv_col, centroid):
+def _int_sqdist(qv_col: str, centroid) -> str:
     """Exact int64 squared L2 distance between a quantized vector
     column and a Python centroid literal — pure JVM fold."""
-    lit = F.array(*[F.lit(int(v)).cast("long") for v in centroid])
-    return F.aggregate(
-        F.zip_with(qv_col, lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    lit = ", ".join(f"{int(v)}L" for v in centroid)
+    return (f"aggregate(zip_with({qv_col}, array({lit}), "
+            f"(p, q) -> (p - q) * (p - q)), 0L, (acc, x) -> acc + x)")
 
 
-def _dist_structs(qv_col, centroids):
+def _dist_structs(qv_col: str, centroids) -> str:
     """Array of (squared-distance, list-id) structs, one per centroid.
     ``array_sort`` on it yields ascending distance with ties broken by
     the lowest list id — the argmin/probe-ranking convention the
     DuckDB oracle replicates with ``row_number() OVER (ORDER BY d, i)``."""
-    return F.array(*[
-        F.struct(
-            _int_sqdist(qv_col, c).alias("d"), F.lit(i).alias("i")
-        )
+    return "array(" + ", ".join(
+        f"named_struct('d', {_int_sqdist(qv_col, c)}, 'i', {i})"
         for i, c in enumerate(centroids)
-    ])
+    ) + ")"
 
 
 def train_ivf_centroids(
@@ -146,31 +165,24 @@ def train_ivf_centroids(
     while |sum| < 2^53 and the quotient is at least 1/count away from
     any integer it doesn't hit exactly — true for any realistic list
     size, and bit-identical in the DuckDB oracle."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        quantize_fixed_point(
-            F.col(vec_col).cast("array<double>")
-        ).alias("qv"),
+    base = df.selectExpr(
+        f"{id_col} AS id",
+        f"{quantize_fixed_point(f'cast({vec_col} as array<double>)')}"
+        " AS qv",
     )
     cents = [
         list(r["qv"])
-        for r in base.filter(F.col("id") < k_lists)
-        .orderBy("id")
-        .collect()
+        for r in base.filter(f"id < {k_lists}").orderBy("id").collect()
     ]
     for _ in range(iters):
-        assigned = base.withColumn(
-            "lst", F.array_sort(_dist_structs(F.col("qv"), cents))[0]["i"]
-        )
         rows = (
-            assigned.select("lst", F.posexplode("qv").alias("j", "v"))
-            .groupBy("lst", "j")
-            .agg(
-                F.floor(
-                    F.sum("v").cast("double")
-                    / F.count(F.lit(1)).cast("double")
-                ).cast("long").alias("m")
+            base.selectExpr(
+                f"array_sort({_dist_structs('qv', cents)})[0].i AS lst",
+                "posexplode(qv) AS (j, v)",
             )
+            .groupBy("lst", "j")
+            .agg(F.expr("cast(floor(cast(sum(v) as double) / "
+                        "cast(count(1) as double)) as bigint) AS m"))
             .collect()
         )
         by_list: dict = {}
@@ -202,57 +214,17 @@ def ivf_topk(
     data-oblivious hyperplanes, the lists adapt to the data's cluster
     structure (FAISS IndexIVFFlat semantics)."""
     cents = train_ivf_centroids(df, id_col, vec_col, k_lists, iters)
-    base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .withColumn("norm", _norm(F.col("vec")))
-        .withColumn("qv", quantize_fixed_point(F.col("vec")))
+    ranked = f"array_sort({_dist_structs(quantize_fixed_point('vec'), cents)})"
+    base = _vectors(df, id_col, vec_col, f"{ranked} AS ranked")
+    listed = base.selectExpr("id", "vec", "norm", "ranked[0].i AS lst")
+    queries = _queries(
+        base, n_queries,
+        f"explode(slice(transform(ranked, s -> s.i), 1, {nprobe})) AS plst",
     )
-    darr = _dist_structs(F.col("qv"), cents)
-    listed = base.withColumn(
-        "lst", F.array_sort(darr)[0]["i"]
-    ).select("id", "vec", "norm", "lst")
-    queries = (
-        base.filter(F.col("id") < n_queries)
-        .withColumn(
-            "probed",
-            F.slice(
-                F.transform(F.array_sort(darr), lambda s: s["i"]),
-                1, nprobe,
-            ),
-        )
-        .select(
-            F.col("id").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("norm").alias("qnorm"),
-            F.explode("probed").alias("plst"),
-        )
-    )
-    scored = (
-        listed.join(
-            F.broadcast(queries),
-            (F.col("lst") == F.col("plst"))
-            & (F.col("id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("vec"), F.col("qvec"))
-                / (F.col("norm") * F.col("qnorm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return _rerank_topk(
+        listed.join(F.broadcast(queries),
+                    F.expr("lst = plst AND id != query_id")),
+        k,
     )
 
 
@@ -265,42 +237,10 @@ def lsh_topk(
     approximate by construction — the scale path for 10^10-row
     embedding tables (bucket-partitioned shuffle instead of a cross
     product)."""
-    planes = hyperplanes(dim, n_planes)
-    base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .withColumn("norm", _norm(F.col("vec")))
-        .withColumn("bucket", lsh_bucket(F.col("vec"), planes))
-    )
-    queries = base.filter(F.col("id") < n_queries).select(
-        F.col("id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = (
-        base.join(
-            F.broadcast(queries),
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("vec"), F.col("qvec"))
-                / (F.col("norm") * F.col("qnorm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    base = bucketed_vectors(df, id_col, vec_col, n_planes, dim)
+    queries = _queries(base, n_queries, "bucket AS qbucket")
+    return _rerank_topk(
+        base.join(F.broadcast(queries),
+                  F.expr("bucket = qbucket AND id != query_id")),
+        k,
     )

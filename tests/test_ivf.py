@@ -55,11 +55,10 @@ class TestIvfTopk:
         """Lloyd's iterations must not increase the total squared
         distance to the assigned centroid (monotone by construction;
         integer-floored means can only add a bounded rounding term)."""
-        base = emb.select(
-            F.col("vec_id").alias("id"),
-            quantize_fixed_point(
-                F.col("embedding").cast("array<double>")
-            ).alias("qv"),
+        base = emb.selectExpr(
+            "vec_id AS id",
+            quantize_fixed_point("cast(embedding as array<double>)")
+            + " AS qv",
         )
         init = [
             list(r["qv"])
@@ -71,10 +70,8 @@ class TestIvfTopk:
         assert trained != init
 
         def err(cents):
-            return base.select(
-                F.array_sort(_dist_structs(F.col("qv"), cents))[0][
-                    "d"
-                ].alias("d")
+            return base.selectExpr(
+                f"array_sort({_dist_structs('qv', cents)})[0].d AS d"
             ).agg(F.sum("d")).collect()[0][0]
 
         assert err(trained) < err(init)
