@@ -185,37 +185,28 @@ def q1_wave_selection(spark, sf_dir):
     """,
 )
 def q6_adoption_wave(spark, sf_dir):
-    """Q6 pending-host adoption through the REAL engine path: an
-    exhausted frontier (split_wave returns n=0) hands the PARKED
-    external rows to adopt_parked (plans/crawl.py) — they re-enter as
-    a new wave at depth 0 with the peek flag cleared, exactly what the
-    round loop does (ue_push/pop_pending, urlengine.c:567,624). The
-    parked set is synthesized from orders (every 5th order, parked at
-    assorted depths/peek states that adoption must reset)."""
-    from .plans.crawl import adopt_parked, split_wave
+    """Q6 pending-host adoption through the REAL engine path: parked
+    external rows wait in the frontier with depth NULL, and when no
+    row with a depth is left split_wave (plans/crawl.py) returns them
+    through adopt_parked as a new wave at depth 0 with the peek flag
+    cleared, exactly what the round loop does (ue_push/pop_pending,
+    urlengine.c:567,624). The parked set is synthesized from orders
+    (every 5th order, parked at assorted peek states that adoption
+    must reset)."""
+    from .plans.crawl import split_wave
 
     o = _t(spark, sf_dir, "orders")
-    exhausted = o.select(
-        F.col("o_orderkey"),
-        (F.col("o_orderkey") % 4).cast("int").alias("depth"),
-        F.lit(False).alias("peek"),
-        F.concat(F.lit("h"), F.col("o_custkey").cast("string")).alias(
-            "host"
-        ),
-    ).limit(0)
-    n, d, n_wave, elig, rest = split_wave(exhausted)
-    assert n == 0  # the adoption precondition the loop checks
     parked = o.filter(F.col("o_orderkey") % 5 == 0).select(
         F.col("o_orderkey"),
-        ((F.col("o_orderkey") % 3) + 1).cast("int").alias("depth"),
+        F.lit(None).cast("int").alias("depth"),
         (F.col("o_orderkey") % 2 == 0).alias("peek"),
         F.concat(F.lit("h"), F.col("o_custkey").cast("string")).alias(
             "host"
         ),
     )
-    return adopt_parked(parked).select(
-        "o_orderkey", "depth", "peek", "host"
-    )
+    n, d, n_wave, elig, rest = split_wave(parked)
+    assert (d, n_wave) == (0, n)  # only parked rows: the adoption wave
+    return elig.select("o_orderkey", "depth", "peek", "host")
 
 
 @_register(

@@ -112,6 +112,9 @@ def load_cfg(args):
 
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
+    if args.resume and not args.state_dir:
+        print("--resume needs --state-dir", file=sys.stderr)
+        return 2
     from pyspark.sql import SparkSession
 
     b = SparkSession.builder.appName("methanol-spark-crawl")

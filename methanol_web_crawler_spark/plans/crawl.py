@@ -7,8 +7,12 @@ mapping of the reference's worker loop, worker.c:214-407):
      --robots/jail gates--> --join docs ("fetch")--> fetched
      --mapInPandas parse+canonicalize+classify--> candidates
      --in-batch dedup window--> --anti-join seen--> admitted
-     --route--> targets | parked(external) | frontier(depth+1)
+     --route--> targets | frontier(depth+1, or NULL: parked external)
   appends: frontier', seen+delta, targets, crawl_log, metrics, hosts
+
+Parked external hosts wait in the frontier with depth NULL until no
+row with a depth is left; that round adopts them at depth 0
+(split_wave, adopt_parked).
 
 Scale posture (the parts that matter at a 10^10-URL frontier):
 - admission/classification runs pre-join, so the docs join input is
@@ -223,6 +227,19 @@ def robots_gate_expr() -> "F.Column":
     )
 
 
+def adopt_parked(parked: DataFrame) -> DataFrame:
+    """Q6 pending-host adoption: when no frontier row with a depth is
+    left, the parked EXTERNAL rows (depth NULL) re-enter as a fresh
+    wave at depth 0 with the peek flag cleared (the reference's
+    pending-host hand-off: ue_push_pending/ue_pop_pending,
+    urlengine.c:567,624, popped by an idle worker at worker.c:257,375
+    — a host parked by an EXTERNAL crawler is adopted as a new crawl
+    root, not resumed at its link depth)."""
+    return parked.withColumn("depth", F.lit(0)).withColumn(
+        "peek", F.lit(False)
+    )
+
+
 def split_wave(
     pending: DataFrame,
     depth_counts: Optional[Dict[int, int]] = None,
@@ -234,8 +251,13 @@ def split_wave(
     rows}; the seed frontier is all depth 0) and no job runs. Returns
     (n_pending, depth, n_wave, elig, rest) — n_pending counts the
     whole frontier (loop-termination signal), n_wave counts only the
-    min-depth slice that actually feeds this round (the auto resolver
-    gate reads it; the total would overcount multi-depth backlogs)."""
+    slice that actually feeds this round (the auto resolver gate reads
+    it; the total would overcount multi-depth backlogs).
+
+    Parked external hosts are frontier rows with depth NULL: they wait
+    in ``rest`` until no row with a depth is left, then they are the
+    wave, adopted at depth 0 (``adopt_parked``) in the round that
+    fetches them."""
     if depth_counts is None:
         rows = pending.groupBy("depth").agg(
             F.count("*").alias("n")
@@ -244,13 +266,20 @@ def split_wave(
     n_pending = sum(depth_counts.values())
     if not n_pending:
         return 0, -1, 0, pending.limit(0), pending.limit(0)
-    d = min(depth for depth, n in depth_counts.items() if n)
+    depths = [k for k, n in depth_counts.items() if n and k is not None]
+    if not depths:
+        return (
+            n_pending, 0, n_pending, adopt_parked(pending),
+            pending.limit(0),
+        )
+    d = min(depths)
     return (
         n_pending,
         d,
         depth_counts[d],
         pending.filter(F.col("depth") == d),
-        pending.filter(F.col("depth") != d),
+        # eqNullSafe: a plain != would drop the parked (NULL) rows
+        pending.filter(~F.col("depth").eqNullSafe(d)),
     )
 
 
@@ -305,19 +334,6 @@ def build_candidates(
             py_docs.mapInPandas(resolver, CANDIDATE_SCHEMA)
         )
     return parse_input.mapInPandas(resolver, CANDIDATE_SCHEMA)
-
-
-def adopt_parked(parked: DataFrame) -> DataFrame:
-    """Q6 pending-host adoption: when the frontier is exhausted,
-    parked EXTERNAL rows re-enter as a fresh wave at depth 0 with the
-    peek flag cleared (the reference's pending-host hand-off:
-    ue_push_pending/ue_pop_pending, urlengine.c:567,624, popped by an
-    idle worker at worker.c:257,375 — a host parked by an EXTERNAL
-    crawler is adopted as a new crawl root, not resumed at its link
-    depth)."""
-    return parked.withColumn("depth", F.lit(0)).withColumn(
-        "peek", F.lit(False)
-    )
 
 
 @dataclass
@@ -409,11 +425,6 @@ class SparkCrawler:
             for b in (c.dynamic_url, c.extless_url, c.dir_url,
                       c.unknown_url)
         )
-        # static plan pruning: route == "external" is only reachable
-        # when some crawler is EXTERNAL (route_of, admission.py) — for
-        # everyone else the per-round parked bookkeeping (persist +
-        # cadenced checkpoint) is dead weight and is dropped outright
-        self.any_external = any(c.external for c in config.crawlers)
         # per-row depth budget: peek rows use their crawler's
         # peek_limit, regular rows its depth_limit (0 = unlimited);
         # over-limit rows stay in the seen set but never fetch
@@ -666,11 +677,13 @@ class SparkCrawler:
         """Continue a crawl exactly from the latest snapshots (north
         rule: resumable from any checkpoint with per-file lineage —
         see SnapshotTable manifests)."""
-        assert self.store is not None, "resume requires state_dir"
+        if self.store is None:
+            raise ValueError("resume requires state_dir")
         spark = self.spark
         ft = self.store.table("frontier")
         r0 = ft.latest_round()
-        assert r0 is not None, "no frontier snapshot to resume from"
+        if r0 is None:
+            raise ValueError("no frontier snapshot to resume from")
         # the seen size from the manifest's Parquet-footer row counts
         self._n_seen = sum(
             s["rows"] for s in self.store.table("seen").snapshots()
@@ -733,7 +746,7 @@ class SparkCrawler:
         self._append_session("running", stats, start_round)
         stages = self._round_stages()
         pending, seen = pending.persist(), seen.persist()
-        hosts, names, parked = self._initial_state(restore)
+        hosts, names = self._initial_state(restore)
         if names is not None:
             names = names.localCheckpoint()
 
@@ -744,11 +757,7 @@ class SparkCrawler:
             )
             wave_counts = None
             if n_pending == 0:
-                if parked is None or parked.isEmpty():
-                    break
-                pending.unpersist()
-                pending, parked = self._adopt_parked(parked, r), None
-                continue
+                break
             mode = self._round_mode(n_wave)
             selected, deferred = self._select(elig)
             # new hosts only enter at depth 0 (worker.c:269-287); the
@@ -783,9 +792,8 @@ class SparkCrawler:
             n_admitted, n_targets = obs_a.get["n"], obs_a.get["targets"]
             self._n_seen += n_admitted
 
-            new_pending, new_seen, parked = self._route(
-                admitted, n_admitted, n_targets, seen, parked, deferred,
-                rest, r,
+            new_pending, new_seen = self._route(
+                admitted, n_admitted, n_targets, seen, deferred, rest, r
             )
             old_pending = pending
             seen.unpersist()
@@ -822,11 +830,6 @@ class SparkCrawler:
                     else new_seen.persist()
                 )
             old_pending.unpersist()
-            if parked is not None and r % 4 == 3:
-                # truncate the parked union chain on a cadence: between
-                # truncations it is a flat union of deltas that each
-                # descend from a checkpointed ``admitted``
-                parked = parked.localCheckpoint()
 
             stats.fetched += n_fetched
             stats.admitted += n_admitted
@@ -843,7 +846,7 @@ class SparkCrawler:
                     row["bloom_definitely_new"] = obs_bloom[0].get["n"]
                     row["bloom_maybe"] = obs_bloom[1].get["n"]
                 self._record_round(stats, row)
-            self._snapshot_state(r, d, hosts, parked, names)
+            self._snapshot_state(r, d, hosts, names)
             # fetched is localCheckpointed — its blocks free via the
             # ContextCleaner when the reference drops next round
             if self.budget:
@@ -875,22 +878,22 @@ class SparkCrawler:
         )
 
     def _initial_state(self, restore: bool):
-        """The full-state tables entering the loop, (hosts, names,
-        parked): the latest snapshots when ``restore`` (resume), else
-        empty. hosts is None unless robots or jail is on, names unless
-        some filetype binds writefile (they keep exact dedup numbering
-        on resume), parked unless the latest parked snapshot has rows.
-        The hosts size is the manifest's Parquet-footer row count."""
+        """The full-state tables entering the loop, (hosts, names):
+        the latest snapshots when ``restore`` (resume), else empty.
+        hosts is None unless robots or jail is on, names unless some
+        filetype binds writefile (they keep exact dedup numbering on
+        resume). The hosts size is the manifest's Parquet-footer row
+        count. Parked external hosts need no restore: they are rows of
+        the frontier snapshot ``resume`` reads."""
 
-        def latest(table: str, schema=None):
-            """(latest snapshot, else an empty ``schema`` frame or
-            None, its row count)."""
+        def latest(table: str, schema):
+            """(latest snapshot, else an empty ``schema`` frame, its
+            row count)."""
             t = self.store.table(table) if restore else None
             snaps = t.snapshots() if t else []
             if snaps:
                 return t.read_latest(self.spark), snaps[-1]["rows"]
-            empty = self.spark.createDataFrame([], schema) if schema else None
-            return empty, 0
+            return self.spark.createDataFrame([], schema), 0
 
         hosts = names = None
         if self.robots_enabled or self.jail_crawlers:
@@ -898,19 +901,7 @@ class SparkCrawler:
             hosts = hosts.persist()
         if self.writefile_fts:
             names, _ = latest("names_state", NAMES_SCHEMA)
-        parked, n_parked = latest("parked_state")
-        return hosts, names, parked.persist() if n_parked else None
-
-    def _adopt_parked(self, parked: DataFrame, r: int) -> DataFrame:
-        """Host-adoption wave: parked rows re-enter at depth 0 as the
-        new frontier (adopt_parked) and the parked state empties."""
-        pending = adopt_parked(parked).persist()
-        if self.store:
-            self.store.table("frontier").append(pending, r)
-            self.store.table("parked_state").append(
-                [], r, schema=FRONTIER_SCHEMA
-            )
-        return pending
+        return hosts, names
 
     def _round_mode(self, n_wave: int) -> str:
         """Effective resolver mode of a round: "auto" gates the JVM
@@ -1299,19 +1290,19 @@ class SparkCrawler:
         n_admitted: int,
         n_targets: int,
         seen: DataFrame,
-        parked: Optional[DataFrame],
         deferred: DataFrame,
         rest: DataFrame,
         r: int,
-    ) -> Tuple[DataFrame, DataFrame, Optional[DataFrame]]:
+    ) -> Tuple[DataFrame, DataFrame]:
         """Route the materialized ``admitted`` delta of ``n_admitted``
         rows, ``n_targets`` of them targets: the seen delta (and bloom
-        update), targets, the next frontier (depth-budgeted) and parked
-        external hosts. Store mode snapshots the seen delta and targets
-        when they are non-empty, and the next frontier in every round —
-        reading that back is the resume point (``resume`` rebuilds the
-        bloom from the seen set). Returns (next frontier, next seen,
-        parked)."""
+        update), targets, and the next frontier — depth-budgeted
+        frontier rows plus the external ones, parked with depth NULL
+        until ``split_wave`` adopts them. Store mode snapshots the seen
+        delta and targets when they are non-empty, and the next
+        frontier in every round — reading that back is the resume
+        point (``resume`` rebuilds the bloom from the seen set).
+        Returns (next frontier, next seen)."""
         seen_delta = _seen_rows(admitted, r)
         if n_admitted:
             if self.store:
@@ -1326,24 +1317,19 @@ class SparkCrawler:
                 r,
             )
 
+        external = F.col("route") == "external"
         frontier_add = admitted.filter(
-            (F.col("route") == "frontier") & self.depth_ok
+            ((F.col("route") == "frontier") & self.depth_ok) | external
+        ).withColumn(
+            "depth", F.when(~external, F.col("depth"))
         ).select(*FRONTIER_COLS)
-        if self.any_external:
-            external_add = admitted.filter(
-                F.col("route") == "external"
-            ).select(*FRONTIER_COLS)
-            parked = (
-                external_add if parked is None
-                else parked.unionByName(external_add)
-            ).persist()
 
         new_pending = deferred.select(*FRONTIER_COLS).unionByName(
             rest.select(*FRONTIER_COLS)
         ).unionByName(frontier_add)
         if self.store:
             self.store.table("frontier").append(new_pending, r + 1)
-        return new_pending, seen.unionByName(seen_delta), parked
+        return new_pending, seen.unionByName(seen_delta)
 
     def _record_round(self, stats: CrawlStats, row: dict) -> None:
         """Per-round counts to CrawlStats.per_round and, in store mode,
@@ -1361,23 +1347,18 @@ class SparkCrawler:
         r: int,
         d: int,
         hosts: Optional[DataFrame],
-        parked: Optional[DataFrame],
         names: Optional[DataFrame],
     ) -> None:
         """Full-state snapshots for exact resume (store mode), written
         only in rounds that change them: hosts at depth 0 (its one
-        update point), names every writefile round, parked while an
-        EXTERNAL crawler keeps it (``_adopt_parked`` records its
-        emptying). ``_initial_state`` reads each one's latest
-        snapshot."""
+        update point), names every writefile round. ``_initial_state``
+        reads each one's latest snapshot."""
         if not self.store:
             return
         if d == 0 and hosts is not None:
             self.store.table("hosts_state").append(hosts, r + 1)
         if names is not None:
             self.store.table("names_state").append(names, r + 1)
-        if parked is not None:
-            self.store.table("parked_state").append(parked, r + 1)
 
     # -- session lifecycle (mn-slaved analog) ---------------------------
 

@@ -177,8 +177,8 @@ class SnapshotTable:
 
     def read_latest(self, spark: SparkSession) -> Optional[DataFrame]:
         """The most recently appended snapshot only — the read shape
-        of full-state tables (hosts / names / parked), where each
-        append supersedes the previous one."""
+        of full-state tables (hosts / names), where each append
+        supersedes the previous one."""
         return self._read(spark, self.snapshots()[-1:])
 
     def read_bucketed(self, spark: SparkSession,

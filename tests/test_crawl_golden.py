@@ -7,6 +7,8 @@ The verified artifacts per the ordering contract (SURVEY.md §7):
 (d) span-sequence invariance for every fetched document (input_hint).
 """
 
+import os
+
 import pytest
 
 from methanol_web_crawler_spark.config import default_config, media_config
@@ -21,6 +23,7 @@ from methanol_web_crawler_spark.sources.synthweb import (
     SynthWeb,
     generate_web,
 )
+from methanol_web_crawler_spark.sources.tables import SnapshotTable
 
 
 def run_both(spark, web, cfg, crawler, budget, state_dir=None, **kw):
@@ -186,6 +189,30 @@ class TestGoldenExternal:
     def test_external_adoption(self, spark, tmp_path):
         self._crawl(spark, tmp_path)
 
+    def test_external_adoption_without_store(self, spark, monkeypatch):
+        """The parked hosts' adoption with no snapshot store: per-round
+        counts and the seen set equal the oracle's, and split_wave
+        opens every round once, adoption rounds included."""
+        from methanol_web_crawler_spark.plans import crawl
+
+        split_wave, calls = crawl.split_wave, []
+        monkeypatch.setattr(
+            crawl, "split_wave",
+            lambda *a: calls.append(1) or split_wave(*a),
+        )
+        web, cfg, kw = _external_crawl()
+        oracle = OracleCrawler(web.doc_map, cfg, **kw).run(web.seeds)
+        engine = SparkCrawler(spark, web.to_spark(spark), cfg, **kw)
+        stats = engine.run(web.seeds)
+        cols = ("round", "depth", "fetched", "admitted", "targets")
+        assert len(stats.per_round) == 14
+        # one call per round, plus the one that finds the frontier empty
+        assert len(calls) == stats.rounds + 1
+        assert [tuple(m[c] for c in cols) for m in stats.per_round] == [
+            tuple(getattr(m, c) for c in cols) for m in oracle.metrics
+        ]
+        assert seen_of(engine) == oracle.seen
+
     def test_bloom_crawl_writes_no_empty_deltas(self, spark, tmp_path):
         """Rounds that route no target or admit no key append no
         targets / seen snapshot."""
@@ -323,6 +350,79 @@ class TestResume:
 
         assert seen_of(engine_b) == seen_of(engine_full)
         assert rounds_of(engine_b, spark) == rounds_of(engine_full, spark)
+
+
+class _Crash(Exception):
+    pass
+
+
+class TestCrashResume:
+    """A crash right after round ``k``'s frontier append (the next
+    store append raises), then a fresh engine resumes the store: the
+    seen set and the per-round fetch log equal the uninterrupted run.
+    Round 9 of the external crawl is its first adoption round."""
+
+    @pytest.fixture(scope="class")
+    def uninterrupted(self, spark, tmp_path_factory):
+        web, cfg, kw = _external_crawl()
+        engine = SparkCrawler(
+            spark, web.to_spark(spark), cfg,
+            state_dir=str(tmp_path_factory.mktemp("full")), **kw,
+        )
+        engine.run(web.seeds)
+        return seen_of(engine), rounds_of(engine, spark)
+
+    @pytest.mark.parametrize("k", [0, 9])
+    def test_resume_after_crash(
+        self, spark, tmp_path, monkeypatch, uninterrupted, k
+    ):
+        web, cfg, kw = _external_crawl()
+        append = SnapshotTable.append
+        armed = []
+
+        def crashing_append(table, data, round_no, **more):
+            if armed:
+                raise _Crash
+            entry = append(table, data, round_no, **more)
+            if (os.path.basename(table.dir), round_no) == ("frontier",
+                                                           k + 1):
+                armed.append(True)
+            return entry
+
+        def engine():
+            return SparkCrawler(
+                spark, web.to_spark(spark), cfg,
+                state_dir=str(tmp_path), **kw,
+            )
+
+        monkeypatch.setattr(SnapshotTable, "append", crashing_append)
+        with pytest.raises(_Crash):
+            engine().run(web.seeds)
+        monkeypatch.undo()
+        resumed = engine()
+        resumed.resume()
+        assert (seen_of(resumed), rounds_of(resumed, spark)) == uninterrupted
+
+
+class TestResumeInput:
+    def _engine(self, spark, **kw):
+        web = generate_web(n_docs=5, n_hosts=1, seed=1)
+        return SparkCrawler(spark, web.to_spark(spark), default_config(),
+                            **kw)
+
+    def test_no_state_dir(self, spark):
+        with pytest.raises(ValueError, match="resume requires state_dir"):
+            self._engine(spark).resume()
+
+    def test_no_frontier_snapshot(self, spark, tmp_path):
+        with pytest.raises(ValueError, match="no frontier snapshot"):
+            self._engine(spark, state_dir=str(tmp_path)).resume()
+
+    def test_job_resume_needs_state_dir(self, capsys):
+        from methanol_web_crawler_spark.jobs.crawl import main
+
+        assert main(["--resume", "--synth-docs", "5"]) == 2
+        assert "--state-dir" in capsys.readouterr().err
 
 
 @pytest.mark.parametrize(
